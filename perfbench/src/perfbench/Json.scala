@@ -1,0 +1,33 @@
+package perfbench
+
+/** Minimal JSON writer for the result file (maps, sequences, numbers,
+  * strings, booleans).
+  */
+object Json {
+  def apply(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => apply(x)
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case f: Float => apply(f.toDouble)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: collection.Map[_, _] =>
+      m.map { case (k, x) => quote(k.toString) + ":" + apply(x) }.mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(apply).mkString("[", ",", "]")
+    case other => quote(other.toString)
+  }
+
+  def quote(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b.append("\\\"")
+      case '\\' => b.append("\\\\")
+      case '\n' => b.append("\\n")
+      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
+      case c => b.append(c)
+    }
+    b.append('"').result()
+  }
+}
