@@ -3,7 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 
-/** Loader for the harness testdata star schema (TESTDATA.md). */
+import graft.sources.SchemaCache
+
+/** Loader for the harness testdata star schema (TESTDATA.md). Schemas of
+  * single-file tables come from [[SchemaCache]]; data is read every call.
+  */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
@@ -11,7 +15,7 @@ object Tables {
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") events(spark, sfDir)
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    else SchemaCache.read(spark, "parquet", s"$sfDir/$name.parquet")
 
   /** Scale-adaptive scan fan-out (round 11; guide §2.2/§6, generalizing
     * the round-9 q_quantile_sketch checkpoint-size pattern): a SMALL
@@ -158,7 +162,7 @@ object Tables {
   private def events(spark: SparkSession, sfDir: String): DataFrame = {
     if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = SchemaCache.read(spark, "parquet", s"$sfDir/events.parquet")
     // Rebuild only when the file really is TIMESTAMP(NANOS) (surfacing as
     // long under the legacy conf); an events file written with a standard
     // timestamp column — e.g. a re-export of our own results — loads as-is.

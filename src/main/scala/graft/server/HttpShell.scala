@@ -26,7 +26,8 @@ import graft.sources.DataLake
   *
   * JDK-built-in httpserver: zero extra dependencies (offline build).
   */
-final class HttpShell(spark: SparkSession, baseDir: String, port: Int = 3000) {
+final class HttpShell(spark: SparkSession, baseDir: String, port: Int = 3000)
+    extends org.apache.spark.internal.Logging {
 
   private val lake = new DataLake(spark, baseDir)
   private var server: HttpServer = _
@@ -77,13 +78,13 @@ final class HttpShell(spark: SparkSession, baseDir: String, port: Int = 3000) {
       // handler throws at FINER level. But rethrowing without touching
       // the exchange leaves a pre-header fatal with NO response at all —
       // a client with no read timeout (the JDK default) then blocks
-      // forever. So: log to stderr, make a BEST-EFFORT 500 (itself
+      // forever. So: log an error, make a BEST-EFFORT 500 (itself
       // guarded — on an exchange whose 200 header is already committed,
       // e.g. a mid-stream fatal escaping delays(), respondJson throws
       // IOException and we must not let that mask the original error),
       // then rethrow the original.
       case e: Throwable if !scala.util.control.NonFatal(e) =>
-        System.err.println(s"[http] FATAL in ${ex.getRequestURI.getRawPath}: $e")
+        logError(s"[http] FATAL in ${ex.getRequestURI.getRawPath}: $e", e)
         try respondJson(ex, 500, s"""{"error":"${esc(String.valueOf(e))}"}""")
         catch { case _: Throwable => () }
         throw e
@@ -179,7 +180,7 @@ final class HttpShell(spark: SparkSession, baseDir: String, port: Int = 3000) {
       // errors (OutOfMemoryError, ...) must still propagate — the
       // finally closes the stream first.
       case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[delays] mid-stream failure after 200: ${e.getMessage}")
+        logWarning(s"[delays] mid-stream failure after 200: ${e.getMessage}", e)
     } finally os.close()
   }
 

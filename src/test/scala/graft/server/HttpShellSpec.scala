@@ -85,6 +85,18 @@ class HttpShellSpec extends AnyFunSuite {
     assert(r.body().split("\\},\\{").length === 2)
   }
 
+  test("a rewritten dataset file is served as rewritten (stateless like the reference)") {
+    val p = Paths.get(lakeDir, "swap.csv")
+    Files.writeString(p, "a,b\n1,2\n")
+    val first = get("/data/swap/preview")
+    assert(first.statusCode() === 200)
+    assert(first.body() === """[{"a":1,"b":2}]""")
+    Files.writeString(p, "x,y,z\nu,2.5,\n")
+    val second = get("/data/swap/preview")
+    assert(second.statusCode() === 200)
+    assert(second.body() === """[{"x":"u","y":2.5,"z":null}]""")
+  }
+
   test("delays sorts all *delay* columns desc with nulls first") {
     val r = get("/data/trains/delays?sorting=Desc")
     assert(r.statusCode() === 200)

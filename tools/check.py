@@ -121,17 +121,30 @@ def decided_names(log_path):
     return done
 
 
+USAGE = ("usage: python3 tools/check.py <sfDir> <verifyOutDir> "
+         "[--timeout-s N] [--resume <prior-log>]")
+
+
+def usage(problem):
+    print(f"check.py: {problem}\n{USAGE}", file=sys.stderr)
+    sys.exit(2)
+
+
 def main():
+    if len(sys.argv) < 3 or sys.argv[1].startswith("--") or sys.argv[2].startswith("--"):
+        usage("expected <sfDir> and <verifyOutDir>")
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     timeout_s, resume_log = None, None
     rest = sys.argv[3:]
     while rest:
+        if rest[0] not in ("--timeout-s", "--resume"):
+            usage(f"unknown arg {rest[0]}")
+        if len(rest) < 2:
+            usage(f"{rest[0]} needs a value")
         if rest[0] == "--timeout-s":
             timeout_s = float(rest[1]); rest = rest[2:]
-        elif rest[0] == "--resume":
-            resume_log = rest[1]; rest = rest[2:]
         else:
-            raise SystemExit(f"unknown arg {rest[0]}")
+            resume_log = rest[1]; rest = rest[2:]
     skip = decided_names(resume_log) if resume_log else set()
     con = duckdb.connect()
     for t in TABLES:
