@@ -66,51 +66,6 @@ object Bench {
       try src.getLines().next().split(" ")(0).toDouble finally src.close()
     } catch { case _: Exception => -1.0 }
 
-  /** Cumulative executor task metrics, fed by the listener bus. Wall
-    * time alone cannot separate "the plan does more work" from "the
-    * machine was contended" — executorCpuTime ∝ actual work, and
-    * runTime−cpuTime exposes scheduling/IO wait. Snapshots are taken
-    * around each query run (after a listener-bus flush, see
-    * CoreBridge.flushListenerBus) so the delta is per-query exact.
-    */
-  /** Per-query task-metric snapshot: cpu/run seconds plus the memory
-    * evidence (spill + shuffle bytes). Spill says whether a plan
-    * SURVIVES memory pressure by degrading (spill > 0, completes)
-    * instead of dying (OOM) — the property a 100 TB run actually needs;
-    * shuffle-write bytes is the per-query shuffle footprint the
-    * "minimize shuffles" claims can cite as a number.
-    */
-  private final case class MetricSnap(
-      cpuS: Double, runS: Double,
-      spillMem: Long, spillDisk: Long, shufWrite: Long) {
-    def -(o: MetricSnap): MetricSnap = MetricSnap(
-      cpuS - o.cpuS, runS - o.runS, spillMem - o.spillMem,
-      spillDisk - o.spillDisk, shufWrite - o.shufWrite)
-  }
-
-  private final class CpuListener extends org.apache.spark.scheduler.SparkListener {
-    private val cpuNs = new java.util.concurrent.atomic.AtomicLong
-    private val runMs = new java.util.concurrent.atomic.AtomicLong
-    private val spillMem = new java.util.concurrent.atomic.AtomicLong
-    private val spillDisk = new java.util.concurrent.atomic.AtomicLong
-    private val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        cpuNs.addAndGet(m.executorCpuTime)
-        runMs.addAndGet(m.executorRunTime)
-        spillMem.addAndGet(m.memoryBytesSpilled)
-        spillDisk.addAndGet(m.diskBytesSpilled)
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    /** Cumulative metrics since listener registration. */
-    def snapshot(): MetricSnap = MetricSnap(
-      cpuNs.get / 1e9, runMs.get / 1e3,
-      spillMem.get, spillDisk.get, shufWrite.get)
-  }
-
   def main(args: Array[String]): Unit = {
     val loadBefore = loadAvg1m()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -118,60 +73,11 @@ object Bench {
     // driver always calls with no args → full catalog).
     val only = args.toSet
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
-    // Brief: bench runs at local[32].
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle partitions default to the core count but can be pinned
-    // independently (SPARK_GRAFT_SHUFFLE_PARTITIONS) so partition-count
-    // sensitivity can be measured WITHOUT also changing parallelism.
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     // ONE listener instance across any session rebuild: its counters are
     // cumulative, so per-query deltas stay correct through a restart.
     val cpuListener = new CpuListener
     def buildSession(): SparkSession = {
-      val b0 = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", shufParts)
-        // Heap-aware broadcast ceiling (SparkEngine.broadcastThreshold):
-        // stock 10 MB at ≥5 GiB heap (plans identical to every prior
-        // round's bench), derated below so a memory-pressure sweep
-        // measures spill behavior instead of tripping Spark's
-        // broadcast-build guard on builds the heap can't hold.
-        .config("spark.sql.autoBroadcastJoinThreshold",
-          SparkEngine.broadcastThreshold().toString)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        // Same nondeterministic AQE stage-wait stall as Verify (see there);
-        // at local bench scale AQE only adds variance, so pin it off for
-        // stable, comparable numbers. Production sessions (SparkEngine)
-        // keep AQE on.
-        .config("spark.sql.adaptive.enabled", "false")
-        // See SparkEngine: ICU case-mapping static init can stall minutes.
-        .config("spark.sql.icu.caseMappings.enabled", "false")
-        // See SparkEngine: compressed DISK_ONLY checkpoints are 7.4×
-        // smaller AND faster to re-read (graph edge frames).
-        .config("spark.rdd.compress", "true")
-        // See SparkEngine: headroom for broadcasts whose 1-row child is
-        // the result of a real computation.
-        .config("spark.sql.broadcastTimeout", "1800")
-        // See SparkEngine: 30-min default periodic GC lets finished
-        // stages' shuffle files pile up for a whole big-decade query.
-        .config("spark.cleaner.periodicGC.interval", "2min")
-        // See SparkEngine: default-128 ObjectHashAggregate fallback sorts
-        // the whole stream under any real per-group top-k key domain.
-        // Env-overridable so memory sweeps can A/B the ceiling.
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-          sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "65536"))
-      // Generic conf pass-through (SPARK_GRAFT_CONF="k=v;k=v"), same as
-      // Verify: forced-path scale measurements (quantile-sketch ckpt
-      // bypass) run through the same bench main as every other number.
-      // Applied last — overrides of pinned keys win; malformed entries
-      // fail loudly (SparkEngine.applyConfPassThrough).
-      // Scratch on the fast local medium (SparkEngine.localDir — tmpfs
-      // on this box; SPARK_GRAFT_LOCAL_DIR overrides, REQUIRED for
-      // big-decade corpora whose live scratch outgrows RAM).
-      val s = SparkEngine.applyConfPassThrough(SparkEngine.applyLocalDir(b0))
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
+      val s = SparkEngine.session(profile = SparkEngine.Profile.Contract)
       s.sparkContext.addSparkListener(cpuListener)
       s
     }

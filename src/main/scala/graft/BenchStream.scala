@@ -97,9 +97,7 @@ object BenchStream {
     // null getParent, which the Tables base-dir lookup below needs.
     val src = Paths.get(args(0)).toAbsolutePath.normalize()
     val work = Paths.get(args(1)).toAbsolutePath.normalize()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkEngine.session(
-      master = s"local[$cpus]", shufflePartitions = cpus.toInt)
+    val spark = SparkEngine.session()
     import spark.implicits._
     val listener = new ProgressListener
     spark.streams.addListener(listener)

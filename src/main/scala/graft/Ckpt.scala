@@ -29,7 +29,7 @@ import org.apache.spark.storage.StorageLevel
   * replication is storage-only and never changes values, which the
   * executor-loss probe's fingerprint equality pins.
   */
-object Ckpt {
+object Ckpt extends org.apache.spark.internal.Logging {
   /** Whether the session CAN have more than one executor — decided from
     * the master URL, not the instantaneous executor registry. A
     * registry-based check races with executor registration (startup,
@@ -65,7 +65,7 @@ object Ckpt {
     // getExecutorInfos includes the driver, so `<= r` means fewer than
     // `r` real executors are registered right now.
     if (r > 1 && spark.sparkContext.statusTracker.getExecutorInfos.length <= r)
-      System.err.println(s"[ckpt] WARNING: replication $r requested with " +
+      logWarning(s"[ckpt] replication $r requested with " +
         "fewer live executors — blocks start single-copy until peers register")
     if (r == base.replication) base
     else StorageLevel(base.useDisk, base.useMemory, base.useOffHeap,

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Full `.explain("formatted")` dump for named catalog queries — the
   * companion to ExplainAudit's one-line triage when you need to read the
   * actual operators (WindowGroupLimit presence, pushed filters, reused
@@ -14,19 +12,10 @@ object PlanDump {
       case "--sf" :: dir :: rest => (dir, rest)
       case rest => ("/root/testdata/sf0.001", rest)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_CONF pass-through (applied last, same as Bench/Verify)
-    // so plan dumps can flip conf-hooked plan branches (fan-out,
-    // quantile-sketch checkpoint) for before/after captures.
-    val spark = SparkEngine.applyConfPassThrough(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.icu.caseMappings.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // The gate's session (Contract profile). SPARK_GRAFT_CONF lets plan
+    // dumps flip conf-hooked plan branches (fan-out, quantile-sketch
+    // checkpoint) for before/after captures.
+    val spark = SparkEngine.session(profile = SparkEngine.Profile.Contract)
     names.foreach { name =>
       println(s"\n===== $name =====")
       SparkEntry.queries(name)(spark, sfDir).explain("formatted")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query cost breakdown for optimization triage (round 11): splits a
   * catalog query's wall time into (1) DataFrame construction — includes
   * any eager localCheckpoint jobs the builder runs, (2) analysis+
@@ -12,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   * wall−run/cores residual cannot separate.
   *
   * Usage: `sbt "runMain graft.ProfileQ [--sf <dir>] q_foo [q_bar ...]"`.
-  * Same session shape as Bench (local[SPARK_GRAFT_CPUS], AQE off).
+  * Same session as Bench (the factory's Contract profile) and the same
+  * listener (CpuListener).
   */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
@@ -20,51 +19,33 @@ object ProfileQ {
       case "--sf" :: dir :: rest => (dir, rest)
       case rest => ("/root/testdata/sf0.1", rest)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.rdd.compress", "true")
-      .config("spark.sql.broadcastTimeout", "1800")
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val stages = new java.util.concurrent.atomic.AtomicLong
-    val tasks = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        tasks.addAndGet(s.stageInfo.numTasks)
-      }
-    })
+    val spark = SparkEngine.session(profile = SparkEngine.Profile.Contract)
+    val listener = new CpuListener
+    spark.sparkContext.addSparkListener(listener)
+    def snap(): MetricSnap = {
+      org.apache.spark.graftbridge.CoreBridge.flushListenerBus(spark.sparkContext)
+      listener.snapshot()
+    }
     // Warm pass absorbs first-use costs (codegen compiler, parquet
     // footers) so the breakdown reflects Bench's pass-2 steady state.
     val passes = sys.env.getOrElse("SPARK_GRAFT_PROFILE_PASSES", "2").toInt
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       (1 to passes).foreach { p =>
-        val (j0, s0, t0) = (jobs.get, stages.get, tasks.get)
+        val m0 = snap()
         val c0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val c1 = System.nanoTime()
-        val (jC, sC) = (jobs.get - j0, stages.get - s0)
+        val mC = listener.snapshot() - m0 // unflushed: keeps the flush untimed
         df.queryExecution.executedPlan // force analysis+optimization+planning
         val c2 = System.nanoTime()
         df.write.format("noop").mode("overwrite").save()
         val c3 = System.nanoTime()
-        val (jA, sA, tA) = (jobs.get - j0, stages.get - s0, tasks.get - t0)
+        val mA = snap() - m0
         println(f"[profile] $name pass$p total=${(c3 - c0) / 1e9}%.2fs " +
-          f"construct=${(c1 - c0) / 1e9}%.2fs (jobs=$jC stages=$sC) " +
+          f"construct=${(c1 - c0) / 1e9}%.2fs (jobs=${mC.jobs} stages=${mC.stages}) " +
           f"plan=${(c2 - c1) / 1e9}%.2fs exec=${(c3 - c2) / 1e9}%.2fs " +
-          f"jobs=$jA stages=$sA tasks=$tA")
+          f"jobs=${mA.jobs} stages=${mA.stages} tasks=${mA.tasks}")
         spark.sparkContext.getPersistentRDDs.valuesIterator
           .foreach(_.unpersist(blocking = false))
       }

@@ -53,15 +53,7 @@ object ScaleGen {
     val out = args(1)
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val skewPct = args.lift(3).map(_.toInt).getOrElse(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEngine.session()
     try run(spark, src, out, factor, skewPct)
     finally spark.stop()
   }

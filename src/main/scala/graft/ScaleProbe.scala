@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.Similarity
 
 /** Scale-knob probe (round 7; settled round 8): times the ANN operators
@@ -25,20 +23,7 @@ object ScaleProbe {
     val scaledCells = args(2).toInt
     val fixedBits = args(3).toInt
     val scaledBits = args(4).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      // See SparkEngine: default-128 ObjectHashAggregate fallback sorts
-      // the whole stream under any real per-group top-k key domain.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEngine.session(profile = SparkEngine.Profile.Contract)
     val e = Similarity.withNorm(Tables(spark, dir, "embeddings"))
 
     def time(label: String)(f: => Unit): Unit = {

@@ -2,14 +2,46 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for tests / CLI entry points.
+/** The one session factory: every main, the HTTP shell, the tests and
+  * perfbench build their `SparkSession` through [[session]], from one
+  * conf list ([[conf]]).
   *
-  * The driver (Verify/Bench) builds its own session; library code must
-  * therefore never depend on builder-time conf. Anything semantic
-  * (ANSI-safe casts, null ordering) is handled per-expression in the
-  * operators instead (see [[graft.operators]]).
+  * Two profiles, because two groups of callers need different values:
+  *  - [[Profile.Production]]: AQE on, [[graft.plans.GraftExtensions]]
+  *    installed — the HTTP shell, BenchStream, ExplainAudit, ScaleGen,
+  *    the tests and perfbench;
+  *  - [[Profile.Contract]]: the same list with AQE off and no
+  *    extensions — the gate mains (Bench, Verify, ProfileQ, PlanDump,
+  *    ScaleProbe), whose plans are the recorded contract.
+  *
+  * Library code must never depend on builder-time conf: anything
+  * semantic (ANSI-safe casts, null ordering) is handled per-expression
+  * in the operators instead (see [[graft.operators]]).
   */
 object SparkEngine {
+  sealed abstract class Profile(val aqe: Boolean, val extensions: Boolean)
+  object Profile {
+    case object Production extends Profile(aqe = true, extensions = true)
+    /** Gate mains: AQE's stage-materialization wait showed a
+      * nondeterministic multi-minute stall on trivial sort+write plans
+      * (~300 s), and at local gate scale runtime re-planning only adds
+      * variance. Pinned off for stable, comparable plans and numbers.
+      */
+    case object Contract extends Profile(aqe = false, extensions = false)
+  }
+
+  /** Local cores: `SPARK_GRAFT_CPUS`, else every core the JVM sees. */
+  def defaultCores(env: Map[String, String] = sys.env,
+      available: Int = Runtime.getRuntime.availableProcessors): Int =
+    env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(available)
+
+  /** Master URL: `SPARK_GRAFT_MASTER` (e.g. `local-cluster[2,16,4096]`
+    * for the multi-process gate; needs SPARK_HOME and
+    * SPARK_SCALA_VERSION so executors can launch), else `local[cores]`.
+    */
+  def defaultMaster(env: Map[String, String] = sys.env): String =
+    env.getOrElse("SPARK_GRAFT_MASTER", s"local[${defaultCores(env)}]")
+
   /** Broadcast-join threshold derated for small heaps.
     *
     * Spark's 10 MB `spark.sql.autoBroadcastJoinThreshold` is static: the
@@ -49,151 +81,160 @@ object SparkEngine {
     * next to the corpus page cache); unset picks tmpfs when writable,
     * else leaves Spark's default.
     */
-  def localDir(): Option[String] =
-    sys.env.get("SPARK_GRAFT_LOCAL_DIR").map(_.trim).filter(_.nonEmpty)
+  def localDir(env: Map[String, String] = sys.env): Option[String] =
+    env.get("SPARK_GRAFT_LOCAL_DIR").map(_.trim).filter(_.nonEmpty)
       .orElse {
         val shm = new java.io.File("/dev/shm")
         if (shm.isDirectory && shm.canWrite) Some("/dev/shm/spark-graft")
         else None
       }
 
-  /** `b` with [[localDir]] applied (no-op when None). */
-  def applyLocalDir(b: SparkSession.Builder): SparkSession.Builder =
-    localDir().fold(b)(d => b.config("spark.local.dir", d))
-
-  /** Generic conf pass-through (`SPARK_GRAFT_CONF="k=v;k=v"`) for the
-    * Verify/Bench mains, so forced-path gate runs (e.g. the
-    * quantile-sketch checkpoint bypass) go through the same entry
-    * points as every other number. Apply LAST, after every hardcoded
-    * `.config`, so an override of a pinned key (rdd.compress, AQE,
-    * the ObjectHashAggregate fallback ceiling, …) actually wins —
-    * Verify used to fold it in first and silently lose those
-    * overrides (round-10 advice). A malformed entry (no '=') fails
-    * loudly naming the token instead of a bare MatchError.
+  /** Generic conf pass-through (`SPARK_GRAFT_CONF="k=v;k=v"`), so
+    * forced-path gate runs (e.g. the quantile-sketch checkpoint bypass)
+    * and A/Bs of any pinned key go through the same entry points as
+    * every other number. [[conf]] puts these entries LAST, so an
+    * override of a pinned key (rdd.compress, AQE, the ObjectHashAggregate
+    * fallback ceiling, shuffle partitions, …) wins. A malformed entry
+    * (no '=') fails loudly naming the token instead of a bare MatchError.
     */
-  def applyConfPassThrough(b: SparkSession.Builder,
-      raw: Option[String] = sys.env.get("SPARK_GRAFT_CONF")): SparkSession.Builder =
+  def passThrough(raw: Option[String]): Seq[(String, String)] =
     raw.toSeq
       .flatMap(_.split(';')).map(_.trim).filter(_.nonEmpty)
-      .foldLeft(b) { (bb, kv) =>
+      .map { kv =>
         kv.split("=", 2) match {
-          case Array(k, v) if k.trim.nonEmpty => bb.config(k.trim, v)
+          case Array(k, v) if k.trim.nonEmpty => k.trim -> v
           case _ => throw new IllegalArgumentException(
             s"SPARK_GRAFT_CONF entry '$kv' is not k=v")
         }
       }
 
-  /** Pinned conf mirrors SURVEY.md §7 phase A: UTC, no UI, shuffle
+  /** The session conf, in the order it is applied (Builder semantics
+    * are last-write-wins): every pinned key, then the local-cluster
+    * executor classpath, then [[localDir]], then [[passThrough]].
+    * Pinned conf mirrors SURVEY.md §7 phase A: UTC, no UI, shuffle
     * partitions sized for local cores rather than the 200 default.
     */
-  def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
-    val s = applyLocalDir(SparkSession.builder()
-      .master(master)
-      .appName("graft"))
-      // Full extension stack by default: FastHashRule (md5 → Md5Fast,
-      // the per-row JCA-lookup fix) and AsofStrategy (native as-of
-      // planning). Library queries also work without them — the rule is
-      // an optimization, the strategy only plans AsofJoinNode — but a
-      // production session should have both.
-      .withExtensions(new graft.plans.GraftExtensions().apply)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      // Heap-aware broadcast ceiling — see broadcastThreshold above.
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        broadcastThreshold().toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ICU case mapping routes upper/lower through
-      // CollationAwareUTF8String, whose static init title-cases every
-      // Unicode code point; when the JIT is busy with codegen output it
-      // runs interpreted for minutes (observed 490s on a 200-row query).
-      // JVM case mapping is identical for ASCII corpora and never stalls.
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      // Compress SERIALIZED storage blocks (DISK_ONLY / *_SER levels —
-      // deserialized in-memory blocks are untouched). The graph queries
-      // checkpoint DATA-sized edge frames at DISK_ONLY (see q_pagerank);
-      // measured at the ×100 corpus (GraphCkptSizeProbe, round 10): the
-      // edge checkpoint shrinks 12.0 GB → 1.63 GB (7.4×) and the query
-      // runs 29% FASTER (322.8 → 230.0 s) because four edge-frame reads
-      // of 1.6 GB beat four of 12 GB — LZ4 on long-triple rows is
-      // cheaper than the disk IO it saves. Storage-only: values and
-      // plans are unchanged (full catalog re-oracled after the flip).
-      .config("spark.rdd.compress", "true")
-      // Broadcast children are built on a driver thread with a 300 s
-      // default deadline — tuned for "small dim table", not "small
-      // RESULT of a big computation". Queries broadcast 1-row aggregates
-      // whose subplans scan real data (q_modularity's edge count hit the
-      // 300 s wall at the ×1000 corpus); the queries now keep such
-      // children cheap by construction, and this headroom keeps the next
-      // decade's marginal case a slow plan instead of a dead one.
-      .config("spark.sql.broadcastTimeout", "1800")
-      // ContextCleaner frees shuffle files only after the driver GC
-      // collects their handles; its fallback periodic GC defaults to
-      // 30 MINUTES — longer than most queries, so a 24 GiB driver heap
-      // under no allocation pressure lets every finished stage's
-      // shuffle files pile up on disk for the query's whole lifetime
-      // (measured round 10: q_pagerank ×1000 accumulated its dedup
-      // exchange + three 20 GB iteration shuffles and exhausted a
-      // 58 GB scratch disk). 2 minutes bounds the garbage window;
-      // paired with per-iteration lineage truncation at the call sites
-      // (q_pagerank), peak scratch is one live iteration, not the sum.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      // TIMESTAMP(NANOS) parquet columns (the `events` table) surface as
-      // raw long instead of erroring. Pinned at build time so the flag
-      // never flips mid-session; Tables.events keeps a lazy set as a
-      // fallback for externally-built sessions (driver Verify/Bench).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Production state store for streaming state (sessionizeTws,
-      // heavy hitters, stream-stream joins): RocksDB keeps state off
-      // the JVM heap and bounded by compaction; changelog checkpointing
-      // makes the per-batch commit an append instead of a full SST
-      // upload. Measured (BENCH_STREAM.md ×10): 15k-session state at
-      // 1.4–2.2 MB checkpoints, exactly-once across restart.
-      // Checkpoint-replica durability on multi-executor clusters (see
-      // graft.Ckpt): replication targets come from a peer list cached
-      // 60s, so blocks written just after an executor death replicate
-      // into the corpse — the default ONE replication attempt then gives
-      // up before the on-failure peer refresh is consulted, leaving the
-      // block silently single-copy (measured: ExecutorLossProbe,
-      // "replicated to only 0 peer(s)" in executor logs). A failure
-      // budget of 5 lets the refreshed list win; proactive re-replication
-      // restores lost replicas after every executor removal. Both no-ops
-      // in single-executor (local) sessions.
-      .config("spark.storage.maxReplicationFailures", "5")
-      .config("spark.storage.replication.proactive", "true")
-      // The failure budget can't help when the CACHED peer list is
-      // EMPTY (fetched in the gap between a death and its replacement's
-      // registration): zero peers → zero attempts → zero failures → no
-      // forced refresh, and every replicated write for the next TTL is
-      // silently single-copy ("Expecting 1 replicas with only 0
-      // peer/s", measured). Default TTL is 60s; 5s bounds the
-      // post-churn blind window at one RPC per writing executor per 5s.
-      .config("spark.storage.cachedPeersTtl", "5000")
-      // TypedImperativeAggregate partials (graft_topk, graft_kmv,
-      // graft_heavy_hitters) run in ObjectHashAggregateExec, which falls
-      // back to SORT-BASED aggregation after `fallbackThreshold` DISTINCT
-      // KEYS per partition — default 128. Any per-group top-k over a
-      // real key domain blows past 128 keys, and the fallback then sorts
-      // the ENTIRE input stream per partition: at the ×1000 corpus that
-      // silently re-introduced the exact candidate-stream sort
-      // BoundedTopK exists to avoid (q_embed_ivf: 239 GB spill, the
-      // N×nCells assignment stream × ~85 B/row — measured round 9; with
-      // this ceiling the same query spills ~0). 65536 bounds the partial
-      // map at keys × bufferSize per task: ~33 MB for top-k's ≤16k+ε-byte
-      // heaps — safe at any heap this engine targets. Callers grouping a
-      // WIDE sketch (graft_kmv: ~33 KB/buffer) by a high-cardinality key
-      // should lower it; every catalog KMV/MG site groups by ≤10 keys.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      // Catalog-table sinks (Sinks.writeBucketed) land under a stable
-      // scratch root instead of ./spark-warehouse in whatever cwd the
-      // JVM happened to start in. Deployments override per cluster.
-      .config("spark.sql.warehouse.dir",
-        sys.props("java.io.tmpdir") + "/graft-warehouse")
+  def conf(profile: Profile, master: String, shufflePartitions: Int,
+      env: Map[String, String] = sys.env): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+    // Heap-aware broadcast ceiling — see broadcastThreshold above.
+    "spark.sql.autoBroadcastJoinThreshold" -> broadcastThreshold().toString,
+    "spark.sql.adaptive.enabled" -> profile.aqe.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    // ICU case mapping routes upper/lower through
+    // CollationAwareUTF8String, whose static init title-cases every
+    // Unicode code point; when the JIT is busy with codegen output it
+    // runs interpreted for minutes (observed 490s on a 200-row query).
+    // JVM case mapping is identical for ASCII corpora and never stalls.
+    "spark.sql.icu.caseMappings.enabled" -> "false",
+    // Compress SERIALIZED storage blocks (DISK_ONLY / *_SER levels —
+    // deserialized in-memory blocks are untouched). The graph queries
+    // checkpoint DATA-sized edge frames at DISK_ONLY (see q_pagerank);
+    // measured at the ×100 corpus (GraphCkptSizeProbe, round 10): the
+    // edge checkpoint shrinks 12.0 GB → 1.63 GB (7.4×) and the query
+    // runs 29% FASTER (322.8 → 230.0 s) because four edge-frame reads
+    // of 1.6 GB beat four of 12 GB — LZ4 on long-triple rows is
+    // cheaper than the disk IO it saves. Storage-only: values and
+    // plans are unchanged (full catalog re-oracled after the flip).
+    "spark.rdd.compress" -> "true",
+    // Broadcast children are built on a driver thread with a 300 s
+    // default deadline — tuned for "small dim table", not "small
+    // RESULT of a big computation". Queries broadcast 1-row aggregates
+    // whose subplans scan real data (q_modularity's edge count hit the
+    // 300 s wall at the ×1000 corpus); the queries now keep such
+    // children cheap by construction, and this headroom keeps the next
+    // decade's marginal case a slow plan instead of a dead one.
+    "spark.sql.broadcastTimeout" -> "1800",
+    // ContextCleaner frees shuffle files only after the driver GC
+    // collects their handles; its fallback periodic GC defaults to
+    // 30 MINUTES — longer than most queries, so a 24 GiB driver heap
+    // under no allocation pressure lets every finished stage's
+    // shuffle files pile up on disk for the query's whole lifetime
+    // (measured round 10: q_pagerank ×1000 accumulated its dedup
+    // exchange + three 20 GB iteration shuffles and exhausted a
+    // 58 GB scratch disk). 2 minutes bounds the garbage window;
+    // paired with per-iteration lineage truncation at the call sites
+    // (q_pagerank), peak scratch is one live iteration, not the sum.
+    "spark.cleaner.periodicGC.interval" -> "2min",
+    // TIMESTAMP(NANOS) parquet columns (the `events` table) surface as
+    // raw long instead of erroring. Pinned at build time so the flag
+    // never flips mid-session; Tables.events keeps a lazy set as a
+    // fallback for sessions built outside this factory.
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // Checkpoint-replica durability on multi-executor clusters (see
+    // graft.Ckpt): replication targets come from a peer list cached
+    // 60s, so blocks written just after an executor death replicate
+    // into the corpse — the default ONE replication attempt then gives
+    // up before the on-failure peer refresh is consulted, leaving the
+    // block silently single-copy (measured: ExecutorLossProbe,
+    // "replicated to only 0 peer(s)" in executor logs). A failure
+    // budget of 5 lets the refreshed list win; proactive re-replication
+    // restores lost replicas after every executor removal. Both no-ops
+    // in single-executor (local) sessions.
+    "spark.storage.maxReplicationFailures" -> "5",
+    "spark.storage.replication.proactive" -> "true",
+    // The failure budget can't help when the CACHED peer list is
+    // EMPTY (fetched in the gap between a death and its replacement's
+    // registration): zero peers → zero attempts → zero failures → no
+    // forced refresh, and every replicated write for the next TTL is
+    // silently single-copy ("Expecting 1 replicas with only 0
+    // peer/s", measured). Default TTL is 60s; 5s bounds the
+    // post-churn blind window at one RPC per writing executor per 5s.
+    "spark.storage.cachedPeersTtl" -> "5000",
+    // TypedImperativeAggregate partials (graft_topk, graft_kmv,
+    // graft_heavy_hitters) run in ObjectHashAggregateExec, which falls
+    // back to SORT-BASED aggregation after `fallbackThreshold` DISTINCT
+    // KEYS per partition — default 128. Any per-group top-k over a
+    // real key domain blows past 128 keys, and the fallback then sorts
+    // the ENTIRE input stream per partition: at the ×1000 corpus that
+    // silently re-introduced the exact candidate-stream sort
+    // BoundedTopK exists to avoid (q_embed_ivf: 239 GB spill, the
+    // N×nCells assignment stream × ~85 B/row — measured round 9; with
+    // this ceiling the same query spills ~0). 65536 bounds the partial
+    // map at keys × bufferSize per task: ~33 MB for top-k's ≤16k+ε-byte
+    // heaps — safe at any heap this engine targets. Callers grouping a
+    // WIDE sketch (graft_kmv: ~33 KB/buffer) by a high-cardinality key
+    // should lower it; every catalog KMV/MG site groups by ≤10 keys.
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "65536",
+    // Production state store for streaming state (sessionizeTws,
+    // heavy hitters, stream-stream joins): RocksDB keeps state off
+    // the JVM heap and bounded by compaction; changelog checkpointing
+    // makes the per-batch commit an append instead of a full SST
+    // upload. Measured (BENCH_STREAM.md ×10): 15k-session state at
+    // 1.4–2.2 MB checkpoints, exactly-once across restart.
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+    // Catalog-table sinks (Sinks.writeBucketed) land under a stable
+    // scratch root instead of ./spark-warehouse in whatever cwd the
+    // JVM happened to start in. Deployments override per cluster.
+    "spark.sql.warehouse.dir" -> (sys.props("java.io.tmpdir") + "/graft-warehouse"),
+  ) ++
+    // Multi-process masters launch bare executor JVMs: they need this
+    // app's classes (target/classes via sbt) on their classpath.
+    (if (master.startsWith("local-cluster"))
+      Seq("spark.executor.extraClassPath" -> sys.props("java.class.path"))
+    else Nil) ++
+    localDir(env).map("spark.local.dir" -> _) ++
+    passThrough(env.get("SPARK_GRAFT_CONF"))
+
+  /** Builds (or returns the live) session for `profile`. The defaults
+    * come from the machine: [[defaultMaster]] and [[defaultCores]].
+    */
+  def session(master: String = defaultMaster(),
+      shufflePartitions: Int = defaultCores(),
+      profile: Profile = Profile.Production): SparkSession = {
+    val b = conf(profile, master, shufflePartitions)
+      .foldLeft(SparkSession.builder().master(master).appName("graft")) {
+        case (acc, (k, v)) => acc.config(k, v)
+      }
+    // Full extension stack in production: FastHashRule (md5 → Md5Fast,
+    // the per-row JCA-lookup fix) and AsofStrategy (native as-of
+    // planning). Library queries also work without them — the rule is
+    // an optimization, the strategy only plans AsofJoinNode.
+    val s = (if (profile.extensions)
+      b.withExtensions(new graft.plans.GraftExtensions().apply) else b)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,67 +8,16 @@ object Verify {
     // Optional extra args: restrict to the named queries (local iteration;
     // the driver always calls with exactly two args → full catalog).
     val only = rest.toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER overrides the whole master URL — the round-8
-    // invariance sweep runs the FULL catalog on local-cluster[2,16,…]
-    // (two real executor processes: serde, netty shuffle, and the
-    // replicated-Ckpt write path that single-JVM local[] can never
-    // exercise). Needs SPARK_HOME + SPARK_SCALA_VERSION in the env so
-    // the cluster manager can launch executors.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-    // Multi-process masters launch bare executor JVMs: they need this
-    // app's classes (target/classes via sbt) on their classpath, and the
-    // same replication hygiene the fault probes pinned (a cached-empty
-    // peer list silently writes Ckpt's replicated blocks single-copy).
-    val builder1 =
-      if (master.startsWith("local-cluster"))
-        builder0
-          .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-          .config("spark.storage.maxReplicationFailures", "5")
-          .config("spark.storage.replication.proactive", "true")
-          .config("spark.storage.cachedPeersTtl", "5000")
-      else builder0
-    val builderPinned = builder1
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Correctness dump only: AQE's stage-materialization wait showed a
-      // nondeterministic multi-minute stall on trivial sort+write plans
-      // here (~300s, smells like a missed wakeup); runtime re-planning
-      // buys nothing at dump scale, so pin it off BY DEFAULT.
-      // SPARK_GRAFT_AQE=1 flips it on for the physical-invariance sweep
-      // (round 8): production sessions (SparkEngine) run AQE on, so the
-      // catalog must hash-match under runtime re-planning (partition
-      // coalescing, skew splits) too — a result that depends on the
-      // physical layout is a 100 TB bug the fixed-layout gate can't see.
-      .config("spark.sql.adaptive.enabled",
-        (sys.env.get("SPARK_GRAFT_AQE").exists(_ == "1")).toString)
-      // See SparkEngine: ICU case-mapping static init can stall minutes.
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      // See SparkEngine: compressed DISK_ONLY checkpoints are 7.4×
-      // smaller AND faster to re-read (graph edge frames).
-      .config("spark.rdd.compress", "true")
-      // See SparkEngine: headroom for broadcasts whose 1-row child is
-      // the result of a real computation.
-      .config("spark.sql.broadcastTimeout", "1800")
-      // See SparkEngine: 30-min default periodic GC lets finished
-      // stages' shuffle files pile up for a whole big-decade query.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      // See SparkEngine: default-128 ObjectHashAggregate fallback sorts
-      // the whole stream under any real per-group top-k key domain.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-    // SPARK_GRAFT_CONF pass-through LAST so forced-path overrides of
-    // any pinned key above actually apply (same order as Bench; see
-    // SparkEngine.applyConfPassThrough). Scratch on the fast local
-    // medium (SparkEngine.localDir; SPARK_GRAFT_LOCAL_DIR overrides —
-    // REQUIRED for big-decade corpora, see the scaladoc).
-    val spark = SparkEngine.applyConfPassThrough(
-        SparkEngine.applyLocalDir(builderPinned))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Contract profile (AQE off). SPARK_GRAFT_MASTER overrides the master
+    // — the round-8 invariance sweep runs the FULL catalog on
+    // local-cluster[2,16,…] (two real executor processes: serde, netty
+    // shuffle, and the replicated-Ckpt write path that single-JVM
+    // local[] can never exercise); the factory forwards the app
+    // classpath to those executors. The physical-invariance sweep runs
+    // with SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=true": production
+    // sessions run AQE on, so the catalog must hash-match under runtime
+    // re-planning (partition coalescing, skew splits) too.
+    val spark = SparkEngine.session(profile = SparkEngine.Profile.Contract)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }

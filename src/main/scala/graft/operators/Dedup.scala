@@ -24,7 +24,7 @@ import graft.functions.HashFunctions.{md5fast => md5f}
   *  - hashes are md5 so any engine (including the DuckDB oracle) can
   *    replay them bit-for-bit.
   */
-object Dedup {
+object Dedup extends org.apache.spark.internal.Logging {
 
   /** Keep one row per distinct value of `textCol` (min of `idCol` wins),
     * with the duplicate count.
@@ -346,8 +346,7 @@ object Dedup {
         edges =
           if (n <= 5000000L) next.coalesce(1)
           else next.coalesce(math.max(1, next.getNumPartitions / 32))
-        if (sys.env.contains("GRAFT_CC_TRACE"))
-          System.err.println(s"[cc] level ${level + 1}: $n cross edges")
+        logInfo(s"[cc] level ${level + 1}: $n cross edges")
       }
       level += 1
     }

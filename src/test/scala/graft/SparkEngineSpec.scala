@@ -2,12 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the heap-aware broadcast ceiling (SparkEngine.broadcastThreshold)
-  * measured in the sf1 memory sweep (BENCH_MEM.md): at production heaps
-  * the threshold must be EXACTLY Spark's stock 10 MB so plans stay
-  * bit-identical to an unconfigured session; below the 5 GiB crossover it
-  * derates linearly so a small driver never plans a broadcast build its
-  * heap can't hold ("Not enough memory to build and broadcast").
+/** Pins the session factory. The heap-aware broadcast ceiling
+  * (SparkEngine.broadcastThreshold) was measured in the sf1 memory sweep
+  * (BENCH_MEM.md): at production heaps the threshold must be EXACTLY
+  * Spark's stock 10 MB so plans stay bit-identical to an unconfigured
+  * session; below the 5 GiB crossover it derates linearly so a small
+  * driver never plans a broadcast build its heap can't hold ("Not enough
+  * memory to build and broadcast"). The rest pins the one conf list, its
+  * two profiles, the machine-derived defaults, and that no other main
+  * hand-writes a builder.
   */
 class SparkEngineSpec extends AnyFunSuite {
   private val MiB = 1L << 20
@@ -42,34 +45,97 @@ class SparkEngineSpec extends AnyFunSuite {
   }
 
   test("SPARK_GRAFT_CONF pass-through: malformed entry fails naming the token") {
-    import org.apache.spark.sql.SparkSession
     val e = intercept[IllegalArgumentException] {
-      SparkEngine.applyConfPassThrough(SparkSession.builder(), Some("a=b;oops"))
+      SparkEngine.passThrough(Some("a=b;oops"))
     }
     assert(e.getMessage.contains("oops"), e.getMessage)
     assert(e.getMessage.contains("SPARK_GRAFT_CONF"), e.getMessage)
     // well-formed entries (incl. '=' in the value) parse fine
-    SparkEngine.applyConfPassThrough(
-      SparkSession.builder(), Some("k1=v1; k2=a=b ;"))
+    assert(SparkEngine.passThrough(Some("k1=v1; k2=a=b ;")) ===
+      Seq("k1" -> "v1", "k2" -> "a=b"))
   }
 
   test("SPARK_GRAFT_CONF pass-through wins over a previously pinned conf") {
-    // Verify/Bench apply the pass-through AFTER their hardcoded .config
-    // chain; Builder semantics are last-write-wins, so the override must
-    // land in the session conf (Verify used to fold it in FIRST and
-    // silently lose overrides of pinned keys — round-10 advice).
+    // The factory applies the pass-through AFTER every pinned key, and
+    // Builder semantics are last-write-wins, so an override of a pinned
+    // key must land in the session conf (Verify used to fold it in FIRST
+    // and silently lose overrides of pinned keys — round-10 advice).
+    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    val c = SparkEngine.conf(SparkEngine.Profile.Contract, "local[4]", 4,
+      Map("SPARK_GRAFT_CONF" -> s"$key=128"))
+    assert(c.last === key -> "128")
     val s = TestSpark.spark
     import org.apache.spark.sql.SparkSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val b = SparkSession.builder().config("spark.graft.test.pin", "pinned")
-      val s2 = SparkEngine.applyConfPassThrough(
-        b, Some("spark.graft.test.pin=overridden")).getOrCreate()
+      val s2 = (Seq("spark.graft.test.pin" -> "pinned") ++
+          SparkEngine.passThrough(Some("spark.graft.test.pin=overridden")))
+        .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
+        .getOrCreate()
       assert(s2.conf.get("spark.graft.test.pin") === "overridden")
     } finally {
       SparkSession.setActiveSession(s)
       SparkSession.setDefaultSession(s)
     }
+  }
+
+  test("the shared session carries the Production conf list") {
+    val s = TestSpark.spark
+    SparkEngine.conf(SparkEngine.Profile.Production, "local[4]", 4)
+      .toMap.foreach { case (k, v) =>
+        // Spark qualifies the warehouse path to a URI (file:/...).
+        assert(s.conf.get(k).stripPrefix("file:") === v, k)
+      }
+  }
+
+  test("Contract and Production differ only in AQE and the extensions") {
+    import SparkEngine.Profile.{Contract, Production}
+    val env = Map("SPARK_GRAFT_CONF" -> "spark.graft.test.k=v")
+    val prod = SparkEngine.conf(Production, "local[4]", 4, env)
+    val gate = SparkEngine.conf(Contract, "local[4]", 4, env)
+    assert(prod.map(_._1) === gate.map(_._1))
+    assert(prod.diff(gate) === Seq("spark.sql.adaptive.enabled" -> "true"))
+    assert(gate.diff(prod) === Seq("spark.sql.adaptive.enabled" -> "false"))
+    assert(Production.extensions && !Contract.extensions)
+  }
+
+  test("local-cluster masters get the app classpath on their executors") {
+    val key = "spark.executor.extraClassPath"
+    val cluster = SparkEngine.conf(SparkEngine.Profile.Contract,
+      "local-cluster[2,1,1024]", 4, Map.empty).toMap
+    assert(cluster.get(key) === Some(sys.props("java.class.path")))
+    assert(!SparkEngine.conf(SparkEngine.Profile.Contract, "local[4]", 4,
+      Map.empty).toMap.contains(key))
+  }
+
+  test("default cores and master come from the machine unless pinned") {
+    val cores = Runtime.getRuntime.availableProcessors
+    assert(SparkEngine.defaultCores(Map.empty) === cores)
+    assert(SparkEngine.defaultCores(Map("SPARK_GRAFT_CPUS" -> "7")) === 7)
+    assert(SparkEngine.defaultMaster(Map.empty) === s"local[$cores]")
+    assert(SparkEngine.defaultMaster(Map("SPARK_GRAFT_CPUS" -> "3")) === "local[3]")
+    assert(SparkEngine.defaultMaster(Map("SPARK_GRAFT_MASTER" -> "local[2,3]",
+      "SPARK_GRAFT_CPUS" -> "3")) === "local[2,3]")
+  }
+
+  test("only SparkEngine builds sessions or sets builder conf in src/main") {
+    // Seven hand-written builders drifted apart before the factory (one
+    // lacked the 65536 ceiling, two lacked rdd.compress); this keeps a
+    // new one from creeping back in.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val files = java.nio.file.Files.walk(root)
+    val offenders =
+      try files.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          p.getFileName.toString != "SparkEngine.scala")
+        .filter { p =>
+          val src = java.nio.file.Files.readString(p)
+          src.contains("SparkSession.builder(") || src.contains(".config(")
+        }.map(_.toString).toList
+      finally files.close()
+    assert(offenders.isEmpty, offenders)
   }
 }

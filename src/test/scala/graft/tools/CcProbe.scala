@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   *    ≤ 3: partition-local union-find → one root-root forest →
   *    single-task finish);
   *  - cross-edge count per level (the "single-task finish size" the
-  *    operator scaladoc bounds) via GRAFT_CC_TRACE=1;
+  *    operator scaladoc bounds), logged by `Dedup` at INFO — the probe
+  *    raises the `graft.operators.Dedup` logger to INFO for that;
   *  - wall time and correctness (every node must land in component 0).
   *
-  * Run: GRAFT_CC_TRACE=1 sbt "Test/runMain graft.tools.CcProbe [nEdges]"
+  * Run: sbt "Test/runMain graft.tools.CcProbe [nEdges]"
   * Results recorded in IMPLEMENTATION.md (round 8).
   */
 object CcProbe {
@@ -23,6 +24,8 @@ object CcProbe {
     val n = args.headOption.map(_.toLong).getOrElse(10000000L)
     val spark = graft.SparkEngine.session("local[32]", shufflePartitions = 32)
     spark.sparkContext.setLogLevel("WARN")
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "graft.operators.Dedup", org.apache.logging.log4j.Level.INFO)
     import spark.implicits._
 
     def time[T](tag: String)(f: => T): T = {
