@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.storage.StorageLevel
 
 /** Executor-aware `localCheckpoint` policy.
@@ -28,6 +29,12 @@ import org.apache.spark.storage.StorageLevel
   * All operator/query `localCheckpoint` sites route through here; the
   * replication is storage-only and never changes values, which the
   * executor-loss probe's fingerprint equality pins.
+  *
+  * This is the one checkpoint primitive: [[local]] (the eager write,
+  * optionally layout-keeping), [[sized]] (the scale-adaptive level
+  * rule) and [[shared]] (materialize a multiply-referenced frame). None
+  * of them writes the caller's session conf, so queries may be built
+  * concurrently on one session.
   */
 object Ckpt extends org.apache.spark.internal.Logging {
   /** Whether the session CAN have more than one executor — decided from
@@ -72,17 +79,106 @@ object Ckpt extends org.apache.spark.internal.Logging {
       base.deserialized, r)
   }
 
-  /** Drop-in for `df.localCheckpoint()` (eager), replication-aware. */
+  /** Drop-in for `df.localCheckpoint()` (eager), replication-aware.
+    *
+    * `keepLayout` plans the checkpoint with AQE off: an AQE-planned
+    * checkpoint reports UnknownPartitioning, so every downstream keyed
+    * join re-shuffles the blocks (q_pagerank's edges). It is planned on
+    * an AQE-off clone of the caller's session ([[SparkEngine.variant]])
+    * and re-bound to the caller's session, whose conf is never written.
+    * (`SQLConf.withExistingConf` does not work on Spark 4.1.2: the
+    * checkpoint still planned with the session's AQE.) Without
+    * `keepLayout` the checkpoint plans under the session's own setting.
+    */
   def local(df: DataFrame,
-      base: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-    df.localCheckpoint(true, level(df.sparkSession, base))
+      base: StorageLevel = StorageLevel.MEMORY_AND_DISK,
+      keepLayout: Boolean = false): DataFrame = {
+    val s = df.sparkSession
+    val planned =
+      if (!keepLayout) df
+      else Bridge.ofRows(SparkEngine.variant(s, "spark.sql.adaptive.enabled" -> "false"),
+        Bridge.logicalPlan(df))
+    val c = planned.localCheckpoint(true, level(s, base))
+    if (keepLayout) Bridge.ofRows(s, Bridge.logicalPlan(c)) else c
+  }
+
+  /** Scale-adaptive level for a checkpoint whose size follows a SOURCE
+    * table (round 11): the in-memory level is the fast path while the
+    * frame plausibly fits, DISK_ONLY the memory-independent level above.
+    * r10 measured both in-memory levels DYING at a 2 GiB heap on the ×10
+    * corpus in block unroll, before any task could spill, while
+    * DISK_ONLY costs serde CPU on every read (+23 % q_pagerank wall at
+    * the standard heap, 10.8 → 13.3 s at ×10).
+    *
+    * The estimate is the source's plan-time size × `sizeFactor` —
+    * derived-frame estimates above joins/aggregates are unreliable, the
+    * scan estimate is not. The default ×10 is the measured
+    * deserialization factor (sf0.1: 11.5 MB lineitem parquet → ~115 MB
+    * of MEMORY_AND_DISK edge blocks); sites materializing a frame known
+    * to be much SMALLER than the source (aggregated pair outputs) pass a
+    * smaller factor so scale does not needlessly force them to disk.
+    * For the graph edges the rule reproduces every r10 data point:
+    * gate/24 GiB → memory, ×10/24 GiB → memory (the measured 10.8 s),
+    * ×10/2 GiB → disk (the measured OOM boundary), ×100+ → disk.
+    * The budget is a quarter of the executor heap: `spark.executor.memory`
+    * when set, else this JVM's max heap — right in local mode, where the
+    * driver IS the executor; a cluster deploy must set the executor conf
+    * or this would track the wrong process.
+    */
+  def sized(source: DataFrame, sizeFactor: Double = 10.0): StorageLevel = {
+    val s = source.sparkSession
+    val heap = s.conf.getOption("spark.executor.memory")
+      .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
+      .getOrElse(Runtime.getRuntime.maxMemory)
+    sized(source.queryExecution.optimizedPlan.stats.sizeInBytes, sizeFactor,
+      BigInt(heap) / 4)
+  }
+
+  /** The pure rule: memory while `sourceBytes × sizeFactor` fits the
+    * budget. The `budget > 0` guard is strict, so a zero budget picks
+    * DISK_ONLY even for an empty source at any factor.
+    */
+  def sized(sourceBytes: BigInt, sizeFactor: Double,
+      budget: BigInt): StorageLevel = {
+    val est = (BigDecimal(sourceBytes) * sizeFactor).toBigInt
+    if (budget > 0 && est <= budget) StorageLevel.MEMORY_AND_DISK
+    else StorageLevel.DISK_ONLY
+  }
+
+  /** Materialize a MULTIPLY-REFERENCED derived frame once (round 11,
+    * guide §2.4/§5), layout kept, at the [[sized]] level of its
+    * `source`. Exchange reuse only dedupes identical exchange subtrees:
+    * the final aggregate above a reused shuffle re-executes per
+    * reference, and pushed-filter/read-schema asymmetry between
+    * references (a join side's IsNotNull vs a groupBy's) makes the
+    * subtrees non-identical so the whole scan duplicates — q_lift_rules
+    * scanned lineitem 3× and ran its distinct 4× before this.
+    *
+    * Apply ONLY where a frame is referenced ≥2× and the references
+    * cannot share one exchange — single-reference sites pay the
+    * checkpoint write for nothing (the q_common_neighbors lesson: a
+    * ckpt can also forfeit a filter pushdown that made one
+    * "re-execution" nearly free; measure per site).
+    *
+    * `spark.graft.sharedCkpt.enabled=false` is the identity
+    * pass-through (the A/B and spec hook). Values never change:
+    * materialization is storage-only, and every catalog query is
+    * shuffle-order-free by construction (BENCH_INVARIANCE).
+    */
+  def shared(source: DataFrame, df: DataFrame,
+      sizeFactor: Double = 10.0): DataFrame = {
+    val on = df.sparkSession.conf.getOption("spark.graft.sharedCkpt.enabled")
+      .forall(_.trim.toBoolean)
+    if (on) local(df, sized(source, sizeFactor), keepLayout = true) else df
+  }
 
   /** `import graft.Ckpt.CkptOps` and write `.ckpt()` where
     * `.localCheckpoint()` used to sit — same chain position, policy
     * applied.
     */
   implicit final class CkptOps(private val df: DataFrame) extends AnyVal {
-    def ckpt(base: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-      local(df, base)
+    def ckpt(base: StorageLevel = StorageLevel.MEMORY_AND_DISK,
+        keepLayout: Boolean = false): DataFrame =
+      local(df, base, keepLayout)
   }
 }

@@ -239,4 +239,30 @@ object SparkEngine {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** A session that plans like `spark` with `overrides` applied, without
+    * writing `spark`'s conf (a set/restore there races with queries
+    * planned concurrently): a clone, cached per (session, overrides) and
+    * remade when `spark`'s conf changes. Not one per call: Spark 4.1
+    * caches generated code per session class loader, so a fresh clone
+    * recompiles every stage it runs (a clone per checkpoint took
+    * q_pagerank's build from 0.58 to 1.96 s). A clone references its
+    * parent, so entries live as long as the JVM; sessions here are
+    * long-lived.
+    */
+  def variant(spark: SparkSession, overrides: (String, String)*): SparkSession = {
+    val conf = spark.conf.getAll
+    variants.synchronized {
+      variants.get((spark, overrides)) match {
+        case Some((c, clone)) if c == conf => clone
+        case _ =>
+          val clone = org.apache.spark.sql.graftbridge.Bridge.cloneSession(spark, overrides: _*)
+          variants((spark, overrides)) = (conf, clone)
+          clone
+      }
+    }
+  }
+
+  private val variants = scala.collection.mutable.Map
+    .empty[(SparkSession, Seq[(String, String)]), (Map[String, String], SparkSession)]
 }

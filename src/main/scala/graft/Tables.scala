@@ -56,97 +56,6 @@ object Tables {
     else df
   }
 
-  /** Storage level for a shared-frame checkpoint ([[ckptShared]]),
-    * scale-adaptive like `Pipeline12.edgeCkptLevel` (round 11): the
-    * in-memory level is the fast path while the frame plausibly fits,
-    * DISK_ONLY is the memory-independent level above. The estimate is
-    * the SOURCE table's plan-time size × `sizeFactor` — derived-frame
-    * estimates above joins/aggregates are unreliable, the scan estimate
-    * is not. The default ×10 deserialization factor is the one the
-    * edge-checkpoint rule measured (sf0.1: 11.5 MB lineitem parquet →
-    * ~115 MB of MEMORY_AND_DISK edge blocks); call sites materializing
-    * a frame known to be much SMALLER than the source (aggregated pair
-    * outputs) pass a smaller factor so scale does not needlessly force
-    * them to disk (round-11 advice). `spark.graft.sharedCkpt.memBudget`
-    * overrides the budget in bytes; 0 forces DISK_ONLY everywhere (the
-    * memory-sweep hook — a strict `budget > 0` guard, so an empty
-    * source cannot sneak back to the memory level under budget 0).
-    * Default budget: a quarter of the executor heap when
-    * `spark.executor.memory` is set; in local mode (no executor conf)
-    * the driver JVM heap IS the executor heap, so
-    * `Runtime.getRuntime.maxMemory` is the right fallback there —
-    * round-11 advice: in a cluster deploy set the executor conf or the
-    * explicit budget, or this fallback would track the wrong process.
-    */
-  def sharedCkptLevel(source: DataFrame,
-      sizeFactor: Double = 10.0): org.apache.spark.storage.StorageLevel = {
-    val s = source.sparkSession
-    val budget = s.conf.getOption("spark.graft.sharedCkpt.memBudget")
-      .map(BigInt(_))
-      .getOrElse {
-        val heap = s.conf.getOption("spark.executor.memory")
-          .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-          .getOrElse(Runtime.getRuntime.maxMemory)
-        BigInt(heap) / 4
-      }
-    val est = (BigDecimal(
-      source.queryExecution.optimizedPlan.stats.sizeInBytes) * sizeFactor)
-      .toBigInt
-    if (budget > 0 && est <= budget)
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    else org.apache.spark.storage.StorageLevel.DISK_ONLY
-  }
-
-  /** Materialize a MULTIPLY-REFERENCED derived frame once (round 11,
-    * guide §2.4/§5). Exchange reuse only dedupes identical exchange
-    * subtrees: the final aggregate above a reused shuffle re-executes
-    * per reference, and pushed-filter/read-schema asymmetry between
-    * references (a join side's IsNotNull vs a groupBy's) makes the
-    * subtrees non-identical so the whole scan duplicates — q_lift_rules
-    * scanned lineitem 3× and ran its distinct 4× before this. The
-    * checkpoint runs the subtree once and every reference reads blocks.
-    *
-    * `source` is the base table the frame derives from, used only for
-    * the [[sharedCkptLevel]] size rule. The AQE-off bracket is the
-    * q_pagerank pattern: an AQE-planned localCheckpoint reports
-    * UnknownPartitioning and downstream keyed consumers would
-    * re-shuffle even when the blocks already satisfy their clustering.
-    *
-    * `spark.graft.sharedCkpt.enabled=false` is the identity
-    * pass-through (the A/B and spec hook — same convention as
-    * `spark.graft.scan.fanoutMaxBytes=0`). Values never change:
-    * materialization is storage-only, and every catalog query is
-    * shuffle-order-free by construction (BENCH_INVARIANCE).
-    *
-    * Apply ONLY where a frame is referenced ≥2× and the references
-    * cannot share one exchange — single-reference sites pay the
-    * checkpoint write for nothing (the q_common_neighbors lesson:
-    * a ckpt can also forfeit a filter pushdown that made one
-    * "re-execution" nearly free; measure per site).
-    *
-    * CONCURRENCY INVARIANT (round-11 advice): the AQE on/off bracket
-    * flips a session-wide conf for the duration of the eager
-    * checkpoint, so query CONSTRUCTION must be single-threaded per
-    * SparkSession — true for every consumer in this repo (Bench,
-    * Verify, SparkEntry and the tests construct queries serially; the
-    * HTTP parity routes never call this). A future concurrent-planning
-    * caller must clone the session (`spark.newSession`) per operation
-    * or synchronize around the bracket.
-    */
-  def ckptShared(source: DataFrame, df: DataFrame,
-      sizeFactor: Double = 10.0): DataFrame = {
-    val s = df.sparkSession
-    val on = s.conf.getOption("spark.graft.sharedCkpt.enabled")
-      .forall(_.trim.toBoolean)
-    if (!on) df
-    else {
-      val aqeBefore = s.conf.get("spark.sql.adaptive.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try Ckpt.local(df, sharedCkptLevel(source, sizeFactor))
-      finally s.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-    }
-  }
-
   /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark's reader rejects
     * outright (PARQUET_TYPE_ILLEGAL). Read it as raw nanos via the legacy
     * conf and rebuild a micros timestamp. Integer `DIV` — a double-typed

@@ -112,7 +112,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     * oracle parity.
     */
   def jaccardPairs(docs: DataFrame, t10: Int, maxShingleDf: Int): DataFrame = {
-    // Shared-frame materialization (round 11, Tables.ckptShared), but
+    // Shared-frame materialization (round 11, Ckpt.shared), but
     // ONLY on the uncapped path: shAll feeds both self-join sides plus
     // the size totals, and the distinct aggregate above the shared
     // shuffle re-executed per reference. Measured at the gate (sf0.1
@@ -122,7 +122,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     // exchange reuse already serves nearly free, and the ckpt trades it
     // for a full-width barrier + block serde ×4.
     val shAll =
-      if (maxShingleDf <= 0) graft.Tables.ckptShared(docs, shingles(docs))
+      if (maxShingleDf <= 0) graft.Ckpt.shared(docs, shingles(docs))
       else shingles(docs)
     val sh =
       if (maxShingleDf <= 0) shAll
@@ -163,7 +163,7 @@ object Dedup extends org.apache.spark.internal.Logging {
   def containmentPairs(docs: DataFrame, t10: Int): DataFrame = {
     // sh feeds both self-join sides and the per-doc totals (×3):
     // materialize once (round 11, see jaccardPairs).
-    val sh = graft.Tables.ckptShared(docs, shingles(docs))
+    val sh = graft.Ckpt.shared(docs, shingles(docs))
     // |A∩B| is SYMMETRIC even though the containment test is not: join
     // each unordered pair once (`<`, half the join output and half the
     // pair-aggregate groups of the naive `!=` self-join — guide §2.3,

@@ -464,7 +464,16 @@ object OrderStats {
         cumLong.map { case (_, out) =>
           StructField(out, LongType, nullable = false) }))
     implicit val enc: org.apache.spark.sql.Encoder[Row] = RowEncoder.encoderFor(outSchema)
-    limited.mapPartitions { it =>
+    limited.mapPartitions(new TopKRank(sumIdx))
+  }
+
+  /** [[topK]]'s per-partition pass: appends the rank and the running
+    * sums of the `sumIdx` columns. A named class, not a lambda, so the
+    * plan prints the same `MapPartitions` argument on every run.
+    */
+  private final class TopKRank(sumIdx: Array[Int])
+      extends (Iterator[Row] => Iterator[Row]) with Serializable {
+    def apply(it: Iterator[Row]): Iterator[Row] = {
       // TakeOrderedAndProject emits exactly one partition; if a future
       // planner change broke that, per-partition indexing would silently
       // misrank — fail loudly instead.
@@ -482,5 +491,7 @@ object OrderStats {
         Row.fromSeq(r.toSeq ++ (rn +: s.toSeq))
       }
     }
+
+    override def toString: String = s"OrderStats.TopKRank(${sumIdx.mkString(" ")})"
   }
 }

@@ -170,7 +170,7 @@ object Similarity {
     * to which cell a vector lands in. Search still uses full-precision
     * `emb`.
     *
-    * MATERIALIZED ONCE (round 12, Tables.ckptShared — guide §2.4/§5):
+    * MATERIALIZED ONCE (round 12, Ckpt.shared — guide §2.4/§5):
     * the IVF/PQ pipelines reference this frame 4–8 times (each Lloyd
     * round's assignment pass references it twice — chosen-cell build +
     * payload rejoin — plus the corpus and query assignment passes), and
@@ -184,7 +184,7 @@ object Similarity {
     * restores the recompute-per-reference plan (A/B + spec hook).
     */
   private def quantized(e: DataFrame): DataFrame =
-    graft.Tables.ckptShared(e,
+    graft.Ckpt.shared(e,
       e.withColumn("qemb", expr("transform(emb, v -> ROUND(v, 3))"))
         .withColumn("qd", expr("transform(qemb, v -> CAST(v AS DECIMAL(10,3)))")))
 
@@ -350,7 +350,7 @@ object Similarity {
     */
   def pqAdcKnn(embeddings: DataFrame, m: Int, subDim: Int, ks: Int,
       iters: Int, nQueries: Int, k: Int): DataFrame = {
-    // Materialized once (round 12, Tables.ckptShared): referenced
+    // Materialized once (round 12, Ckpt.shared): referenced
     // iters+3 times (codebook seeds, each Lloyd round's pqAssign, the
     // corpus code assignment, the query lookup tables), and every
     // re-execution repeats the m-way slice explosion plus both
@@ -359,7 +359,7 @@ object Similarity {
     // single-reference behind a selective vec_id filter, where a
     // checkpoint would forfeit the pushdown (the q_common_neighbors
     // lesson).
-    val subs = graft.Tables.ckptShared(embeddings,
+    val subs = graft.Ckpt.shared(embeddings,
       pqSubvectors(embeddings, m, subDim))
     val books = pqCodebooks(subs, ks, iters)
     val codes = pqAssign(subs, books)
@@ -416,7 +416,7 @@ object Similarity {
       .select(col("vec_id").as("query_id"), col("cell"))
     // Same call-site materialization as pqAdcKnn (round 12): subs is
     // referenced pqIters+3 times here (seeds, Lloyd rounds, codes, tab).
-    val subs = graft.Tables.ckptShared(embeddings,
+    val subs = graft.Ckpt.shared(embeddings,
       pqSubvectors(embeddings, m, subDim))
     val books = pqCodebooks(subs, ks, pqIters)
     val codes = pqAssign(subs, books)
@@ -471,7 +471,7 @@ object Similarity {
     // the candidate pair stream — each re-execution is a full N×nCells
     // assignment pass. Narrow (vec_id, cell) rows, so the checkpoint is
     // far smaller than the source (sizeFactor 0.3).
-    val corpusCells = graft.Tables.ckptShared(embeddings,
+    val corpusCells = graft.Ckpt.shared(embeddings,
       assignCells(q, cents, nprobe = 1)
         .select(col("vec_id"), col("cell")),
       sizeFactor = 0.3)
@@ -488,7 +488,7 @@ object Similarity {
     // ROUND/DECIMAL transforms. The raw `subs` below stays
     // unmaterialized — its only reference is the query-side lookup
     // table behind a vec_id < nQueries pushdown.
-    val rsubs = graft.Tables.ckptShared(embeddings,
+    val rsubs = graft.Ckpt.shared(embeddings,
       pqSubvectors(resid, m, subDim, embCol = "remb"))
     val books = pqCodebooks(rsubs, ks, pqIters)
     val codes = pqAssign(rsubs, books)

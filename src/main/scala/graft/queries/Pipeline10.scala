@@ -55,7 +55,7 @@ object Pipeline10 {
   /** Word-frequency table for BPE: lowercase-alpha words of length 2–20,
     * with their corpus counts and initial character token arrays.
     *
-    * MATERIALIZED ONCE (round 12, Tables.ckptShared): every BPE merge
+    * MATERIALIZED ONCE (round 12, Ckpt.shared): every BPE merge
     * round's pair-count argmax AND every merged-words reference chains
     * back to this frame, so without a checkpoint the corpus scan +
     * word-frequency aggregation re-executes once per path — the
@@ -66,7 +66,7 @@ object Pipeline10 {
     * vocabulary-sized lineage above it. Plan: 9 scans → 1.
     */
   private[queries] def bpeWords(docs: DataFrame): DataFrame =
-    graft.Tables.ckptShared(docs,
+    graft.Ckpt.shared(docs,
       docs.select(explode(split(col("text"), " ")).as("w"))
         .filter(col("w").rlike("^[a-z]+$") && length(col("w")).between(2, 20))
         .groupBy(col("w")).agg(count(lit(1)).cast("long").as("n"))
@@ -187,7 +187,7 @@ object Pipeline10 {
     // counts alongside for error accounting. k=256; 60-bit md5 hashes.
     "q_sketch_set_ops" -> { (s, dir) =>
       val k = 256
-      // NOT ckptShared (round 12, measured): h and members are each
+      // NOT Ckpt.shared (round 12, measured): h and members are each
       // referenced twice (6 lineitem scans in the audit), but the
       // duplicate subtrees run as parallel stages inside one job while
       // eager checkpoints serialize extra jobs — A/B at sf0.1 measured

@@ -45,7 +45,7 @@ object Pipeline11 {
     // encode step a tokenizer ships after training.
     "q_bpe_encode" -> { (s, dir) =>
       val docs = t(s, dir, "documents")
-      // NOT ckptShared (round 12, measured): unlike q_bpe_learn — whose
+      // NOT Ckpt.shared (round 12, measured): unlike q_bpe_learn — whose
       // output is only the 3 argmax rows — this query's full final
       // vocabulary flows to the output, and the duplicate word-table
       // subtrees run as parallel stages inside one job. The checkpoint

@@ -40,7 +40,7 @@ object Pipeline12 {
     * [[Pipeline11]] q_bpe_encode for the full sequence form).
     */
   private def bpeTokenCounts(docs: org.apache.spark.sql.DataFrame) = {
-    // NOT ckptShared (round 12, measured): the 9 audited documents scans
+    // NOT Ckpt.shared (round 12, measured): the 9 audited documents scans
     // are cheap parallel subtrees inside one job; an eager checkpoint of
     // the word table serialized an extra job and measured wall
     // 1.64→2.17s, CPU 2.4→4.6s. WORSE (contrast Pipeline10.bpeWords,
@@ -104,66 +104,20 @@ object Pipeline12 {
       .groupBy(col("src"), col("dst")).agg(lit(1).as("one"))
       .select(col("src"), col("dst"))
 
-  /** Storage level for the DATA-sized co-purchase edge checkpoint
-    * (round 11, scale-adaptive — guide §1.2/§5). DISK_ONLY is the
-    * memory-independent level the big decades need (r10 measured both
-    * in-memory levels DYING at a 2 GiB heap on the ×10 corpus in block
-    * unroll, before any task could spill), but it costs serde CPU on
-    * every edge read — measured +23% q_pagerank wall at the standard
-    * heap (10.8 → 13.3s at ×10). The level is therefore derived from
-    * the SOURCE table's plan-time size: deserialized edge blocks
-    * measure ≈10× the lineitem parquet bytes (sf0.1: 11.5 MB file →
-    * ~115 MB of MEMORY_AND_DISK edge blocks), and the in-memory level
-    * is safe while that estimate fits in a quarter of the executor
-    * heap — the rule reproduces every r10 data point: gate/24 GiB →
-    * memory (fast path), ×10/24 GiB → memory (the measured 10.8s),
-    * ×10/2 GiB → disk (the measured OOM boundary), ×100+ → disk.
-    * `spark.graft.graph.edgeCkptMemBudget` overrides the budget in
-    * bytes; 0 forces DISK_ONLY everywhere (the prior behavior, and the
-    * memory-sweep hook).
-    */
-  private[queries] def edgeCkptLevel(source: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.storage.StorageLevel = {
-    val s = source.sparkSession
-    // Same budget rules as Tables.sharedCkptLevel (round-11 advice):
-    // executor heap when configured (local mode: the driver JVM IS the
-    // executor, so maxMemory is right there), and a strict budget > 0
-    // guard so 0 always forces DISK_ONLY even for an empty source.
-    val budget = s.conf.getOption("spark.graft.graph.edgeCkptMemBudget")
-      .map(BigInt(_))
-      .getOrElse {
-        val heap = s.conf.getOption("spark.executor.memory")
-          .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-          .getOrElse(Runtime.getRuntime.maxMemory)
-        BigInt(heap) / 4
-      }
-    val est = source.queryExecution.optimizedPlan.stats.sizeInBytes * 10
-    if (budget > 0 && est <= budget)
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    else org.apache.spark.storage.StorageLevel.DISK_ONLY
-  }
-
-  /** [[coEdges]] materialized ONCE via an AQE-off eager checkpoint at
-    * [[edgeCkptLevel]] (round 11). For consumers that reference the
-    * edge list more than once (wedge join sides, degree frames,
-    * adjacency anti-joins): exchange reuse only caches the EXCHANGE —
-    * the (src,dst) dedup aggregate above it re-executes per reference
-    * (~8 CPU-s each at sf0.1, ×3 in q_graph_assortativity /
-    * q_common_neighbors). The AQE-off bracket is the q_pagerank
-    * pattern: an AQE-planned localCheckpoint reports
-    * UnknownPartitioning and every downstream src-keyed join would
-    * re-shuffle the edges. Single-reference consumers (q_graph_degrees,
-    * q_friendship_paradox) must NOT use this — materialization would be
-    * pure overhead there.
+  /** [[coEdges]] materialized ONCE, layout kept, at the scale-adaptive
+    * `Ckpt.sized` level of its lineitem source (round 11). For
+    * consumers that reference the edge list more than once (wedge join
+    * sides, degree frames, adjacency anti-joins): exchange reuse only
+    * caches the EXCHANGE — the (src,dst) dedup aggregate above it
+    * re-executes per reference (~8 CPU-s each at sf0.1, ×3 in
+    * q_graph_assortativity / q_common_neighbors). The kept hash(src)
+    * layout spares every downstream src-keyed join a re-shuffle.
+    * Single-reference consumers (q_graph_degrees, q_friendship_paradox)
+    * must NOT use this — materialization would be pure overhead there.
     */
   private[queries] def ckptEdges(li: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val s = li.sparkSession
-    val aqeBefore = s.conf.get("spark.sql.adaptive.enabled", "true")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try coEdges(li).ckpt(edgeCkptLevel(li))
-    finally s.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-  }
+      : org.apache.spark.sql.DataFrame =
+    coEdges(li).ckpt(graft.Ckpt.sized(li), keepLayout = true)
 
   /** Oracle-side mirror of [[cappedOrderSets]] over lineitem parts:
     * `ranked`/`kept` CTE bodies selecting each order's [[degreeCap]]

@@ -85,7 +85,7 @@ object Pipeline15 {
       // pairs (distinct day×user) feeds days, cover AND act1 — three
       // full events scans + distincts in the round-12 audit. Materialize
       // once (sizeFactor 0.5: distinct-reduced, narrower than events).
-      val pairs = graft.Tables.ckptShared(ev,
+      val pairs = graft.Ckpt.shared(ev,
         ev.select(datediff(to_date(col("ts")), lit("1970-01-01")).cast("long")
             .as("d"), col("user_id"))
           .distinct(),

@@ -156,8 +156,8 @@ object Pipeline16 {
     "q_freq_triples" -> { (s, dir) =>
       // items feeds all three self-join sides of the triple expansion:
       // the distinct re-executed per side above the one reused exchange —
-      // materialize once (round 11, Tables.ckptShared).
-      val items = graft.Tables.ckptShared(t(s, dir, "lineitem"),
+      // materialize once (round 11, Ckpt.shared).
+      val items = graft.Ckpt.shared(t(s, dir, "lineitem"),
         t(s, dir, "lineitem")
           .join(broadcast(t(s, dir, "part")),
             col("l_partkey") === col("p_partkey"))

@@ -89,10 +89,10 @@ object Pipeline20 {
       // downstream reference (rows, p→k, p→v0, and each of the three
       // v·P steps): the round-12 audit counted TEN parquet scans of
       // events in this one plan. Materialize the tiny frame once
-      // (Tables.ckptShared; sizeFactor 1e-4 — the frame is bounded by
+      // (Ckpt.shared; sizeFactor 1e-4 — the frame is bounded by
       // the type-pair domain, not the corpus, so it belongs in memory
       // at any scale). Plan: 10 scans → 1.
-      val trans = graft.Tables.ckptShared(ev,
+      val trans = graft.Ckpt.shared(ev,
         seq0.groupBy(col("event_type").as("a"), col("nxt").as("b"))
           .agg(count(lit(1)).cast("long").as("c")),
         sizeFactor = 1e-4)

@@ -105,7 +105,7 @@ object Pipeline21 {
     "q_funnel_strict" -> { (s, dir) =>
       val ev = t(s, dir, "events")
         .select(col("user_id"), col("event_type"), col("ts"))
-      // NOT ckptShared (round 12, measured): v and c are each referenced
+      // NOT Ckpt.shared (round 12, measured): v and c are each referenced
       // twice and the audit counts 6 events scans, but every duplicate
       // is a type-filtered pruned scan + tiny per-user aggregate running
       // as parallel stages inside one job; two eager checkpoints

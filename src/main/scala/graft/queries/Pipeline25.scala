@@ -49,7 +49,7 @@ object Pipeline25 {
       // (ha, hb) AND the size totals; cand feeds the signature-match and
       // common-shingle branches — both re-executed per reference before
       // round 11 (4 parquet scans of documents). Materialize each once.
-      val sh = graft.Tables.ckptShared(t(s, dir, "documents"),
+      val sh = graft.Ckpt.shared(t(s, dir, "documents"),
         Dedup.shingles(t(s, dir, "documents")))
       val sig = Dedup.minhashSignature(sh).ckpt()
       val bands = (0 until 4).map { b =>
@@ -57,7 +57,7 @@ object Pipeline25 {
           md5f(concat(col(s"mh${2 * b + 1}"), col(s"mh${2 * b + 2}")))
             .as("band_val"))
       }.reduce(_ union _)
-      val cand = graft.Tables.ckptShared(t(s, dir, "documents"),
+      val cand = graft.Ckpt.shared(t(s, dir, "documents"),
         bands.as("x").join(bands.as("y"),
             col("x.band_idx") === col("y.band_idx") &&
               col("x.band_val") === col("y.band_val") &&

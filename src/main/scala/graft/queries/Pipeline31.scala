@@ -50,7 +50,7 @@ object Pipeline31 {
           .cast("long").as("m"),
         expr("CAST(ROUND(o_totalprice * 100) AS BIGINT) DIV 5000000")
           .as("band"))
-      // NOT ckptShared (round 12, measured): counts is referenced six
+      // NOT Ckpt.shared (round 12, measured): counts is referenced six
       // times (months/bands/nBands/totals + both filled sides) and the
       // audit counts 10 orders scans — but those duplicate subtrees run
       // as PARALLEL stages inside one job, each a cheap 2-column pruned
@@ -166,7 +166,7 @@ object Pipeline31 {
     // divided by n_a·n_b only once at the end.
     "q_wasserstein_lengths" -> { (s, dir) =>
       val d = t(s, dir, "documents").select(col("source"), col("n_chars"))
-      // NOT ckptShared (round 12, measured): vals/totals/filled are all
+      // NOT Ckpt.shared (round 12, measured): vals/totals/filled are all
       // multiply-referenced (8 documents scans in the audit), but each
       // duplicate is a cheap 2-column pruned scan feeding tiny
       // aggregations that run as PARALLEL stages inside one job; three
@@ -224,8 +224,8 @@ object Pipeline31 {
       // sh (shingles ⋈ doc ranks) feeds both the vocabulary-growth and
       // token-count branches: the shingle explode + distinct + rank join
       // executed twice (documents scanned 2×) — materialize once
-      // (round 11, Tables.ckptShared).
-      val sh = graft.Tables.ckptShared(t(s, dir, "documents"),
+      // (round 11, Ckpt.shared).
+      val sh = graft.Ckpt.shared(t(s, dir, "documents"),
         graft.operators.Dedup.shingles(t(s, dir, "documents"))
           .join(docs, Seq("doc_id")))
       val nf = t(s, dir, "documents").agg(count(lit(1)).cast("long").as("n"))
@@ -249,7 +249,7 @@ object Pipeline31 {
       // min-rank is the expensive one). Materialize the 10-row frame
       // once (round 12; sizeFactor 1e-4 — grid-bounded, not
       // corpus-bounded).
-      val pts = graft.Tables.ckptShared(t(s, dir, "documents"),
+      val pts = graft.Ckpt.shared(t(s, dir, "documents"),
         vocab.join(toks, Seq("j", "k_docs"))
           .withColumn("x", log(col("n_tokens").cast("double")).cast(DecimalType(10, 5)))
           .withColumn("y", log(col("vocab").cast("double")).cast(DecimalType(10, 5))),

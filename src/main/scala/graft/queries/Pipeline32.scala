@@ -227,7 +227,7 @@ object Pipeline32 {
       // both sides of the consecutive-month self-join): 4 lineitem
       // scans in the round-12 audit. Materialize once (sizeFactor 1e-4:
       // bounded by months×10, not the corpus). Plan: 4 scans → 1.
-      val top = graft.Tables.ckptShared(li,
+      val top = graft.Ckpt.shared(li,
         rev.withColumn("rk", row_number().over(byMonth))
           .filter(col("rk") <= 10)
           .select(col("m"), col("l_partkey")),

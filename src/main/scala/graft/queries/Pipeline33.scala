@@ -46,7 +46,7 @@ object Pipeline33 {
       // per-user window) re-executed per reference (outTot, terms →
       // rate AND the final grouping): 6 events scans in the round-12
       // audit. Materialize once (sizeFactor 1e-4: type-pair-bounded).
-      val tr = graft.Tables.ckptShared(ev,
+      val tr = graft.Ckpt.shared(ev,
         ev.select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
           .withColumn("next_type", lead(col("event_type"), 1).over(w))
           .filter(col("next_type").isNotNull)

@@ -32,11 +32,11 @@ object Pipeline37 {
       // verified feeds both the pair counts and the docs-touched branch:
       // the entire LSH candidate + verification stack executed twice —
       // materialize the (small) verified pair frame once (round 11,
-      // Tables.ckptShared). sizeFactor 0.1 (round-11 advice): the frame
+      // Ckpt.shared). sizeFactor 0.1 (round-11 advice): the frame
       // is the VERIFIED near-dup pair output — band-pruned, far smaller
       // than the corpus — so sizing it at source×10 would force
       // DISK_ONLY at scale for a frame that trivially fits in memory.
-      val verified = graft.Tables.ckptShared(t(s, dir, "documents"),
+      val verified = graft.Ckpt.shared(t(s, dir, "documents"),
         Dedup.minhashLshPairs(t(s, dir, "documents"), t10 = 0),
         sizeFactor = 0.1)
       val grid = s.range(5, 10).select(col("id").cast("long").as("t10"))

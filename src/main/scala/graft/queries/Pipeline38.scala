@@ -48,7 +48,7 @@ object Pipeline38 {
         // a boundary where they disagree (sweep, round 7). Rounding the
         // shared double product to integer units is identical in both.
         .withColumn("w_u", expr("CAST(ROUND(w * 1e10) AS BIGINT)"))
-      // NOT ckptShared (round 12, measured): touches feeds both the
+      // NOT Ckpt.shared (round 12, measured): touches feeds both the
       // per-conversion totals and the credit join (4 events scans in
       // the audit), but the frame is conversion-window-sized (data-
       // proportional) — the eager checkpoint's full-width write/read
@@ -74,8 +74,8 @@ object Pipeline38 {
       val sh = graft.operators.Dedup.shingles(t(s, dir, "documents"))
       // cf feeds both the corpus totals and the top-k ranking: the
       // per-shingle count re-executed per reference — materialize once
-      // (round 11, Tables.ckptShared).
-      val cf = graft.Tables.ckptShared(t(s, dir, "documents"),
+      // (round 11, Ckpt.shared).
+      val cf = graft.Ckpt.shared(t(s, dir, "documents"),
         sh.groupBy(col("shingle")).agg(count(lit(1)).cast("long").as("c")))
       val tot = cf.agg(sum(col("c")).cast("long").as("total"),
         count(lit(1)).cast("long").as("n_distinct"))

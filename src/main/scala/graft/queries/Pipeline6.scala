@@ -180,12 +180,11 @@ object Pipeline6 {
     //    (hash(src) satisfies the (src,dst) clustering), the
     //    partition-by-src degree window, and co-location for every
     //    iteration's rank join.
-    //  - The checkpoint is taken with AQE momentarily disabled:
-    //    AdaptiveSparkPlanExec reports UnknownPartitioning, so an
-    //    AQE-planned localCheckpoint FORGETS the hash(src) layout and
-    //    every later join re-shuffles all edges — the dominant cost of
-    //    the previous version. A non-adaptive eager checkpoint lands a
-    //    LogicalRDD that still advertises hash(src).
+    //  - Every checkpoint keeps its layout (Ckpt.local keepLayout,
+    //    planned with AQE off on a session clone): an AQE-planned
+    //    localCheckpoint FORGETS the hash(src) layout and every later
+    //    join re-shuffles all edges — the dominant cost of the previous
+    //    version.
     //  - Rank joins hint shuffle_hash: the statically-sized rank frame
     //    otherwise plans as a per-round driver collect + broadcast,
     //    which both serializes each round here and cannot exist at
@@ -201,18 +200,16 @@ object Pipeline6 {
       val li = t(s, dir, "lineitem")
       val edges = Pipeline12.coEdges(li)
         .withColumn("d", count(lit(1)).over(Window.partitionBy(col("src"))))
-      val aqeBefore = s.conf.get("spark.sql.adaptive.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
       // Node frame (src, d): ew is hash(src)-partitioned, so this
       // aggregate plans with NO exchange. It is referenced TWICE (rank
       // init + the final degree join) and each lazy reference would
       // re-run the 4.5M-edge pass — checkpoint the ~node-sized result
-      // once (round 6), same AQE-off bracket so the layout survives.
+      // once (round 6), layout kept like the edges'.
       // The edge frame is DATA-sized (~4.5M rows per sf0.1-equivalent);
-      // its checkpoint level is the scale-adaptive
-      // Pipeline12.edgeCkptLevel: DISK_ONLY once the (source-derived)
-      // estimate outgrows a quarter of the heap — both in-memory levels
-      // are heap-proportional to the DATA through the 32-way-concurrent
+      // its checkpoint level is the scale-adaptive Ckpt.sized:
+      // DISK_ONLY once the (source-derived) estimate outgrows a
+      // quarter of the heap — both in-memory levels are
+      // heap-proportional to the DATA through the 32-way-concurrent
       // block unroll, which is unmanaged allocation that outruns its
       // own size estimates — measured at a 2 GiB heap on the ×10
       // corpus, MEMORY_AND_DISK dies in UnsafeRow copies and
@@ -228,11 +225,9 @@ object Pipeline6 {
       // heap (10.8→13.3s at ×10) where the in-memory level is safe.
       // The node-sized degree frame stays at the default in-memory
       // level.
-      val (ew, deg) =
-        try {
-          val e = edges.ckpt(Pipeline12.edgeCkptLevel(li))
-          (e, e.groupBy(col("src")).agg(max(col("d")).as("d")).ckpt())
-        } finally s.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+      val ew = edges.ckpt(graft.Ckpt.sized(li), keepLayout = true)
+      val deg = ew.groupBy(col("src")).agg(max(col("d")).as("d"))
+        .ckpt(keepLayout = true)
       var pr = deg.select(col("src").as("node"), lit(1.0).as("pr"))
       // Each round's rank frame is CHECKPOINTED (node-sized, cheap):
       // without the truncation, round i+1's lineage keeps round i's
@@ -243,20 +238,17 @@ object Pipeline6 {
       // scratch disk twice. With per-round truncation (and the session
       // periodic-GC cleaner, see SparkEngine), round i's shuffle files
       // become garbage the moment round i+1's ckpt materializes — peak
-      // scratch is ONE iteration's shuffle, not all of them. Same
-      // AQE-off bracket as the edge ckpt so the hash(node) layout
-      // survives into the next round's shuffle_hash join.
+      // scratch is ONE iteration's shuffle, not all of them. Layout
+      // kept like the edge ckpt so the hash(node) layout survives into
+      // the next round's shuffle_hash join.
       for (_ <- 1 to 3) {
-        val next = ew.join(pr.hint("shuffle_hash"), ew("src") === pr("node"))
+        pr = ew.join(pr.hint("shuffle_hash"), ew("src") === pr("node"))
           .select(col("dst"),
             (col("pr") / col("d")).cast(DecimalType(16, 10)).as("c"))
           .groupBy(col("dst"))
           .agg((lit(0.15) + lit(0.85) * sum(col("c")).cast("double")).as("pr"))
           .select(col("dst").as("node"), col("pr"))
-        val aqeIter = s.conf.get("spark.sql.adaptive.enabled", "true")
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        try pr = next.ckpt()
-        finally s.conf.set("spark.sql.adaptive.enabled", aqeIter)
+          .ckpt(keepLayout = true)
       }
       // Top-30 nodes via bounded TakeOrdered + sequential rank — no
       // single-partition window over the full node set.
@@ -271,9 +263,9 @@ object Pipeline6 {
     // Multi-source BFS over the co-purchase graph: 3 bounded hops from
     // the seed set (part_key < 100), min-hop per reached node — the
     // "distance to a labeled set" feature extractor. Same scale shape
-    // as q_pagerank: edges checkpointed hash(src) with AQE momentarily
-    // off so the layout survives, frontier exits each round's distinct
-    // hash(node)-partitioned, and the shuffle_hash hint keeps the
+    // as q_pagerank: edges checkpointed hash(src) with the layout kept,
+    // frontier exits each round's distinct hash(node)-partitioned,
+    // and the shuffle_hash hint keeps the
     // frontier join co-partitioned instead of a per-round broadcast.
     // Frontier levels carry no visited-set subtraction: a node can
     // re-enter at a later hop, and the final min(hop) aggregate picks
@@ -282,42 +274,36 @@ object Pipeline6 {
       // Shared capped edge builder (see q_pagerank): hash(src)-
       // partitioned distinct pairs, degree-capped, oracle-mirrored.
       val liB = t(s, dir, "lineitem")
-      val edgePlan = Pipeline12.coEdges(liB)
-      // AQE off for every checkpoint in the build (edges AND frontier
-      // levels): an AQE-planned localCheckpoint forgets its hash layout
-      // (UnknownPartitioning), forcing re-shuffles downstream.
-      val aqeBefore = s.conf.get("spark.sql.adaptive.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      val levels =
-        try {
-          // Scale-adaptive level for the data-sized edge frame (see
-          // q_pagerank / Pipeline12.edgeCkptLevel): frontier levels are
-          // seed-bounded and stay in memory.
-          val edges = edgePlan.ckpt(Pipeline12.edgeCkptLevel(liB))
-          // Frontier levels carry no visited-set subtraction: a node can
-          // re-enter at a later hop and the final min(hop) picks its true
-          // distance. Each level is localCheckpoint-ed: level h is then
-          // computed exactly ONCE — the union and level h+1's parent both
-          // read the materialized RDD — instead of leaning on exchange
-          // reuse through a 4-way union, and each per-level join is a
-          // tiny materialized frontier against the co-partitioned edge
-          // frame. (An anti-join "expand only new nodes" variant was
-          // measured 2.7× slower here: the visited chain re-evaluates
-          // earlier levels.)
-          var frontier = edges.select(col("src").as("node"))
-            .where(col("node") < 100).distinct()
-            .withColumn("hop", lit(0L)).ckpt()
-          val acc = scala.collection.mutable.ArrayBuffer(frontier)
-          for (h <- 1 to 3) {
-            frontier = edges
-              .join(frontier.hint("shuffle_hash"), edges("src") === frontier("node"))
-              .select(col("dst").as("node")).distinct()
-              .withColumn("hop", lit(h.toLong))
-            if (h < 3) frontier = frontier.ckpt()
-            acc += frontier
-          }
-          acc.toSeq
-        } finally s.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+      // Every checkpoint in the build (edges AND frontier levels) keeps
+      // its layout: an AQE-planned localCheckpoint forgets its hash
+      // layout (UnknownPartitioning), forcing re-shuffles downstream.
+      // Scale-adaptive level for the data-sized edge frame (see
+      // q_pagerank / Ckpt.sized): frontier levels are seed-bounded and
+      // stay in memory.
+      val edges = Pipeline12.coEdges(liB)
+        .ckpt(graft.Ckpt.sized(liB), keepLayout = true)
+      // Frontier levels carry no visited-set subtraction: a node can
+      // re-enter at a later hop and the final min(hop) picks its true
+      // distance. Each level is localCheckpoint-ed: level h is then
+      // computed exactly ONCE — the union and level h+1's parent both
+      // read the materialized RDD — instead of leaning on exchange
+      // reuse through a 4-way union, and each per-level join is a
+      // tiny materialized frontier against the co-partitioned edge
+      // frame. (An anti-join "expand only new nodes" variant was
+      // measured 2.7× slower here: the visited chain re-evaluates
+      // earlier levels.)
+      var frontier = edges.select(col("src").as("node"))
+        .where(col("node") < 100).distinct()
+        .withColumn("hop", lit(0L)).ckpt(keepLayout = true)
+      val levels = scala.collection.mutable.ArrayBuffer(frontier)
+      for (h <- 1 to 3) {
+        frontier = edges
+          .join(frontier.hint("shuffle_hash"), edges("src") === frontier("node"))
+          .select(col("dst").as("node")).distinct()
+          .withColumn("hop", lit(h.toLong))
+        if (h < 3) frontier = frontier.ckpt(keepLayout = true)
+        levels += frontier
+      }
       levels.reduce(_ union _)
         .groupBy(col("node").as("part_key"))
         .agg(min(col("hop")).as("hop"))

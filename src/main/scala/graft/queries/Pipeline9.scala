@@ -4,6 +4,7 @@ import graft.Ckpt.CkptOps
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.CurveFunctions.hilbert
@@ -489,9 +490,10 @@ object Pipeline9 {
 
     // The plans/RangeBinRule optimizer path: the SAME purchases-in-first-
     // 15-minutes join as q_range_join, but written as a PLAIN non-equi
-    // join — no manual binning call. With the binWidth conf set, the
-    // injected rule rewrites it to the binned equi-join during
-    // optimization; the oracle is identical to q_range_join's, proving
+    // join — no manual binning call. The plan is bound to a variant of
+    // s carrying the binWidth conf (s itself is never written), so
+    // the injected rule rewrites it to the binned equi-join whenever it
+    // is optimized; the oracle is identical to q_range_join's, proving
     // the transparent rewrite changes the plan and nothing else.
     "q_range_join_auto" -> { (s, dir) =>
       val ev = t(s, dir, "events")
@@ -501,20 +503,14 @@ object Pipeline9 {
         .agg(min(unix_micros(col("ts"))).as("start_us"))
         .select(col("user_id"), col("start_us"),
           (col("start_us") + lit(15L * 60 * 1000000)).as("end_us"))
-      val before = s.conf.get(graft.plans.RangeBinRule.WidthConf, "0")
-      s.conf.set(graft.plans.RangeBinRule.WidthConf, (15L * 60 * 1000000).toString)
-      try {
-        val out = points.join(intervals,
-            col("start_us") <= col("p_us") && col("p_us") < col("end_us"))
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n_purchases_in_window"))
-          .orderBy(col("user_id"))
-        // optimization runs at ACTION time, after this lambda returns
-        // and the conf is restored — force (and memoize) the optimized
-        // plan NOW so the rewrite is locked into this QueryExecution
-        out.queryExecution.optimizedPlan
-        out
-      } finally s.conf.set(graft.plans.RangeBinRule.WidthConf, before)
+      val out = points.join(intervals,
+          col("start_us") <= col("p_us") && col("p_us") < col("end_us"))
+        .groupBy(col("user_id"))
+        .agg(count(lit(1)).as("n_purchases_in_window"))
+        .orderBy(col("user_id"))
+      val binned = graft.SparkEngine.variant(s,
+        graft.plans.RangeBinRule.WidthConf -> (15L * 60 * 1000000).toString)
+      Bridge.ofRows(binned, Bridge.logicalPlan(out))
     },
 
     // Connected components on the co-purchase graph (support >= 3):

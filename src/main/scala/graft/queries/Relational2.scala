@@ -102,7 +102,7 @@ object Relational2 {
       // sketch: the lineitem scan + md5 + distinct executed twice
       // (round-12 audit: 3 lineitem scans incl. the histogram branch).
       // Materialize once; distinct-reduced (flag, hash) rows.
-      val h = graft.Tables.ckptShared(li,
+      val h = graft.Ckpt.shared(li,
         li.select(col("l_returnflag"),
             conv(substring(md5f(col("l_partkey").cast("string")), 1, 15), 16, 10)
               .cast("long").as("h"))

@@ -19,6 +19,17 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** A copy of `spark`'s session state with `conf` set on the copy only:
+    * plans built on it see the overrides, the caller's session never
+    * does. Shares the caller's SparkContext, cache and external catalog;
+    * temp views and registered functions are copied.
+    */
+  def cloneSession(spark: SparkSession, conf: (String, String)*): SparkSession = {
+    val c = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+    conf.foreach { case (k, v) => c.conf.set(k, v) }
+    c
+  }
+
   /** The analyzed logical plan behind a DataFrame. */
   def logicalPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan

@@ -119,23 +119,69 @@ class SparkEngineSpec extends AnyFunSuite {
       "SPARK_GRAFT_CPUS" -> "3")) === "local[2,3]")
   }
 
-  test("only SparkEngine builds sessions or sets builder conf in src/main") {
-    // Seven hand-written builders drifted apart before the factory (one
-    // lacked the 65536 ceiling, two lacked rdd.compress); this keeps a
-    // new one from creeping back in.
+  test("variant: one clone per session and conf, the caller's conf never written") {
+    // A fresh clone per call would recompile every stage it runs (Spark
+    // caches generated code per session class loader).
+    val s = TestSpark.spark.newSession()
+    val aqe = "spark.sql.adaptive.enabled"
+    val v = SparkEngine.variant(s, aqe -> "false")
+    assert(v.conf.get(aqe) === "false" && s.conf.get(aqe) === "true")
+    assert(SparkEngine.variant(s, aqe -> "false") eq v)
+    assert(!(SparkEngine.variant(TestSpark.spark, aqe -> "false") eq v))
+    s.conf.set("spark.sql.shuffle.partitions", "3")
+    val v2 = SparkEngine.variant(s, aqe -> "false")
+    assert(!(v2 eq v) && v2.conf.get("spark.sql.shuffle.partitions") === "3")
+    assert(v2.conf.get(aqe) === "false" && s.conf.get(aqe) === "true")
+  }
+
+  /** Every src/main Scala file as (file name, path, source). */
+  private def mainSources(): List[(String, String, String)] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
     val files = java.nio.file.Files.walk(root)
-    val offenders =
-      try files.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala") &&
-          p.getFileName.toString != "SparkEngine.scala")
-        .filter { p =>
-          val src = java.nio.file.Files.readString(p)
-          src.contains("SparkSession.builder(") || src.contains(".config(")
-        }.map(_.toString).toList
-      finally files.close()
+    try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => (p.getFileName.toString, p.toString,
+        java.nio.file.Files.readString(p))).toList
+    finally files.close()
+  }
+
+  test("only SparkEngine builds sessions or sets builder conf in src/main") {
+    // Seven hand-written builders drifted apart before the factory (one
+    // lacked the 65536 ceiling, two lacked rdd.compress); this keeps a
+    // new one from creeping back in.
+    val offenders = mainSources().collect {
+      case (name, path, src) if name != "SparkEngine.scala" &&
+        (src.contains("SparkSession.builder(") || src.contains(".config(")) => path
+    }
     assert(offenders.isEmpty, offenders)
+  }
+
+  test("no src/main code flips AQE or the bin width on a session; only Ckpt checkpoints") {
+    // A set/restore of a session conf around a plan build is seen by
+    // every query planned concurrently on that session (the AQE flips
+    // around eager checkpoints, the range-join width). Overrides belong
+    // on a clone (Bridge.cloneSession), and every localCheckpoint goes
+    // through Ckpt, which owns the layout-keeping clone route and the
+    // replication policy. Comment lines are skipped; a flip split over
+    // several lines is still caught.
+    val flip = ("""\.conf\s*\.\s*(?:set|unset)\(\s*(?:"spark\.sql\.adaptive\.enabled"|""" +
+      """"spark\.graft\.rangeJoin\.binWidth"|[\w.]*WidthConf\b)""").r
+    val code = mainSources().map { case (name, path, src) =>
+      (name, path, src.linesIterator.filterNot { l =>
+        val t = l.trim
+        t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+      }.mkString("\n"))
+    }
+    val flips = code.collect {
+      case (name, path, src) if name != "SparkEngine.scala" &&
+        name != "Bridge.scala" && flip.findFirstIn(src).nonEmpty => path
+    }
+    assert(flips.isEmpty, s"session conf flipped in: $flips")
+    val ckpts = code.collect {
+      case (name, path, src) if name != "Ckpt.scala" &&
+        src.contains("localCheckpoint(") => path
+    }
+    assert(ckpts.isEmpty, s"localCheckpoint outside Ckpt in: $ckpts")
   }
 }

@@ -73,6 +73,19 @@ class OrderStatsSpec extends AnyFunSuite {
     assert(got == want)
   }
 
+  test("topK's MapPartitions prints a stable name, not a lambda identity") {
+    // Plan dumps are compared byte for byte across runs; a lambda prints
+    // its per-JVM class and identity hash there.
+    def line() = OrderStats.topK(df, Seq(col("k").desc), 25, "rk", Seq("v" -> "cv"))
+      .queryExecution.executedPlan.toString.linesIterator
+      .filter(_.contains("MapPartitions")).map(_.replaceAll("#\\d+", "#")).toList
+    val first = line()
+    assert(first.length == 1, first)
+    assert(!first.head.contains("$$Lambda") && first.head.contains("OrderStats.TopKRank(2)"),
+      first.head)
+    assert(line() == first)
+  }
+
   test("row number is correct across MULTIPLE range partitions (AQE off)") {
     // With AQE on and small data, everything coalesces into ONE partition
     // and the cross-partition offset logic is never exercised — exactly

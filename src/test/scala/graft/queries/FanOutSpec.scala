@@ -2,15 +2,16 @@ package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, Tables, TestSpark}
+import graft.{Ckpt, SparkEntry, Tables, TestSpark}
 
 import org.apache.spark.storage.StorageLevel
 
 /** Round-11 optimization internals: the size-thresholded scan fan-out
   * (Tables.fanOutSmall) and the scale-adaptive edge-checkpoint level
-  * (Pipeline12.edgeCkptLevel). Both are pure physical choices — these
-  * specs pin (a) the conf hooks actually flip the plan/level and (b)
-  * query values are identical on both paths.
+  * (Ckpt.sized of lineitem). Both are pure physical choices — these
+  * specs pin (a) the fan-out conf hook actually flips the plan and the
+  * level rule picks by budget, and (b) query values are identical on
+  * both fan-out paths.
   */
 class FanOutSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -59,21 +60,15 @@ class FanOutSpec extends AnyFunSuite {
     } finally spark.conf.unset(fanKey)
   }
 
-  test("edgeCkptLevel: memory under the budget, disk above, conf-forceable") {
+  test("edge checkpoint level: memory under the budget, disk above and at 0") {
     val li = Tables(spark, dir, "lineitem")
-    val key = "spark.graft.graph.edgeCkptMemBudget"
     // Default budget (quarter heap) dwarfs the sf0.001 source: memory.
-    assert(Pipeline12.edgeCkptLevel(li) ==
-      StorageLevel.MEMORY_AND_DISK)
-    spark.conf.set(key, "0")
-    try assert(Pipeline12.edgeCkptLevel(li) ==
-      StorageLevel.DISK_ONLY, "budget 0 must force DISK_ONLY (prior behavior)")
-    finally spark.conf.unset(key)
+    assert(Ckpt.sized(li) == StorageLevel.MEMORY_AND_DISK)
+    val src = li.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(Ckpt.sized(src, 10.0, src * 10) == StorageLevel.MEMORY_AND_DISK)
+    assert(Ckpt.sized(src, 10.0, 0) == StorageLevel.DISK_ONLY,
+      "budget 0 must pick DISK_ONLY")
     // A budget just under the 10x source estimate must pick disk too.
-    val est = li.queryExecution.optimizedPlan.stats.sizeInBytes * 10
-    spark.conf.set(key, (est - 1).toString)
-    try assert(Pipeline12.edgeCkptLevel(li) ==
-      StorageLevel.DISK_ONLY)
-    finally spark.conf.unset(key)
+    assert(Ckpt.sized(src, 10.0, src * 10 - 1) == StorageLevel.DISK_ONLY)
   }
 }

@@ -90,11 +90,10 @@ class Pipeline6Spec extends AnyFunSuite {
   }
 
   test("graph queries restore the AQE conf after building their plans") {
-    // q_pagerank / q_bfs_hops toggle spark.sql.adaptive.enabled off
-    // around an eager localCheckpoint (an adaptive plan reports
-    // UnknownPartitioning and would forget the hash(src) layout). The
-    // toggle must never leak into the session — every later query in a
-    // bench run would silently lose AQE.
+    // q_pagerank / q_bfs_hops take their eager checkpoints with AQE off
+    // (an adaptive plan reports UnknownPartitioning and would forget the
+    // hash(src) layout). That setting must never leak into the session —
+    // every later query in a bench run would silently lose AQE.
     val before = spark.conf.get("spark.sql.adaptive.enabled")
     Pipeline6.queries("q_pagerank")(spark, sf)
     assert(spark.conf.get("spark.sql.adaptive.enabled") === before)
@@ -111,5 +110,52 @@ class Pipeline6Spec extends AnyFunSuite {
     assert(srcExchanges === 0,
       s"edge side re-shuffled $srcExchanges times — checkpoint lost its layout:\n" +
         plan.linesIterator.filter(_.contains("Exchange")).mkString("\n"))
+  }
+
+  test("graph queries build concurrently without writing the session's AQE conf") {
+    // Two builders on one AQE-on session, each taking layout-keeping
+    // checkpoints, while a third thread reads the session's AQE flag. A
+    // set/restore bracket around a checkpoint shows the reader `false`
+    // (and any query planned in that window loses AQE); the clone route
+    // in Ckpt.local never writes the caller's conf.
+    val aqe = "spark.sql.adaptive.enabled"
+    val s = spark.newSession()
+    assert(s.conf.get(aqe) === "true")
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val sawOff = new java.util.concurrent.atomic.AtomicInteger(0)
+    val reads = new java.util.concurrent.atomic.AtomicLong(0)
+    val reader = new Thread(() =>
+      while (!done.get()) {
+        if (s.conf.get(aqe) != "true") sawOff.incrementAndGet()
+        reads.incrementAndGet()
+      })
+    reader.setDaemon(true)
+    reader.start()
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val plans =
+      try {
+        val builds = Seq("q_pagerank", "q_bfs_hops").map { q =>
+          Future((1 to 5).map { _ =>
+            Pipeline6.queries(q)(s, sf).queryExecution.executedPlan.toString
+          })
+        }
+        builds.flatMap(Await.result(_, scala.concurrent.duration.Duration(10, "min")))
+      } finally {
+        pool.shutdownNow()
+        done.set(true)
+        reader.join()
+      }
+    assert(reads.get() > 0)
+    assert(sawOff.get() === 0,
+      s"the session's AQE flag read false ${sawOff.get()} times of ${reads.get()}")
+    assert(plans.length === 10)
+    plans.foreach { plan =>
+      val srcExchanges = "Exchange hashpartitioning\\(src#".r.findAllIn(plan).length
+      assert(srcExchanges === 0,
+        s"edge side re-shuffled $srcExchanges times — checkpoint lost its layout:\n" +
+          plan.linesIterator.filter(_.contains("Exchange")).mkString("\n"))
+    }
   }
 }

@@ -2,12 +2,12 @@ package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, Tables, TestSpark}
+import graft.{Ckpt, SparkEntry, Tables, TestSpark}
 
 import org.apache.spark.storage.StorageLevel
 
 /** Round-11 optimization internals: the shared-frame materialization
-  * (Tables.ckptShared) behind the measured multiply-referenced-subtree
+  * (Ckpt.shared) behind the measured multiply-referenced-subtree
   * winners (q_dedup_containment, q_dedup_ngram_jaccard,
   * q_dedup_threshold_curve, q_freq_triples, q_heaps_law,
   * q_vocab_coverage). Storage-only physical choice — these specs pin
@@ -19,38 +19,37 @@ class SharedCkptSpec extends AnyFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
   private val onKey = "spark.graft.sharedCkpt.enabled"
-  private val budgetKey = "spark.graft.sharedCkpt.memBudget"
 
-  test("ckptShared: checkpoint leaf when on, identity when disabled") {
+  private def bytes(df: org.apache.spark.sql.DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes
+
+  test("Ckpt.shared: checkpoint leaf when on, identity when disabled") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val derived = docs.select("doc_id").distinct()
     // Default (enabled): the frame becomes a checkpointed RDD leaf.
-    val on = Tables.ckptShared(docs, derived)
+    val on = Ckpt.shared(docs, derived)
       .queryExecution.executedPlan.toString
     assert(on.contains("Scan ExistingRDD"), on)
     // Kill switch: identity — the original plan, no RDD leaf.
     spark.conf.set(onKey, "false")
     try {
-      val off = Tables.ckptShared(docs, derived)
+      val off = Ckpt.shared(docs, derived)
         .queryExecution.executedPlan.toString
       assert(!off.contains("Scan ExistingRDD"), off)
       assert(off.contains("Scan parquet"), off)
     } finally spark.conf.unset(onKey)
   }
 
-  test("sharedCkptLevel: memory under the budget, disk above/at 0") {
+  test("Ckpt.sized: memory under the budget, disk above/at 0") {
     val docs = Tables(spark, dir, "documents")
     // Default budget (quarter heap) dwarfs the sf0.001 source: memory.
-    assert(Tables.sharedCkptLevel(docs) == StorageLevel.MEMORY_AND_DISK)
-    spark.conf.set(budgetKey, "0")
-    try assert(Tables.sharedCkptLevel(docs) == StorageLevel.DISK_ONLY,
-      "budget 0 must force DISK_ONLY (the memory-sweep hook)")
-    finally spark.conf.unset(budgetKey)
+    assert(Ckpt.sized(docs) == StorageLevel.MEMORY_AND_DISK)
+    val est = bytes(docs) * 10
+    assert(Ckpt.sized(bytes(docs), 10.0, est) == StorageLevel.MEMORY_AND_DISK)
+    assert(Ckpt.sized(bytes(docs), 10.0, 0) == StorageLevel.DISK_ONLY,
+      "budget 0 must pick DISK_ONLY")
     // A budget just under the 10x source estimate must pick disk too.
-    val est = docs.queryExecution.optimizedPlan.stats.sizeInBytes * 10
-    spark.conf.set(budgetKey, (est - 1).toString)
-    try assert(Tables.sharedCkptLevel(docs) == StorageLevel.DISK_ONLY)
-    finally spark.conf.unset(budgetKey)
+    assert(Ckpt.sized(bytes(docs), 10.0, est - 1) == StorageLevel.DISK_ONLY)
   }
 
   test("materialized and pass-through paths value-identical") {
@@ -90,23 +89,18 @@ class SharedCkptSpec extends AnyFunSuite {
   }
 
   test("sizeFactor hint scales the level estimate (round-11 advice)") {
-    val docs = Tables(spark, dir, "documents")
-    val est10 = docs.queryExecution.optimizedPlan.stats.sizeInBytes * 10
+    val src = bytes(Tables(spark, dir, "documents"))
     // Budget just under the default x10 estimate: disk at the default
     // factor, but a site declaring its frame much smaller than the
     // source (sizeFactor 0.1) stays on the memory level.
-    spark.conf.set(budgetKey, (est10 - 1).toString)
-    try {
-      assert(Tables.sharedCkptLevel(docs) == StorageLevel.DISK_ONLY)
-      assert(Tables.sharedCkptLevel(docs, sizeFactor = 0.1) ==
-        StorageLevel.MEMORY_AND_DISK)
-    } finally spark.conf.unset(budgetKey)
-    // Strict zero guard: budget 0 forces DISK_ONLY at ANY factor, even
+    val budget = src * 10 - 1
+    assert(Ckpt.sized(src, 10.0, budget) == StorageLevel.DISK_ONLY)
+    assert(Ckpt.sized(src, 0.1, budget) == StorageLevel.MEMORY_AND_DISK)
+    // Strict zero guard: budget 0 picks DISK_ONLY at ANY factor, even
     // one that rounds the estimate to 0 (round-11 advice).
-    spark.conf.set(budgetKey, "0")
-    try assert(Tables.sharedCkptLevel(docs, sizeFactor = 0.0) ==
-      StorageLevel.DISK_ONLY)
-    finally spark.conf.unset(budgetKey)
+    for (f <- Seq(0.0, 0.1, 10.0))
+      assert(Ckpt.sized(src, f, 0) == StorageLevel.DISK_ONLY, s"factor $f")
+    assert(Ckpt.sized(0, 10.0, 0) == StorageLevel.DISK_ONLY, "empty source")
   }
 
   test("q_tpch21 plans one lineitem scan and a per-order window (round 12)") {
