@@ -125,14 +125,17 @@ object Ckpt extends org.apache.spark.internal.Logging {
     * driver IS the executor; a cluster deploy must set the executor conf
     * or this would track the wrong process.
     */
-  def sized(source: DataFrame, sizeFactor: Double = 10.0): StorageLevel = {
-    val s = source.sparkSession
-    val heap = s.conf.getOption("spark.executor.memory")
-      .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-      .getOrElse(Runtime.getRuntime.maxMemory)
+  def sized(source: DataFrame, sizeFactor: Double = 10.0): StorageLevel =
     sized(source.queryExecution.optimizedPlan.stats.sizeInBytes, sizeFactor,
-      BigInt(heap) / 4)
-  }
+      budget(source.sparkSession))
+
+  /** A quarter of the executor heap: `spark.executor.memory` when set,
+    * else this JVM's max heap.
+    */
+  def budget(spark: SparkSession): BigInt =
+    BigInt(spark.conf.getOption("spark.executor.memory")
+      .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
+      .getOrElse(Runtime.getRuntime.maxMemory)) / 4
 
   /** The pure rule: memory while `sourceBytes × sizeFactor` fits the
     * budget. The `budget > 0` guard is strict, so a zero budget picks

@@ -39,9 +39,10 @@ final class HttpShell(spark: SparkSession, baseDir: String, port: Int = 3000)
     // Concurrent request handling, like the reference's Axum runtime
     // (tokio serves each connection on the worker pool). A SparkSession
     // is thread-safe for concurrent actions — jobs from parallel requests
-    // interleave in the scheduler — and the one shared-session conf the
-    // lake touches (Tables' nanosAsLong) is set-once-idempotent by
-    // design, so requests cannot bleed state into each other.
+    // interleave in the scheduler. The lake writes no session conf, and
+    // its frame cache hands every request of one file version the same
+    // read-only checkpointed frame, so requests cannot bleed state into
+    // each other.
     pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     server.setExecutor(pool)
     server.start()

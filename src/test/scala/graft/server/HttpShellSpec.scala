@@ -97,6 +97,29 @@ class HttpShellSpec extends AnyFunSuite {
     assert(second.body() === """[{"x":"u","y":2.5,"z":null}]""")
   }
 
+  test("a same-size rewrite with its old mtime restored is served as rewritten") {
+    import graft.operators.Regression
+    val p = Paths.get(lakeDir, "restored.csv")
+    Files.writeString(p, "x,y\n1,2\n2,4\n3,7\n")
+    val reg = """{"x_col":"x","y_col":"y"}"""
+    assert(get("/data/restored/preview").body() === """[{"x":1,"y":2},{"x":2,"y":4},{"x":3,"y":7}]""")
+    val before = post("/data/restored/regression", reg)
+    assert(before.statusCode() === 200)
+    // Same header and byte size; `cp -p` / `rsync -t` put the old mtime back.
+    val mtime = Files.getLastModifiedTime(p)
+    Thread.sleep(20)
+    Files.writeString(p, "x,y\n1,3\n2,5\n3,9\n")
+    Files.setLastModifiedTime(p, mtime)
+    assert(Files.size(p) === 16)
+    assert(get("/data/restored/preview").body() === """[{"x":1,"y":3},{"x":2,"y":5},{"x":3,"y":9}]""")
+    val after = post("/data/restored/regression", reg)
+    val r = Regression.run(
+      spark.read.options(graft.sources.DataLake.CsvOptions).csv(p.toString), "x", "y")
+    assert(after.body() ===
+      s"""{"slope":${r.slope},"intercept":${r.intercept},"r2":${r.r2.map(_.toString).getOrElse("null")}}""")
+    assert(after.body() !== before.body())
+  }
+
   test("delays sorts all *delay* columns desc with nulls first") {
     val r = get("/data/trains/delays?sorting=Desc")
     assert(r.statusCode() === 200)

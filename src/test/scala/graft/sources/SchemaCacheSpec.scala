@@ -1,17 +1,12 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.graftbridge.CoreBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -36,23 +31,8 @@ class SchemaCacheSpec extends AnyFunSuite {
 
   /** (result, Spark jobs started by this thread while `body` ran). */
   private def jobs[T](body: => T): (T, Int) = {
-    val group = s"schema-cache-${System.nanoTime()}"
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "schema cache spec")
-    try {
-      val r = body
-      CoreBridge.flushListenerBus(sc)
-      (r, n.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
+    val (r, started) = LakeTestKit.jobs(sc)(body)
+    (r, started.size)
   }
 
   private def assertSame(got: DataFrame, want: DataFrame): Unit = {
@@ -61,14 +41,13 @@ class SchemaCacheSpec extends AnyFunSuite {
       want.collect().map(_.toString).sorted.toSeq)
   }
 
-  /** A single regular parquet file (Spark writes directories). */
-  private def writeParquetFile(df: DataFrame, target: Path): Unit = {
-    val out = tmpDir().resolve("d")
-    df.coalesce(1).write.parquet(out.toString)
-    val part = Files.list(out).iterator.asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
-  }
+  /** A lake with a zero frame budget: every load goes through
+    * `SchemaCache.read`, which the frame cache would otherwise bypass.
+    */
+  private def uncachedLake(dir: Path): DataLake = new DataLake(spark, dir.toString, 0)
+
+  private def writeParquetFile(df: DataFrame, target: Path): Unit =
+    LakeTestKit.writeParquetFile(df, target)
 
   private val RawUs = 1709294400000000L
 
@@ -90,7 +69,7 @@ class SchemaCacheSpec extends AnyFunSuite {
   test("a second load of an unchanged CSV starts no Spark job") {
     val dir = tmpDir()
     Files.writeString(dir.resolve("t.csv"), "id,name,score\n1,a,1.5\n2,\"b \"\"q\"\"\",\n3,c,-2.0\n")
-    val lake = new DataLake(spark, dir.toString)
+    val lake = uncachedLake(dir)
     val (_, cold) = jobs(lake.load("t"))
     assert(cold > 0, "a cold CSV load infers its schema in Spark jobs")
     val (warm, n) = jobs(lake.load("t"))
@@ -102,7 +81,7 @@ class SchemaCacheSpec extends AnyFunSuite {
     val dir = tmpDir()
     writeParquetFile(Seq((1L, "x", 2.5), (2L, null, 3.5)).toDF("k", "s", "v"),
       dir.resolve("region.parquet"))
-    val lake = new DataLake(spark, dir.toString)
+    val lake = uncachedLake(dir)
     val (_, cold) = jobs(lake.load("region"))
     assert(cold > 0, "a cold parquet load reads the footer in a Spark job")
     val (warm, n) = jobs(lake.load("region"))
@@ -118,7 +97,7 @@ class SchemaCacheSpec extends AnyFunSuite {
     val dir = tmpDir()
     val p = dir.resolve("t.csv")
     Files.writeString(p, "a,b\n1,2\n")
-    val lake = new DataLake(spark, dir.toString)
+    val lake = uncachedLake(dir)
     lake.load("t"); lake.load("t")
     Files.writeString(p, "c,d,e\n1,2,3\n4,5,6\n")
     val got = lake.load("t")
@@ -130,7 +109,7 @@ class SchemaCacheSpec extends AnyFunSuite {
     val dir = tmpDir()
     val p = dir.resolve("t.csv")
     Files.writeString(p, "a,b\n1,2\n3,4\n")
-    val lake = new DataLake(spark, dir.toString)
+    val lake = uncachedLake(dir)
     assert(lake.load("t").schema("a").dataType === IntegerType)
     lake.load("t")
     Files.writeString(p, "a,b\nx1,2\nyz,4.5\n")
@@ -140,11 +119,25 @@ class SchemaCacheSpec extends AnyFunSuite {
     assertSame(got, plainCsv(p))
   }
 
+  test("a same-size rewrite with its old mtime restored invalidates the entry") {
+    val dir = tmpDir()
+    val p = dir.resolve("t.csv")
+    Files.writeString(p, "a,b\n1,2\n")
+    SchemaCache.read(spark, "csv", p.toString, DataLake.CsvOptions)
+    val mtime = Files.getLastModifiedTime(p)
+    Thread.sleep(20)
+    Files.writeString(p, "a,b\nx,2\n")
+    Files.setLastModifiedTime(p, mtime)
+    val got = SchemaCache.read(spark, "csv", p.toString, DataLake.CsvOptions)
+    assert(got.schema("a").dataType === StringType)
+    assertSame(got, plainCsv(p))
+  }
+
   test("rewriting a parquet file with new types invalidates the entry") {
     val dir = tmpDir()
     val p = dir.resolve("t.parquet")
     writeParquetFile(Seq((1, 2)).toDF("a", "b"), p)
-    val lake = new DataLake(spark, dir.toString)
+    val lake = uncachedLake(dir)
     lake.load("t"); lake.load("t")
     writeParquetFile(Seq(("one", 2.5)).toDF("a", "b"), p)
     val got = lake.load("t")
@@ -155,7 +148,7 @@ class SchemaCacheSpec extends AnyFunSuite {
   test("a Spark-written parquet directory is never cached") {
     val dir = tmpDir()
     Seq((1, "a")).toDF("k", "v").write.parquet(dir.resolve("both.parquet").toString)
-    val lake = new DataLake(spark, dir.toString)
+    val lake = uncachedLake(dir)
     lake.load("both")
     val (again, n) = jobs(lake.load("both"))
     assert(n > 0, "a directory must take the uncached read every time")
@@ -166,7 +159,7 @@ class SchemaCacheSpec extends AnyFunSuite {
     val dir = tmpDir()
     val p = dir.resolve("t.csv")
     Files.writeString(p, "id,at\n1,2024-03-01 12:00:00\n")
-    val lake = new DataLake(spark, dir.toString)
+    val lake = uncachedLake(dir)
     val key = "spark.sql.timestampType"
     val before = spark.conf.getOption(key)
     try {
@@ -185,7 +178,7 @@ class SchemaCacheSpec extends AnyFunSuite {
   test("a spark.sql conf that changes parquet inference is part of the key") {
     val dir = tmpDir()
     writeRawTs(dir.resolve("t.parquet"), "MICROS", utc = false)
-    val lake = new DataLake(spark, dir.toString)
+    val lake = uncachedLake(dir)
     val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
     val before = spark.conf.getOption(key)
     try {
@@ -231,7 +224,7 @@ class SchemaCacheSpec extends AnyFunSuite {
     val dir = tmpDir()
     val rows = (1 to 200).map(i => s"$i,n$i,${i * 0.5}").mkString("\n")
     Files.writeString(dir.resolve("t.csv"), s"id,name,v\n$rows\n")
-    val lake = new DataLake(spark, dir.toString)
+    val lake = uncachedLake(dir)
     val pool = Executors.newFixedThreadPool(8)
     val start = new CyclicBarrier(8)
     try {
