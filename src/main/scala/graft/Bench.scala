@@ -77,7 +77,7 @@ object Bench {
     // cumulative, so per-query deltas stay correct through a restart.
     val cpuListener = new CpuListener
     def buildSession(): SparkSession = {
-      val s = SparkEngine.session(profile = SparkEngine.Profile.Contract)
+      val s = SparkEngine.session()
       s.sparkContext.addSparkListener(cpuListener)
       s
     }

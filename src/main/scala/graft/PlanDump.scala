@@ -12,13 +12,16 @@ object PlanDump {
       case "--sf" :: dir :: rest => (dir, rest)
       case rest => ("/root/testdata/sf0.001", rest)
     }
-    // The gate's session (Contract profile). SPARK_GRAFT_CONF lets plan
-    // dumps flip conf-hooked plan branches (fan-out, quantile-sketch
+    // The session that serves, planned on its AQE-off variant so a dump
+    // is the static plan, comparable across changes (the plans/ records)
+    // rather than an unexecuted AdaptiveSparkPlan. SPARK_GRAFT_CONF lets
+    // plan dumps flip conf-hooked plan branches (fan-out, quantile-sketch
     // checkpoint) for before/after captures.
-    val spark = SparkEngine.session(profile = SparkEngine.Profile.Contract)
+    val spark = SparkEngine.session()
+    val planning = SparkEngine.variant(spark, "spark.sql.adaptive.enabled" -> "false")
     names.foreach { name =>
       println(s"\n===== $name =====")
-      SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+      SparkEntry.queries(name)(planning, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -10,7 +10,7 @@ package graft
   * wall−run/cores residual cannot separate.
   *
   * Usage: `sbt "runMain graft.ProfileQ [--sf <dir>] q_foo [q_bar ...]"`.
-  * Same session as Bench (the factory's Contract profile) and the same
+  * Same session as Bench (the factory's one session) and the same
   * listener (CpuListener).
   */
 object ProfileQ {
@@ -19,7 +19,7 @@ object ProfileQ {
       case "--sf" :: dir :: rest => (dir, rest)
       case rest => ("/root/testdata/sf0.1", rest)
     }
-    val spark = SparkEngine.session(profile = SparkEngine.Profile.Contract)
+    val spark = SparkEngine.session()
     val listener = new CpuListener
     spark.sparkContext.addSparkListener(listener)
     def snap(): MetricSnap = {

@@ -23,7 +23,7 @@ object ScaleProbe {
     val scaledCells = args(2).toInt
     val fixedBits = args(3).toInt
     val scaledBits = args(4).toInt
-    val spark = SparkEngine.session(profile = SparkEngine.Profile.Contract)
+    val spark = SparkEngine.session()
     val e = Similarity.withNorm(Tables(spark, dir, "embeddings"))
 
     def time(label: String)(f: => Unit): Unit = {

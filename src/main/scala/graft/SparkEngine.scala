@@ -4,32 +4,17 @@ import org.apache.spark.sql.SparkSession
 
 /** The one session factory: every main, the HTTP shell, the tests and
   * perfbench build their `SparkSession` through [[session]], from one
-  * conf list ([[conf]]).
-  *
-  * Two profiles, because two groups of callers need different values:
-  *  - [[Profile.Production]]: AQE on, [[graft.plans.GraftExtensions]]
-  *    installed — the HTTP shell, BenchStream, ExplainAudit, ScaleGen,
-  *    the tests and perfbench;
-  *  - [[Profile.Contract]]: the same list with AQE off and no
-  *    extensions — the gate mains (Bench, Verify, ProfileQ, PlanDump,
-  *    ScaleProbe), whose plans are the recorded contract.
+  * conf list ([[conf]]). There is one session: AQE on and
+  * [[graft.plans.GraftExtensions]] installed. The gate mains (Verify,
+  * Bench) run the session that serves, so the oracle gates the
+  * extension rules too. A caller that needs other planning (PlanDump's
+  * AQE-off dumps, layout-keeping checkpoints) plans on a [[variant]].
   *
   * Library code must never depend on builder-time conf: anything
   * semantic (ANSI-safe casts, null ordering) is handled per-expression
   * in the operators instead (see [[graft.operators]]).
   */
 object SparkEngine {
-  sealed abstract class Profile(val aqe: Boolean, val extensions: Boolean)
-  object Profile {
-    case object Production extends Profile(aqe = true, extensions = true)
-    /** Gate mains: AQE's stage-materialization wait showed a
-      * nondeterministic multi-minute stall on trivial sort+write plans
-      * (~300 s), and at local gate scale runtime re-planning only adds
-      * variance. Pinned off for stable, comparable plans and numbers.
-      */
-    case object Contract extends Profile(aqe = false, extensions = false)
-  }
-
   /** Local cores: `SPARK_GRAFT_CPUS`, else every core the JVM sees. */
   def defaultCores(env: Map[String, String] = sys.env,
       available: Int = Runtime.getRuntime.availableProcessors): Int =
@@ -114,12 +99,12 @@ object SparkEngine {
     * Pinned conf mirrors SURVEY.md §7 phase A: UTC, no UI, shuffle
     * partitions sized for local cores rather than the 200 default.
     */
-  def conf(profile: Profile, master: String, shufflePartitions: Int,
+  def conf(master: String, shufflePartitions: Int,
       env: Map[String, String] = sys.env): Seq[(String, String)] = Seq(
     "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
     // Heap-aware broadcast ceiling — see broadcastThreshold above.
     "spark.sql.autoBroadcastJoinThreshold" -> broadcastThreshold().toString,
-    "spark.sql.adaptive.enabled" -> profile.aqe.toString,
+    "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false",
     // ICU case mapping routes upper/lower through
@@ -206,9 +191,9 @@ object SparkEngine {
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
-    // Catalog-table sinks (Sinks.writeBucketed) land under a stable
-    // scratch root instead of ./spark-warehouse in whatever cwd the
-    // JVM happened to start in. Deployments override per cluster.
+    // Catalog tables (`saveAsTable`) land under a stable scratch root
+    // instead of ./spark-warehouse in whatever cwd the JVM happened to
+    // start in. Deployments override per cluster.
     "spark.sql.warehouse.dir" -> (sys.props("java.io.tmpdir") + "/graft-warehouse"),
   ) ++
     // Multi-process masters launch bare executor JVMs: they need this
@@ -219,22 +204,18 @@ object SparkEngine {
     localDir(env).map("spark.local.dir" -> _) ++
     passThrough(env.get("SPARK_GRAFT_CONF"))
 
-  /** Builds (or returns the live) session for `profile`. The defaults
-    * come from the machine: [[defaultMaster]] and [[defaultCores]].
+  /** Builds (or returns the live) session. The defaults come from the
+    * machine: [[defaultMaster]] and [[defaultCores]].
     */
   def session(master: String = defaultMaster(),
-      shufflePartitions: Int = defaultCores(),
-      profile: Profile = Profile.Production): SparkSession = {
-    val b = conf(profile, master, shufflePartitions)
+      shufflePartitions: Int = defaultCores()): SparkSession = {
+    // FastHashRule (md5 → Md5Fast, the per-row JCA-lookup fix),
+    // RangeBinRule and the graft_* SQL functions, on every session.
+    val s = conf(master, shufflePartitions)
       .foldLeft(SparkSession.builder().master(master).appName("graft")) {
         case (acc, (k, v)) => acc.config(k, v)
       }
-    // Full extension stack in production: FastHashRule (md5 → Md5Fast,
-    // the per-row JCA-lookup fix) and AsofStrategy (native as-of
-    // planning). Library queries also work without them — the rule is
-    // an optimization, the strategy only plans AsofJoinNode.
-    val s = (if (profile.extensions)
-      b.withExtensions(new graft.plans.GraftExtensions().apply) else b)
+      .withExtensions(new graft.plans.GraftExtensions().apply)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -8,16 +8,14 @@ object Verify {
     // Optional extra args: restrict to the named queries (local iteration;
     // the driver always calls with exactly two args → full catalog).
     val only = rest.toSet
-    // Contract profile (AQE off). SPARK_GRAFT_MASTER overrides the master
-    // — the round-8 invariance sweep runs the FULL catalog on
-    // local-cluster[2,16,…] (two real executor processes: serde, netty
-    // shuffle, and the replicated-Ckpt write path that single-JVM
-    // local[] can never exercise); the factory forwards the app
-    // classpath to those executors. The physical-invariance sweep runs
-    // with SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=true": production
-    // sessions run AQE on, so the catalog must hash-match under runtime
-    // re-planning (partition coalescing, skew splits) too.
-    val spark = SparkEngine.session(profile = SparkEngine.Profile.Contract)
+    // The session that serves (AQE on, GraftExtensions), so the oracle
+    // gates what ships, extension rewrites included. SPARK_GRAFT_MASTER
+    // overrides the master — the round-8 invariance sweep runs the FULL
+    // catalog on local-cluster[2,16,…] (two real executor processes:
+    // serde, netty shuffle, and the replicated-Ckpt write path that
+    // single-JVM local[] can never exercise); the factory forwards the
+    // app classpath to those executors.
+    val spark = SparkEngine.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }

@@ -13,7 +13,8 @@ import graft.functions.{DotProduct, Md5Fast}
   * `spark.sql.extensions=graft.plans.GraftExtensions` (works for any
   * session the user builds, including spark-submit on a cluster).
   *
-  * Two hook kinds:
+  * Every session [[graft.SparkEngine]] builds installs them, so the
+  * DuckDB oracle gates each rewrite across the catalog. Three hooks:
   *  - optimizer rule [[FastHashRule]]: transparently rewrites the
   *    built-in `md5` to [[graft.functions.Md5Fast]] (identical output,
   *    no per-row MessageDigest provider lookup) — SQL users get the fast
@@ -66,7 +67,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => FastHashRule)
     ext.injectOptimizerRule(_ => RangeBinRule)
-    ext.injectPlannerStrategy(_ => AsofStrategy)
     ext.injectFunction((
       new FunctionIdentifier("graft_md5"),
       new ExpressionInfo(classOf[Md5Fast].getName, "graft_md5"),

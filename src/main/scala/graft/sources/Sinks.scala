@@ -49,6 +49,4 @@ object Sinks {
     val w = df.write.mode(mode)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).orc(path)
   }
-
-  // Bucketed+sorted table writes live in [[Buckets]].
 }

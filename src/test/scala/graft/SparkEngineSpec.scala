@@ -8,9 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * Spark's stock 10 MB so plans stay bit-identical to an unconfigured
   * session; below the 5 GiB crossover it derates linearly so a small
   * driver never plans a broadcast build its heap can't hold ("Not enough
-  * memory to build and broadcast"). The rest pins the one conf list, its
-  * two profiles, the machine-derived defaults, and that no other main
-  * hand-writes a builder.
+  * memory to build and broadcast"). The rest pins the one conf list and
+  * the one session, the machine-derived defaults, that no other main
+  * hand-writes a builder, and that src/main holds nothing only tests
+  * reach.
   */
 class SparkEngineSpec extends AnyFunSuite {
   private val MiB = 1L << 20
@@ -61,7 +62,7 @@ class SparkEngineSpec extends AnyFunSuite {
     // key must land in the session conf (Verify used to fold it in FIRST
     // and silently lose overrides of pinned keys — round-10 advice).
     val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val c = SparkEngine.conf(SparkEngine.Profile.Contract, "local[4]", 4,
+    val c = SparkEngine.conf("local[4]", 4,
       Map("SPARK_GRAFT_CONF" -> s"$key=128"))
     assert(c.last === key -> "128")
     val s = TestSpark.spark
@@ -82,31 +83,18 @@ class SparkEngineSpec extends AnyFunSuite {
 
   test("the shared session carries the Production conf list") {
     val s = TestSpark.spark
-    SparkEngine.conf(SparkEngine.Profile.Production, "local[4]", 4)
+    SparkEngine.conf("local[4]", 4)
       .toMap.foreach { case (k, v) =>
         // Spark qualifies the warehouse path to a URI (file:/...).
         assert(s.conf.get(k).stripPrefix("file:") === v, k)
       }
   }
 
-  test("Contract and Production differ only in AQE and the extensions") {
-    import SparkEngine.Profile.{Contract, Production}
-    val env = Map("SPARK_GRAFT_CONF" -> "spark.graft.test.k=v")
-    val prod = SparkEngine.conf(Production, "local[4]", 4, env)
-    val gate = SparkEngine.conf(Contract, "local[4]", 4, env)
-    assert(prod.map(_._1) === gate.map(_._1))
-    assert(prod.diff(gate) === Seq("spark.sql.adaptive.enabled" -> "true"))
-    assert(gate.diff(prod) === Seq("spark.sql.adaptive.enabled" -> "false"))
-    assert(Production.extensions && !Contract.extensions)
-  }
-
   test("local-cluster masters get the app classpath on their executors") {
     val key = "spark.executor.extraClassPath"
-    val cluster = SparkEngine.conf(SparkEngine.Profile.Contract,
-      "local-cluster[2,1,1024]", 4, Map.empty).toMap
+    val cluster = SparkEngine.conf("local-cluster[2,1,1024]", 4, Map.empty).toMap
     assert(cluster.get(key) === Some(sys.props("java.class.path")))
-    assert(!SparkEngine.conf(SparkEngine.Profile.Contract, "local[4]", 4,
-      Map.empty).toMap.contains(key))
+    assert(!SparkEngine.conf("local[4]", 4, Map.empty).toMap.contains(key))
   }
 
   test("default cores and master come from the machine unless pinned") {
@@ -187,5 +175,57 @@ class SparkEngineSpec extends AnyFunSuite {
         materialize.findFirstIn(src).nonEmpty => path
     }
     assert(ckpts.isEmpty, s"localCheckpoint, cache or persist outside Ckpt in: $ckpts")
+  }
+
+  test("one session: no src/main file names a profile; every session has GraftExtensions") {
+    // The gates run the session that serves, so the oracle gates every
+    // extension rewrite. A second profile would split them again.
+    val named = mainSources().collect {
+      case (_, path, src) if """\bProfile\b""".r.findFirstIn(src).nonEmpty => path
+    }
+    assert(named.isEmpty, s"a session profile is named in: $named")
+    val s = TestSpark.spark
+    assert(s.conf.get("spark.sql.adaptive.enabled") === "true")
+    assert(s.catalog.functionExists("graft_md5"))
+    import org.apache.spark.sql.functions.{col, md5}
+    val plan = s.range(1).select(md5(col("id").cast("string")).as("h"))
+      .queryExecution.optimizedPlan.toString
+    assert(plan.contains("graft_md5(") && """\bmd5\(""".r.findFirstIn(plan).isEmpty, plan)
+  }
+
+  test("nothing in src/main is reached only by tests") {
+    // A top-level object, class or trait that no other src/main code
+    // names ships only for its spec. Mains are entry points; the
+    // allowlist holds classes Spark loads by name.
+    val loadedByName = Set("RangeSource") // format("graft.sources.RangeSource")
+    // Comment lines, trailing `//` comments and string literals are not code.
+    val code = mainSources().map { case (_, path, src) =>
+      path -> "(?s)\"\"\".*?\"\"\"".r.replaceAllIn(src, "").linesIterator.map { l =>
+        val t = l.trim
+        if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) ""
+        else """(^|\s)//.*""".r.replaceAllIn(""""(?:[^"\\]|\\.)*"""".r.replaceAllIn(l, ""), "")
+      }.mkString("\n")
+    }
+    val decl = ("""(?m)^(?:(?:final|sealed|abstract|case|implicit|private(?:\[\w+\])?)\s+)*""" +
+      """(?:object|class|trait)\s+(\w+)""").r
+    // name -> (path, start, end) of each top-level declaration; a
+    // declaration runs to the next one, and same-name companions count
+    // as one.
+    val decls = code.flatMap { case (path, src) =>
+      val ms = decl.findAllMatchIn(src).toList
+      ms.zip(ms.drop(1).map(_.start) :+ src.length)
+        .map { case (m, end) => m.group(1) -> (path, m.start, end) }
+    }.groupMap(_._1)(_._2)
+    val byPath = code.toMap
+    val dead = decls.toSeq.collect {
+      case (name, own) if !loadedByName(name) &&
+        !own.exists { case (p, a, b) => byPath(p).substring(a, b).contains("def main(") } &&
+        !code.exists { case (path, src) =>
+          ("\\b" + name + "\\b").r.findAllMatchIn(src).exists { m =>
+            !own.exists { case (p, a, b) => p == path && a <= m.start && m.start < b }
+          }
+        } => name
+    }.sorted
+    assert(dead.isEmpty, s"named by no src/main code but their own: $dead")
   }
 }

@@ -24,6 +24,9 @@ final case class RegrResult(
   * via `functions.udaf` gives `regr_all(x, y)` usable inside any
   * `groupBy` — thousands of per-group regressions in one shuffle, closed
   * forms evaluated per group inside `finish`, nothing on the driver.
+  * No query or route registers it: the `/regression` route and
+  * q_regression run `Regression.run`. It lives in the test tree, where
+  * RegrAggregatorSpec checks it against that operator.
   *
   * Null semantics follow the reference (main.rs:163-164): callers feed
   * `coalesce(try_cast(c, double), 0.0)` per input, and every row counts.

@@ -23,10 +23,13 @@ import org.apache.spark.sql.graftbridge.Bridge
   * its timestamp. Zero extra memory beyond one buffered right row; no
   * pair-space blowup; same cost shape as a sort-merge join.
   *
-  * [[graft.operators.AsofJoin]] (union + window) stays the portable
-  * formulation — it runs on any session. This operator needs the
-  * [[GraftExtensions]]-registered strategy and is the plan you want when
-  * the as-of join IS the query (one sweep, no row union, no window state).
+  * [[graft.operators.AsofJoin]] (union + window) is the as-of join that
+  * ships: no query, route or session plans this operator, and the
+  * `nearest` strategy (q_asof_nearest) is one the merge sweep cannot
+  * express. It lives in the test tree as an independent second
+  * formulation that NativeAsofSpec checks the portable operator
+  * against, and it plans only on [[NativeAsofSession.spark]], whose
+  * planner carries [[AsofStrategy]].
   */
 object NativeAsof {
 
@@ -93,8 +96,8 @@ final case class AsofJoinNode(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsofJoinNode]] → [[AsofJoinExec]]. Registered by
-  * [[GraftExtensions]] via `injectPlannerStrategy`.
+/** Plans [[AsofJoinNode]] → [[AsofJoinExec]]. Only
+  * [[NativeAsofSession.spark]] installs it.
   */
 object AsofStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -233,4 +236,23 @@ final case class AsofJoinExec(
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): AsofJoinExec =
     copy(left = newLeft, right = newRight)
+}
+
+/** The shared test session's context with [[AsofStrategy]] in the
+  * planner: a sibling session built once, so the shared session keeps
+  * the planner that ships.
+  */
+object NativeAsofSession {
+  lazy val spark: SparkSession = {
+    val shared = graft.TestSpark.spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try SparkSession.builder()
+      .withExtensions(_.injectPlannerStrategy(_ => AsofStrategy))
+      .getOrCreate()
+    finally {
+      SparkSession.setActiveSession(shared)
+      SparkSession.setDefaultSession(shared)
+    }
+  }
 }

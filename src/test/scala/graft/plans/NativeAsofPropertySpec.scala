@@ -6,8 +6,6 @@ import org.scalacheck.Prop.forAllNoShrink
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.TestSpark
-
 /** Adversarial property coverage for the native as-of join exec (the
   * custom LogicalPlan + merge-sweep SparkPlan): backward and forward,
   * with and without tolerance, against a brute-force in-test oracle over
@@ -18,7 +16,7 @@ import graft.TestSpark
   * partitions (the exec must re-shuffle and sweep correctly regardless).
   */
 object NativeAsofPropertySpec extends Properties("nativeasof") {
-  private lazy val spark = TestSpark.spark
+  private lazy val spark = NativeAsofSession.spark
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(10)

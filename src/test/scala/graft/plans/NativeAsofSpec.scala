@@ -9,19 +9,7 @@ import graft.operators.AsofJoin
 
 class NativeAsofSpec extends AnyFunSuite {
 
-  private def withExtSession[A](f: SparkSession => A): A = {
-    val shared = graft.TestSpark.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s = SparkSession.builder()
-        .withExtensions(new GraftExtensions().apply).getOrCreate()
-      f(s)
-    } finally {
-      SparkSession.setActiveSession(shared)
-      SparkSession.setDefaultSession(shared)
-    }
-  }
+  private def withExtSession[A](f: SparkSession => A): A = f(NativeAsofSession.spark)
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 

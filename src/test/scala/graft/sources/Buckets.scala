@@ -9,7 +9,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sides; bucketing both tables on the join key with equal bucket counts
   * makes every future join on that key zip-partition bucket files
   * directly (`SortMergeJoin` with no `Exchange` child). The write pays
-  * one shuffle; every downstream query skips it.
+  * one shuffle; every downstream query skips it. No query writes a
+  * bucketed table, so this lives in the test tree beside BucketsSpec,
+  * which pins the exchange-free plan.
   */
 object Buckets {
 
