@@ -36,7 +36,9 @@ import org.apache.spark.sql.SparkSession
   * snapshot also carries `spill_disk` and `shuffle_write` byte maps
   * (non-zero queries only): spill>0-but-completed is the
   * memory-pressure evidence, and shuffle bytes is the per-query
-  * footprint the shuffle-minimization claims cite.
+  * footprint the shuffle-minimization claims cite. `compiles` and
+  * `compile_ms` (stderr line and ledger row) count the generated classes
+  * the run compiled, so a ledger shows whether pass 2 ran warm.
   *
   * Noise forensics (round 6): two driver rounds running were contaminated
   * by a contended bench machine (r4 ~1.27× inflated catalog-wide; r5 tail
@@ -118,6 +120,12 @@ object Bench {
     // reported (min) wall time — recorded so scale/noise adjudication
     // can cite CPU ∝ work instead of wall-clock on a contended box.
     val cpuOfBest = scala.collection.mutable.Map[String, MetricSnap]()
+    // Classes compiled by that run and their compile ms, from Spark's
+    // JVM-wide codegen counters (Bench runs one query at a time).
+    val codegenOfBest = scala.collection.mutable.Map[String, (Long, Double)]()
+    def codegen(): (Long, Double) = (
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1e6)
     val timingsBest = scala.collection.mutable.Map[String, Double]()
     val catalog = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
@@ -135,6 +143,7 @@ object Bench {
       }
       org.apache.spark.graftbridge.CoreBridge.flushListenerBus(s.sparkContext)
       val before = cpuListener.snapshot()
+      val cg0 = codegen()
       val t0 = System.nanoTime()
       val ok =
         try { fn(s, sfDir).write.format("noop").mode("overwrite").save(); true }
@@ -148,13 +157,17 @@ object Bench {
       if (!s.sparkContext.isStopped)
         org.apache.spark.graftbridge.CoreBridge.flushListenerBus(s.sparkContext)
       val d = cpuListener.snapshot() - before
+      val cg = codegen()
+      val (compiles, compileMs) = (cg._1 - cg0._1, cg._2 - cg0._2)
       if (ok && sec < timingsBest.getOrElse(name, Double.MaxValue)) {
         cpuOfBest(name) = d
+        codegenOfBest(name) = (compiles, compileMs)
         timingsBest(name) = sec
       }
       System.err.println(
         f"[bench] $tag $name $sec%.2fs cpu=${d.cpuS}%.2fs run=${d.runS}%.2fs" +
-          f" spill=${d.spillDisk}%d shw=${d.shufWrite}%d${if (ok) "" else " FAILED"}")
+          f" spill=${d.spillDisk}%d shw=${d.shufWrite}%d" +
+          f" compiles=$compiles%d compile_ms=$compileMs%.1f${if (ok) "" else " FAILED"}")
       // Drop the blocks pinned by this run's eager localCheckpoints
       // (graph edge frames, OrderStats partitionings, ...) BEFORE the
       // next run. Checkpointed RDDs stay in the block manager until the
@@ -163,9 +176,7 @@ object Bench {
       // squeeze execution memory, and surface as the multi-minute GC /
       // time-to-safepoint stalls both contaminated driver rounds showed.
       // Outside the timed window; the finished query's frames are dead.
-      if (!s.sparkContext.isStopped)
-        s.sparkContext.getPersistentRDDs.valuesIterator
-          .foreach(_.unpersist(blocking = false))
+      Ckpt.releaseAll(s)
       if (ok) Some(sec) else None
     }
     val timings = (1 to passes).map { pass =>
@@ -263,7 +274,9 @@ object Bench {
           s""""loadavg_before":$loadBefore,"query":"$q","sec":$v""" +
           opt(_.cpuS, "cpu_s", q) + opt(_.runS, "run_s", q) +
           optB(_.spillDisk, "spill_disk", q) +
-          optB(_.shufWrite, "shuffle_write", q) + "}\n"
+          optB(_.shufWrite, "shuffle_write", q) +
+          codegenOfBest.get(q).map { case (n, ms) =>
+            f""","compiles":$n%d,"compile_ms":$ms%.1f""" }.getOrElse("") + "}\n"
       }.mkString
       java.nio.file.Files.writeString(ledger, rows,
         java.nio.file.StandardOpenOption.CREATE,

@@ -175,6 +175,21 @@ object Ckpt extends org.apache.spark.internal.Logging {
     if (on) local(df, sized(source, sizeFactor), keepLayout = true) else df
   }
 
+  /** Frees the blocks of every persistent RDD of the session's context:
+    * the checkpoints of a finished query (graph edge frames, OrderStats
+    * partitionings, ...), which otherwise stay until the driver GC
+    * collects their handles. Only for the gate and probe mains, between
+    * queries: a frame still in use cannot recompute past its truncated
+    * lineage. `RDD.unpersist` would log a WARN per local checkpoint for
+    * exactly that; this release does not.
+    */
+  def releaseAll(spark: SparkSession): Unit = {
+    val sc = spark.sparkContext
+    if (!sc.isStopped)
+      sc.getPersistentRDDs.keys.foreach(
+        org.apache.spark.graftbridge.CoreBridge.unpersistRDD(sc, _, blocking = false))
+  }
+
   /** `import graft.Ckpt.CkptOps` and write `.ckpt()` where
     * `.localCheckpoint()` used to sit — same chain position, policy
     * applied.

@@ -46,8 +46,7 @@ object ProfileQ {
           f"construct=${(c1 - c0) / 1e9}%.2fs (jobs=${mC.jobs} stages=${mC.stages}) " +
           f"plan=${(c2 - c1) / 1e9}%.2fs exec=${(c3 - c2) / 1e9}%.2fs " +
           f"jobs=${mA.jobs} stages=${mA.stages} tasks=${mA.tasks}")
-        spark.sparkContext.getPersistentRDDs.valuesIterator
-          .foreach(_.unpersist(blocking = false))
+        Ckpt.releaseAll(spark)
       }
     }
     spark.stop()

@@ -34,24 +34,21 @@ object ScaleProbe {
     // Warm the JVM/codegen once so the comparisons are warm-vs-warm.
     Similarity.ivfKnn(e, nCells = fixedCells, k = 3, iters = 0, nprobe = 1)
       .write.format("noop").mode("overwrite").save()
-    spark.sparkContext.getPersistentRDDs.valuesIterator
-      .foreach(_.unpersist(blocking = false))
+    Ckpt.releaseAll(spark)
 
     for ((label, cells) <- Seq("ivf_fixed" -> fixedCells, "ivf_scaled" -> scaledCells)) {
       time(s"$label cells=$cells") {
         Similarity.ivfKnn(e, nCells = cells, k = 3, iters = 2, nprobe = 2)
           .write.format("noop").mode("overwrite").save()
       }
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
+      Ckpt.releaseAll(spark)
     }
     for ((label, bits) <- Seq("lsh_fixed" -> fixedBits, "lsh_scaled" -> scaledBits)) {
       time(s"$label bits=$bits") {
         Similarity.annLshKnn(e, k = 3, bits = bits)
           .write.format("noop").mode("overwrite").save()
       }
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
+      Ckpt.releaseAll(spark)
     }
     spark.stop()
   }

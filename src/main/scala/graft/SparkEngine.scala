@@ -47,6 +47,19 @@ object SparkEngine {
       maxHeapBytes: Long = Runtime.getRuntime.maxMemory()): Long =
     math.min(10L << 20, maxHeapBytes / 512)
 
+  /** Generated classes Spark's code cache keeps: one per 640 KiB of heap
+    * (3276 at the 2 GiB floor heap), so the cache takes at most ~5 % of
+    * the heap. Spark's default of 100 overflows on a mixed working set,
+    * and each recompile costs Janino and JIT work again. A full-catalog
+    * pass at sf0.001 makes 4332 distinct entries at 32.8 KB of heap each
+    * (the key keeps the generated source) plus 9.7 KB of metaspace: 6.8 %
+    * of a 2 GiB heap, too many for one fixed number at the floor, so the
+    * size follows the heap. Heaps from ~3 GiB hold the whole catalog.
+    */
+  def codegenCacheEntries(
+      maxHeapBytes: Long = Runtime.getRuntime.maxMemory()): Long =
+    maxHeapBytes / (640L << 10)
+
   /** Shuffle/checkpoint scratch directory (round 11, guide §1.3/§2.1):
     * on this sandbox the filesystem behind the default `spark.local.dir`
     * charges every shuffle-file create/write ~50–160 ms of SYSTEM CPU
@@ -195,6 +208,19 @@ object SparkEngine {
     // instead of ./spark-warehouse in whatever cwd the JVM happened to
     // start in. Deployments override per cluster.
     "spark.sql.warehouse.dir" -> (sys.props("java.io.tmpdir") + "/graft-warehouse"),
+    // Spark caches generated classes by (class loader, source). With
+    // artifact isolation on, every session (each newSession(), each
+    // variant clone) runs its tasks on its own executor class loader, so
+    // each one compiled every stage again. Off, every session's tasks
+    // run on the executor's one default loader and a class compiled for
+    // one session serves them all. Safe here: no code adds session
+    // artifacts (addArtifact; SparkEngineSpec scans for it) and nothing
+    // serves Spark Connect, the two users of per-session loaders.
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    // Sized from the heap — see codegenCacheEntries above. The key is
+    // read from Spark's own entry, so a rename fails the build.
+    org.apache.spark.sql.graftbridge.Bridge.CodegenCacheMaxEntries ->
+      codegenCacheEntries().toString,
   ) ++
     // Multi-process masters launch bare executor JVMs: they need this
     // app's classes (target/classes via sbt) on their classpath.
@@ -224,12 +250,13 @@ object SparkEngine {
   /** A session that plans like `spark` with `overrides` applied, without
     * writing `spark`'s conf (a set/restore there races with queries
     * planned concurrently): a clone, cached per (session, overrides) and
-    * remade when `spark`'s conf changes. Not one per call: Spark 4.1
-    * caches generated code per session class loader, so a fresh clone
-    * recompiles every stage it runs (a clone per checkpoint took
-    * q_pagerank's build from 0.58 to 1.96 s). A clone references its
-    * parent, so entries live as long as the JVM; sessions here are
-    * long-lived.
+    * remade when `spark`'s conf changes. A fresh clone compiles nothing
+    * (artifact isolation is off, see [[conf]]), but it still builds its
+    * own session state, analyzer, optimizer and planner with the
+    * extension rules, on first use: a small aggregate took 145 ms on a
+    * fresh clone per run and 92 ms on the cached clone (median of 40).
+    * A clone references its parent, so entries live as long as the JVM;
+    * sessions here are long-lived.
     */
   def variant(spark: SparkSession, overrides: (String, String)*): SparkSession = {
     val conf = spark.conf.getAll

@@ -31,8 +31,7 @@ object Verify {
       // Same hygiene as Bench: drop blocks pinned by this query's eager
       // localCheckpoints so a 200+-query dump doesn't accumulate
       // gigabytes of dead checkpoint storage (GC/safepoint stalls).
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
+      Ckpt.releaseAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -67,9 +67,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * [[releaseCheckpoints]] once results are egressed. Releasing
   * invalidates the not-yet-collected outputs of earlier `running` calls
   * (truncated lineage cannot recompute) — it is an after-egress hygiene
-  * call. (Bench/Verify get the same effect by a blanket
-  * `getPersistentRDDs` unpersist sweep after each query, which covers
-  * every operator's checkpoints at once; this API is the targeted
+  * call. (Bench/Verify get the same effect from `Ckpt.releaseAll` after
+  * each query, which covers every operator's checkpoints at once; this
+  * API is the targeted
   * equivalent for library users embedding the operator in a long-lived
   * session.)
   *
@@ -121,14 +121,13 @@ object OrderStats {
     // would otherwise accumulate dead queue entries unboundedly and
     // re-scan them on each call.
     var n = 0
+    val live = spark.sparkContext.getPersistentRDDs
     val it = checkpoints.iterator()
     while (it.hasNext) {
       val (sc, ref) = it.next()
       val rdd = ref.get()
       if (rdd == null) it.remove()
-      else if ((sc eq spark.sparkContext) &&
-        rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        n += 1
+      else if ((sc eq spark.sparkContext) && live.contains(rdd.id)) n += 1
     }
     n
   }
@@ -144,14 +143,15 @@ object OrderStats {
   def releaseCheckpoints(spark: org.apache.spark.sql.SparkSession,
       blocking: Boolean = false): Int = {
     var n = 0
+    val live = spark.sparkContext.getPersistentRDDs
     val it = checkpoints.iterator()
     while (it.hasNext) {
       val (sc, ref) = it.next()
       val rdd = ref.get()
       if (rdd == null) it.remove()
       else if (sc eq spark.sparkContext) {
-        if (rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE) {
-          rdd.unpersist(blocking)
+        if (live.contains(rdd.id)) {
+          org.apache.spark.graftbridge.CoreBridge.unpersistRDD(sc, rdd.id, blocking)
           n += 1
         }
         it.remove()

@@ -49,7 +49,8 @@ import graft.{Ckpt, DatasetLoadException}
   *    frame let go. An eager unpersist would fail such a request with
   *    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
   *  - Directories and unreadable paths are read uncached, as in
-  *    [[SchemaCache]].
+  *    [[SchemaCache]]. A path whose file was deleted or replaced by a
+  *    directory drops that file's entry and seen key on its next load.
   *
   * Known limit: a rewrite on the same inode, to the same size, within one
   * filesystem timestamp tick of the file's previous change leaves mtime
@@ -124,13 +125,18 @@ final class DataLake private[sources] (spark: SparkSession, baseDir: String,
     * same key admits the file. One entry per real path, as in SchemaCache.
     */
   private val seen = new java.util.HashMap[Path, SchemaCache.Key]()
+  /** The real path each requested path last resolved to, so that a path
+    * that no longer stats as a regular file (deleted, or replaced by a
+    * directory) can drop its entry and its seen key.
+    */
+  private val resolved = new java.util.HashMap[String, Path]()
 
   private def frame(format: String, path: String, options: Map[String, String]): DataFrame = {
     def stat() = SchemaCache.stat(spark, format, path, options)
     def uncached() = SchemaCache.read(spark, format, path, options)
     stat() match {
       case Some((real, key)) if fits(key.size) =>
-        slots.synchronized(lookup(real, key)) match {
+        slots.synchronized { resolved.put(path, real); lookup(real, key) } match {
           case None => uncached()
           case Some((slot, fill)) =>
             if (fill)
@@ -149,12 +155,24 @@ final class DataLake private[sources] (spark: SparkSession, baseDir: String,
       case Some((real, _)) =>
         // Over the budget on its own; drop the entry it had while it fit.
         slots.synchronized {
+          resolved.put(path, real)
           Option(slots.remove(real)).foreach(dropped(real, _, "invalidate"))
         }
         uncached()
-      case None => uncached() // a directory or an unreadable path
+      case None =>
+        // A directory or an unreadable path; forget the file it named.
+        slots.synchronized {
+          Option(resolved.remove(path)).foreach { real =>
+            Option(slots.remove(real)).foreach(dropped(real, _, "invalidate"))
+            seen.remove(real)
+          }
+        }
+        uncached()
     }
   }
+
+  /** Estimated bytes of the resident frames, and the files seen once. */
+  private[sources] def footprint: (BigInt, Int) = slots.synchronized((resident, seen.size))
 
   /** The entry for `key`, and whether this caller fills it; `None` on the
     * first load of `key`, which only marks it seen. A stale entry for

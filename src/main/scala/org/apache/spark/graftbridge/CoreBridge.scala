@@ -27,4 +27,10 @@ object CoreBridge {
         org.slf4j.LoggerFactory.getLogger(getClass)
           .warn(s"listener bus not drained after ${timeoutMs}ms; metrics snapshot is approximate")
     }
+
+  /** Frees an RDD's blocks as `RDD.unpersist` does, minus its warning
+    * that a locally checkpointed RDD cannot be recomputed afterwards.
+    */
+  def unpersistRDD(sc: SparkContext, rddId: Int, blocking: Boolean): Unit =
+    sc.unpersistRDD(rddId, blocking)
 }

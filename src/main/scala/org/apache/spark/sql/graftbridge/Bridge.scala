@@ -30,6 +30,12 @@ object Bridge {
     c
   }
 
+  /** Key of the static conf that sizes Spark's generated-code cache
+    * (`ConfigEntry` is `private[spark]`).
+    */
+  val CodegenCacheMaxEntries: String =
+    org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+
   /** The analyzed logical plan behind a DataFrame. */
   def logicalPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan

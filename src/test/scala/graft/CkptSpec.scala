@@ -54,4 +54,24 @@ class CkptSpec extends AnyFunSuite {
     assert(df.queryExecution.optimizedPlan.collectLeaves().exists(
       _.getClass.getSimpleName.contains("LogicalRDD")))
   }
+
+  test("releaseAll frees every persistent RDD without the lineage WARN") {
+    import Ckpt.CkptOps
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val truncated = "was locally checkpointed"
+    def rddWarnings(body: => Unit): String = LogCapture.warnings("org.apache.spark.rdd")(body)
+    // The WARN that RDD.unpersist logs, captured: the check below can see it.
+    val before = sc.getPersistentRDDs.keySet
+    (1 to 10).toDF("x").ckpt()
+    val rdd = sc.getPersistentRDDs.values.filterNot(r => before(r.id)).head
+    assert(rddWarnings(rdd.unpersist(blocking = true)).contains(truncated))
+    (1 to 100).toDF("x").ckpt().count()
+    (1 to 100).toDF("y").ckpt(StorageLevel.MEMORY_AND_DISK_SER).count()
+    assert(sc.getPersistentRDDs.size >= 2)
+    val warned = rddWarnings(Ckpt.releaseAll(spark))
+    assert(sc.getPersistentRDDs.isEmpty)
+    assert(sc.getRDDStorageInfo.isEmpty)
+    assert(!warned.contains(truncated), warned)
+  }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.sum
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the session factory. The heap-aware broadcast ceiling
@@ -10,8 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * driver never plans a broadcast build its heap can't hold ("Not enough
   * memory to build and broadcast"). The rest pins the one conf list and
   * the one session, the machine-derived defaults, that no other main
-  * hand-writes a builder, and that src/main holds nothing only tests
-  * reach.
+  * hand-writes a builder, that src/main holds nothing only tests
+  * reach, and that generated code stays compiled across sessions and
+  * over Spark's default cache size.
   */
 class SparkEngineSpec extends AnyFunSuite {
   private val MiB = 1L << 20
@@ -27,6 +31,13 @@ class SparkEngineSpec extends AnyFunSuite {
     assert(SparkEngine.broadcastThreshold(2 * GiB) === 4 * MiB)
     assert(SparkEngine.broadcastThreshold(4 * GiB) === 8 * MiB)
     assert(SparkEngine.broadcastThreshold(5 * GiB - 512) < 10 * MiB)
+  }
+
+  test("code cache: one entry per 640 KiB of heap, in the session conf") {
+    assert(SparkEngine.codegenCacheEntries(2 * GiB) === 3276)
+    assert(SparkEngine.codegenCacheEntries(4 * GiB) === 6553)
+    assert(TestSpark.spark.conf.get("spark.sql.codegen.cache.maxEntries") ===
+      SparkEngine.codegenCacheEntries().toString)
   }
 
   test("session conf carries the derated value for this JVM's heap") {
@@ -66,7 +77,6 @@ class SparkEngineSpec extends AnyFunSuite {
       Map("SPARK_GRAFT_CONF" -> s"$key=128"))
     assert(c.last === key -> "128")
     val s = TestSpark.spark
-    import org.apache.spark.sql.SparkSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
@@ -108,8 +118,7 @@ class SparkEngineSpec extends AnyFunSuite {
   }
 
   test("variant: one clone per session and conf, the caller's conf never written") {
-    // A fresh clone per call would recompile every stage it runs (Spark
-    // caches generated code per session class loader).
+    // A fresh clone per call would build its session state again.
     val s = TestSpark.spark.newSession()
     val aqe = "spark.sql.adaptive.enabled"
     val v = SparkEngine.variant(s, aqe -> "false")
@@ -120,6 +129,56 @@ class SparkEngineSpec extends AnyFunSuite {
     val v2 = SparkEngine.variant(s, aqe -> "false")
     assert(!(v2 eq v) && v2.conf.get("spark.sql.shuffle.partitions") === "3")
     assert(v2.conf.get(aqe) === "false" && s.conf.get(aqe) === "true")
+  }
+
+  /** Generated classes Spark compiles while `body` runs. */
+  private def compiles(body: => Unit): Long = {
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+  }
+
+  test("generated code is shared: a newSession and a variant clone compile nothing") {
+    // With per-session executor class loaders, each fresh session
+    // compiled about 5 classes for this query.
+    def run(s: SparkSession): Unit =
+      s.range(0, 1000, 1, 4).selectExpr("id % 7 AS k", "id * 3 AS v")
+        .groupBy("k").agg(sum("v")).write.format("noop").mode("overwrite").save()
+    val s = TestSpark.spark
+    run(s)
+    assert(compiles(run(s)) === 0, "warm on the shared session")
+    assert(compiles(run(s.newSession())) === 0, "newSession")
+    assert(compiles(run(SparkEngine.variant(s, "spark.graft.test.variant" -> "shared"))) === 0,
+      "variant clone")
+  }
+
+  test("a working set over Spark's default 100 classes stays compiled") {
+    val s = TestSpark.spark
+    // 13 queries of 10 union branches: each branch is its own
+    // whole-stage class, distinct because literals are inlined.
+    def round(): Unit = (0 until 13).foreach { q =>
+      (1 to 10).map(b => s.range(0, 1, 1, 1).selectExpr(s"id * ${10 * q + b} + 3 AS v"))
+        .reduce(_ union _).collect()
+    }
+    val cold = compiles(round())
+    assert(cold > 100, s"the working set holds $cold classes")
+    assert(compiles(round()) === 0)
+  }
+
+  /** `src` without its comment lines. */
+  private def code(src: String): String = src.linesIterator.filterNot { l =>
+    val t = l.trim
+    t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+  }.mkString("\n")
+
+  test("no src/main code adds session artifacts") {
+    // Every session shares the executor's default class loader (artifact
+    // isolation is off in SparkEngine.conf); an added artifact would be
+    // visible to every session and would need its own loader again.
+    val adds = mainSources().collect {
+      case (_, path, src) if code(src).contains("addArtifact") => path
+    }
+    assert(adds.isEmpty, s"addArtifact in: $adds")
   }
 
   /** Every src/main Scala file as (file name, path, source). */
@@ -155,13 +214,8 @@ class SparkEngineSpec extends AnyFunSuite {
     // several lines is still caught.
     val flip = ("""\.conf\s*\.\s*(?:set|unset)\(\s*(?:"spark\.sql\.adaptive\.enabled"|""" +
       """"spark\.graft\.rangeJoin\.binWidth"|[\w.]*WidthConf\b)""").r
-    val code = mainSources().map { case (name, path, src) =>
-      (name, path, src.linesIterator.filterNot { l =>
-        val t = l.trim
-        t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
-      }.mkString("\n"))
-    }
-    val flips = code.collect {
+    val sources = mainSources().map { case (name, path, src) => (name, path, code(src)) }
+    val flips = sources.collect {
       case (name, path, src) if name != "SparkEngine.scala" &&
         name != "Bridge.scala" && flip.findFirstIn(src).nonEmpty => path
     }
@@ -170,7 +224,7 @@ class SparkEngineSpec extends AnyFunSuite {
     // CacheManager: a cached frame over a lake file would serve stale rows
     // after a rewrite that keeps the plan.
     val materialize = """localCheckpoint\(|\.(?:cache|persist)\b""".r
-    val ckpts = code.collect {
+    val ckpts = sources.collect {
       case (name, path, src) if name != "Ckpt.scala" &&
         materialize.findFirstIn(src).nonEmpty => path
     }

@@ -152,6 +152,27 @@ class FrameCacheSpec extends AnyFunSuite {
     assert(body(grown) === body(plainCsv(p)))
   }
 
+  test("a deleted file, or one replaced by a directory, leaves no entry and no seen key") {
+    val dir = tmpDir()
+    val a = writeCsv(dir, "a", 300)
+    val b = writeCsv(dir, "b", 300, salt = 1)
+    val lake = new DataLake(spark, dir.toString, Roomy)
+    assert(cached(admitted(lake, "a")))
+    lake.load("b")
+    assert(lake.footprint === ((estimate(a), 1)), "a is resident, b is seen")
+    Files.delete(a)
+    intercept[graft.DatasetLoadException](lake.load("a"))
+    assert(lake.footprint._1 === 0, "a's frame is dropped")
+    val rows = Files.readString(b)
+    Files.delete(b)
+    Files.createDirectory(b)
+    Files.writeString(b.resolve("part-0.csv"), rows)
+    val fromDir = lake.load("b")
+    assert(!cached(fromDir), "a directory is read uncached")
+    assert(body(fromDir) === body(plainCsv(b)))
+    assert(lake.footprint === ((BigInt(0), 0)), "b's seen key is dropped")
+  }
+
   test("LRU evicts the least-recently-used path") {
     val dir = tmpDir()
     val a = writeCsv(dir, "a", 300)
