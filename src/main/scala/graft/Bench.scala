@@ -49,18 +49,6 @@ import org.apache.spark.sql.SparkSession
   * above the core count = contended machine, distrust the tail).
   */
 object Bench {
-  /** Minimal JSON string escaper for builder/env-controlled fields
-    * (ledger label, sf path): quote, backslash, and control chars — a
-    * SPARK_GRAFT_BENCH_LABEL containing a quote previously wrote a
-    * malformed bench_history.jsonl line (round-10 advice).
-    */
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   /** /proc/loadavg first field; -1 when unreadable (non-Linux). */
   private def loadAvg1m(): Double =
     try {
@@ -73,7 +61,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Optional args restrict to the named queries (local iteration; the
     // driver always calls with no args → full catalog).
-    val only = args.toSet
+    val catalog = queries.Registry.select(args.toSeq)
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
     // ONE listener instance across any session rebuild: its counters are
     // cumulative, so per-query deltas stay correct through a restart.
@@ -127,8 +115,6 @@ object Bench {
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
       org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1e6)
     val timingsBest = scala.collection.mutable.Map[String, Double]()
-    val catalog = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
     val retrySec = sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRY_SEC", "10").toDouble
     // A failed pass records None, never its (fast) elapsed time: a crash
     // must not be able to improve the min-over-passes headline number.
@@ -180,9 +166,9 @@ object Bench {
       if (ok) Some(sec) else None
     }
     val timings = (1 to passes).map { pass =>
-      catalog.map { case (name, fn) => name -> runOne(name, fn, s"pass$pass") }.toMap
+      catalog.map(e => e.name -> runOne(e.name, e.build, s"pass$pass")).toMap
     }
-    val results = catalog.map { case (name, fn) =>
+    val results = catalog.map { case queries.Registry.Entry(name, _, fn, _) =>
       // Time-shifted retries for stall-window victims (see scaladoc):
       // up to 2 extra runs while the best-so-far stays over threshold.
       var attempts = timings.flatMap(_(name)).toList
@@ -255,7 +241,7 @@ object Bench {
     // SPARK_GRAFT_BENCH_LABEL overrides the timestamped default;
     // SPARK_GRAFT_BENCH_LEDGER=0 disables.
     val ledgerOn = sys.env.getOrElse("SPARK_GRAFT_BENCH_LEDGER", "1") == "1" &&
-      (only.isEmpty || sys.env.contains("SPARK_GRAFT_BENCH_LABEL"))
+      (args.isEmpty || sys.env.contains("SPARK_GRAFT_BENCH_LABEL"))
     if (ledgerOn) try {
       val sfName = new java.io.File(sfDir).getName
       val stamp = new java.text.SimpleDateFormat("yyyyMMdd'T'HHmm")
@@ -270,7 +256,7 @@ object Bench {
         cpuOfBest.get(q).filter(v => m(v) > 0)
           .map(v => s""","$k":${m(v)}""").getOrElse("")
       val rows = results.collect { case (q, (Some(v), _)) =>
-        s"""{"label":${jstr(label)},"loadavg_after":$loadAfter,""" +
+        s"""{"label":${server.MiniJson.quote(label)},"loadavg_after":$loadAfter,""" +
           s""""loadavg_before":$loadBefore,"query":"$q","sec":$v""" +
           opt(_.cpuS, "cpu_s", q) + opt(_.runS, "run_s", q) +
           optB(_.spillDisk, "spill_disk", q) +
@@ -300,8 +286,8 @@ object Bench {
       val p95 =
         if (times.isEmpty) 0.0 else times(((times.size - 1) * 95) / 100)._2
       val slowest = times.takeRight(12).reverse
-        .map { case (q, v) => s"${jstr(q)}:$v" }.mkString("{", ",", "}")
-      println(s"""BENCH_JSON {"metric":"total","value":$total,"unit":"sec","sf":${jstr(sfDir)},"complete":${failed.isEmpty},"n_ok":${times.size},"n_failed":${failed.size},"median_s":$med,"p95_s":$p95,"slowest":$slowest}""")
+        .map { case (q, v) => s"${server.MiniJson.quote(q)}:$v" }.mkString("{", ",", "}")
+      println(s"""BENCH_JSON {"metric":"total","value":$total,"unit":"sec","sf":${server.MiniJson.quote(sfDir)},"complete":${failed.isEmpty},"n_ok":${times.size},"n_failed":${failed.size},"median_s":$med,"p95_s":$p95,"slowest":$slowest}""")
     }
     spark.stop()
   }

@@ -43,9 +43,9 @@ import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
   * bounded. The audit is a triage tool; PlanQualitySpec pins the known
   * instances by name.
   *
-  * Usage: `sbt "runMain ExplainAudit q_foo q_bar"` (all queries if no
-  * args). Complements PlanQualitySpec, which pins the same properties
-  * as regression tests for the headline queries.
+  * Usage: `sbt "runMain graft.ExplainAudit q_foo q_bar"` (all queries if
+  * no args; catalog order either way). Complements PlanQualitySpec, which
+  * pins the same properties as regression tests for the headline queries.
   */
 object ExplainAudit {
 
@@ -114,13 +114,12 @@ object ExplainAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.SparkEngine.session("local[4]", 4)
-    val names = if (args.nonEmpty) args.toSeq
-      else graft.SparkEntry.queries.keys.toSeq.sorted
-    for (q <- names) {
+    val selected = queries.Registry.select(args.toSeq)
+    val spark = SparkEngine.session()
+    for (queries.Registry.Entry(q, _, build, _) <- selected) {
       // Unwrap AQE: AdaptiveSparkPlanExec holds the real plan as a field,
       // not a child, so TreeNode.collect would see an empty tree.
-      val plan = graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+      val plan = build(spark, "/root/testdata/sf0.001")
         .queryExecution.executedPlan match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
           a.executedPlan

@@ -3,8 +3,8 @@ package graft
 /** Full `.explain("formatted")` dump for named catalog queries — the
   * companion to ExplainAudit's one-line triage when you need to read the
   * actual operators (WindowGroupLimit presence, pushed filters, reused
-  * exchanges). Usage: `sbt "runMain graft.PlanDump q_foo [q_bar ...]"`;
-  * optional first arg `--sf <dir>` overrides the default sf0.001 tables.
+  * exchanges), in catalog order. Usage: `sbt "runMain graft.PlanDump
+  * [--sf <dir>] [q_foo ...]"` (no names: all; default tables sf0.001).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -12,6 +12,7 @@ object PlanDump {
       case "--sf" :: dir :: rest => (dir, rest)
       case rest => ("/root/testdata/sf0.001", rest)
     }
+    val selected = queries.Registry.select(names)
     // The session that serves, planned on its AQE-off variant so a dump
     // is the static plan, comparable across changes (the plans/ records)
     // rather than an unexecuted AdaptiveSparkPlan. SPARK_GRAFT_CONF lets
@@ -19,9 +20,9 @@ object PlanDump {
     // checkpoint) for before/after captures.
     val spark = SparkEngine.session()
     val planning = SparkEngine.variant(spark, "spark.sql.adaptive.enabled" -> "false")
-    names.foreach { name =>
-      println(s"\n===== $name =====")
-      SparkEntry.queries(name)(planning, sfDir).explain("formatted")
+    selected.foreach { e =>
+      println(s"\n===== ${e.name} =====")
+      e.build(planning, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -9,7 +9,7 @@ package graft
   * distinguishable — the two driver-side costs the bench's
   * wall−run/cores residual cannot separate.
   *
-  * Usage: `sbt "runMain graft.ProfileQ [--sf <dir>] q_foo [q_bar ...]"`.
+  * Usage: `sbt "runMain graft.ProfileQ [--sf <dir>] [q_foo ...]"` (no names: all).
   * Same session as Bench (the factory's one session) and the same
   * listener (CpuListener).
   */
@@ -19,6 +19,7 @@ object ProfileQ {
       case "--sf" :: dir :: rest => (dir, rest)
       case rest => ("/root/testdata/sf0.1", rest)
     }
+    val selected = queries.Registry.select(names)
     val spark = SparkEngine.session()
     val listener = new CpuListener
     spark.sparkContext.addSparkListener(listener)
@@ -29,8 +30,7 @@ object ProfileQ {
     // Warm pass absorbs first-use costs (codegen compiler, parquet
     // footers) so the breakdown reflects Bench's pass-2 steady state.
     val passes = sys.env.getOrElse("SPARK_GRAFT_PROFILE_PASSES", "2").toInt
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
+    selected.foreach { case queries.Registry.Entry(name, _, fn, _) =>
       (1 to passes).foreach { p =>
         val m0 = snap()
         val c0 = System.nanoTime()

@@ -2,51 +2,20 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.queries.{Extensions, Parity, Pipeline, Pipeline2, Pipeline3, Pipeline4, Pipeline5, Pipeline6, Pipeline7, Pipeline8, Pipeline9, Pipeline10, Pipeline11, Pipeline12, Pipeline13, Pipeline14, Pipeline15, Pipeline16, Pipeline17, Pipeline18, Pipeline19, Pipeline20, Pipeline21, Pipeline22, Pipeline23, Pipeline24, Pipeline25, Pipeline26, Pipeline27, Pipeline28, Pipeline29, Pipeline30, Pipeline31, Pipeline32, Pipeline33, Pipeline34, Pipeline35, Pipeline36, Pipeline37, Pipeline38, Pipeline39, Pipeline40, Pipeline41, Pipeline42, Pipeline43, Relational, Relational2, Relational3, Relational4}
+import graft.queries.Registry
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * `queries` is the full oracle-checked catalog: reference-parity paths
-  * (graft.queries.Parity), the general relational surface
-  * (graft.queries.Relational), and the pipeline extensions. Every entry
-  * with an `oracleSql` twin is hash-compared against DuckDB by the driver.
+/** The catalog for callers outside `src/main` (SURVEY.md §7): `queries`
+  * is `graft.queries.Registry` by name, and each query is hash-compared
+  * against DuckDB running its `oracleSql` twin on the same tables.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Relational.queries("q1_agg")(spark, "/root/testdata/sf0.001")
+    queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Parity.queries ++ Relational.queries ++ Relational2.queries ++ Relational3.queries ++
-      Relational4.queries ++
-      Pipeline.queries ++ Pipeline2.queries ++ Pipeline3.queries ++
-      Pipeline4.queries ++ Pipeline5.queries ++ Pipeline6.queries ++ Pipeline7.queries ++
-      Pipeline8.queries ++ Pipeline9.queries ++ Pipeline10.queries ++ Pipeline11.queries ++ Pipeline12.queries ++ Pipeline13.queries ++
-      Pipeline14.queries ++ Pipeline15.queries ++ Pipeline16.queries ++
-      Pipeline17.queries ++ Pipeline18.queries ++ Pipeline19.queries ++
-      Pipeline20.queries ++ Pipeline21.queries ++ Pipeline22.queries ++
-      Pipeline23.queries ++ Pipeline24.queries ++ Pipeline25.queries ++ Pipeline26.queries ++
-      Pipeline27.queries ++ Pipeline28.queries ++ Pipeline29.queries ++ Pipeline30.queries ++
-      Pipeline31.queries ++ Pipeline32.queries ++ Pipeline33.queries ++
-      Pipeline34.queries ++ Pipeline35.queries ++ Pipeline36.queries ++ Pipeline37.queries ++ Pipeline38.queries ++ Pipeline39.queries ++ Pipeline40.queries ++ Pipeline41.queries ++ Pipeline42.queries ++ Pipeline43.queries ++
-      Extensions.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Registry.entries.map(e => e.name -> e.build).toMap
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
-    */
-  def oracleSql: Map[String, String] =
-    Parity.oracle ++ Relational.oracle ++ Relational2.oracle ++ Relational3.oracle ++
-      Relational4.oracle ++
-      Pipeline.oracle ++ Pipeline2.oracle ++ Pipeline3.oracle ++
-      Pipeline4.oracle ++ Pipeline5.oracle ++ Pipeline6.oracle ++ Pipeline7.oracle ++
-      Pipeline8.oracle ++ Pipeline9.oracle ++ Pipeline10.oracle ++ Pipeline11.oracle ++ Pipeline12.oracle ++ Pipeline13.oracle ++
-      Pipeline14.oracle ++ Pipeline15.oracle ++ Pipeline16.oracle ++
-      Pipeline17.oracle ++ Pipeline18.oracle ++ Pipeline19.oracle ++
-      Pipeline20.oracle ++ Pipeline21.oracle ++ Pipeline22.oracle ++
-      Pipeline23.oracle ++ Pipeline24.oracle ++ Pipeline25.oracle ++ Pipeline26.oracle ++
-      Pipeline27.oracle ++ Pipeline28.oracle ++ Pipeline29.oracle ++ Pipeline30.oracle ++
-      Pipeline31.oracle ++ Pipeline32.oracle ++ Pipeline33.oracle ++
-      Pipeline34.oracle ++ Pipeline35.oracle ++ Pipeline36.oracle ++ Pipeline37.oracle ++ Pipeline38.oracle ++ Pipeline39.oracle ++ Pipeline40.oracle ++ Pipeline41.oracle ++ Pipeline42.oracle ++ Pipeline43.oracle ++
-      Extensions.oracle
+  lazy val oracleSql: Map[String, String] =
+    Registry.entries.map(e => e.name -> e.oracleSql).toMap
 }

@@ -1,13 +1,13 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each selected catalog query's result → parquet, plus
+  * their oracle SQL in oracle_sql.json, for the DuckDB compare (tools/check.py). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
     // Optional extra args: restrict to the named queries (local iteration;
     // the driver always calls with exactly two args → full catalog).
-    val only = rest.toSet
+    val selected = queries.Registry.select(rest)
     // The session that serves (AQE on, GraftExtensions), so the oracle
     // gates what ships, extension rewrites included. SPARK_GRAFT_MASTER
     // overrides the master — the round-8 invariance sweep runs the FULL
@@ -17,9 +17,7 @@ object Verify {
     // app classpath to those executors.
     val spark = SparkEngine.session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case queries.Registry.Entry(name, _, fn, _) =>
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -33,20 +31,11 @@ object Verify {
       // gigabytes of dead checkpoint storage (GC/safepoint stalls).
       Ckpt.releaseAll(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // Escaped in full (MiniJson.quote): a tab or CR in authored SQL would
+    // make json.load of the whole file fail and zero the correctness gate.
+    val q = server.MiniJson.quote _
+    val json = selected
+      .map(e => s"${q(e.name)}: ${q(e.oracleSql)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -4,7 +4,6 @@ import graft.Ckpt.CkptOps
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.HashFunctions.{md5fast => md5f}
 

@@ -61,7 +61,7 @@ object Multimodal {
     * [[graft.operators.Similarity]] directly.
     */
   object ImageIoDecoder extends ImageDecoder {
-    import javax.imageio.{ImageIO, ImageReader}
+    import javax.imageio.ImageReader
     import javax.imageio.spi.{IIORegistry, ImageReaderSpi}
 
     /** The convenience `ImageIO` entry points take TWO global monitors

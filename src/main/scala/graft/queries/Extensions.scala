@@ -11,7 +11,7 @@ import Qs._
   * the full analytic window-function family, embedding-cosine near-dup
   * dedup, and oracle-checked multimodal metadata extraction.
   */
-object Extensions {
+object Extensions extends Batch {
 
   val queries: Map[String, Q] = Map(
     // As-of join: each purchase event picks up the latest preceding click

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Preview, Regression, SortedDelays}
+import graft.operators.{Regression, SortedDelays}
 import Qs._
 
 /** Reference-parity query paths (SURVEY.md §2 S1, O1-O4, A1-A2, P1-P4)
@@ -12,7 +12,7 @@ import Qs._
   * (substring discovery, shared direction, nulls-first, optional limit)
   * is identical to the reference's `delay` path.
   */
-object Parity {
+object Parity extends Batch {
 
   val queries: Map[String, Q] = Map(
     // S1 scan + O1 head/limit (deterministic ordering added for the hash

@@ -27,7 +27,7 @@ import Qs._
   *  - ANN buckets via coordinate-sign LSH keep the pair space per-bucket;
   *    brute-force cosine stays as the oracle baseline.
   */
-object Pipeline {
+object Pipeline extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Exact dedup: group on md5(text) so only 32-byte keys shuffle.

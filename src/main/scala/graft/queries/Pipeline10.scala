@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -50,7 +50,7 @@ import Qs._
   *    deterministic negatives per anchor. Positives are an equi-join on
   *    label (the per-class search a contrastive sampler means anyway).
   */
-object Pipeline10 {
+object Pipeline10 extends Batch {
 
   /** Word-frequency table for BPE: lowercase-alpha words of length 2–20,
     * with their corpus counts and initial character token arrays.

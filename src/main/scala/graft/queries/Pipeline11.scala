@@ -37,7 +37,7 @@ import Qs._
   *    lookup is an equi-join on rank — three shuffles total at any
   *    scale, all on integers.
   */
-object Pipeline11 {
+object Pipeline11 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Apply the 3 learned BPE merges to the vocabulary: each word's

@@ -34,7 +34,7 @@ import Qs._
   *    weight crosses the total — integer weight arithmetic only, the
   *    value itself is never summed.
   */
-object Pipeline12 {
+object Pipeline12 extends Batch {
 
   /** Learned-BPE encode table: word → token count (see
     * [[Pipeline11]] q_bpe_encode for the full sequence form).

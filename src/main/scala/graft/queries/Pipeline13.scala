@@ -30,7 +30,7 @@ import Qs._
   *    intermediate, one WindowGroupLimit pass picks each group's
   *    winner with deterministic ties (count desc, value asc).
   */
-object Pipeline13 {
+object Pipeline13 extends Batch {
 
   /** Benford expected shares as literal doubles (log10(1+1/d), d=1..9),
     * identical text in the Spark and DuckDB formulations.

@@ -29,7 +29,7 @@ import Qs._
   *    curve runs on the post-agg vocabulary (swap for the blocked
   *    prefix sum of q_sample_weighted if the vocabulary itself is huge).
   */
-object Pipeline14 {
+object Pipeline14 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // CUSUM drift detection on daily event value: running sum of exact

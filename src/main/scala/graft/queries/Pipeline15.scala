@@ -33,7 +33,7 @@ import Qs._
   *    the hash, hence on the whole matrix) — the cheap 64→8 sketch that
   *    fronts ANN at billion-vector scale.
   */
-object Pipeline15 {
+object Pipeline15 extends Batch {
 
   /** floor(P(Poisson(1) ≤ k) · 2^32) for k = 0..7 — identical literals
     * in the Spark and DuckDB formulations; a 32-bit md5-derived uniform

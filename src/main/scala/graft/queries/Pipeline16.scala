@@ -27,7 +27,7 @@ import Qs._
   *    is two semi-join counts on user grain; triples fan out C(d,3) per
   *    order — bounded by per-order degree, never |parts|³.
   */
-object Pipeline16 {
+object Pipeline16 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Per-doc 5-gram novelty: the share of a doc's distinct shingles that

@@ -34,7 +34,7 @@ import Qs._
   *    engines replay the identical four half-steps on a ≤|nations×segments|
   *    cell frame (the aggregation to cells is the only data-sized pass).
   */
-object Pipeline17 {
+object Pipeline17 extends Batch {
 
   /** Zone size for the zone-map simulator — small enough that sf0.001
     * still yields several zones, large enough that sf0.1 stays ~600. */
@@ -254,8 +254,6 @@ object Pipeline17 {
         .agg(count(lit(1)).cast("long").as("pop_seg"))
       val popCell = cust.groupBy(col("nat"), col("seg"))
         .agg(count(lit(1)).cast("long").as("n_pop"))
-      val wN = Window.partitionBy(col("nat"))
-      val wS = Window.partitionBy(col("seg"))
       val raked = cells
         .join(broadcast(popN), Seq("nat"))
         .join(broadcast(popS), Seq("seg"))

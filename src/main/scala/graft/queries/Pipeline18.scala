@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import Qs._
@@ -24,7 +23,7 @@ import Qs._
   *    DIV, and drawdown detrends with n_days-scaled cents. The only
   *    doubles are final single divisions — bit-identical across engines.
   */
-object Pipeline18 {
+object Pipeline18 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Two-sample Kolmogorov–Smirnov: does order value distribute

@@ -26,7 +26,7 @@ import Qs._
   *    micro-joins; the distance filter runs in exact integer
   *    micro-degrees (squared, no trig, no floats until egress).
   */
-object Pipeline19 {
+object Pipeline19 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // l-diversity audit: quasi-identifier (nation, segment) against the

@@ -36,7 +36,7 @@ import Qs._
   *    keyed on the stratum, the distributed reservoir-sample shape;
   *  - everything else is groupBy/window over hash-partitionable keys.
   */
-object Pipeline2 {
+object Pipeline2 extends Batch {
 
   /** doc_id, term, tf for whitespace tokens. Materialized once
     * (localCheckpoint): every consumer fans out into 2-4 aggregations

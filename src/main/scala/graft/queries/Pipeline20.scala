@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,7 +31,7 @@ import Qs._
   *    products fold positions in order on both engines
   *    (dot ↔ list_inner_product).
   */
-object Pipeline20 {
+object Pipeline20 extends Batch {
 
   /** One v·P power-iteration step in integer micro-units. */
   private def markovStep(v: DataFrame, p: DataFrame): DataFrame =

@@ -43,7 +43,7 @@ import Qs._
   *    with the subgraph cut (keys < 400) bounding the pair explosion the
   *    same way the dedup family caps candidate fan-out.
   */
-object Pipeline21 {
+object Pipeline21 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Pretraining mixture report: token mass per (lang, source) with

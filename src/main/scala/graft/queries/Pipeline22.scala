@@ -27,7 +27,7 @@ import Qs._
   *    (ceil(p·n) over the group's sorted order, user-partitioned
   *    windows), so both engines compute identical BIGINTs.
   */
-object Pipeline22 {
+object Pipeline22 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Connected components of the low-key co-purchase graph: component

@@ -39,7 +39,7 @@ import Qs._
   *    aggregations plus bounded-grid or broadcast-scalar joins; the only
   *    data-sized passes are the initial fact-table aggregates.
   */
-object Pipeline23 {
+object Pipeline23 extends Batch {
 
   /** Exact NTILE over a precomputed 1-based dense rank: SQL gives the
     * first N % k buckets one extra row (same formula as

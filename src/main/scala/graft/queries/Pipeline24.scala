@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.Ckpt.CkptOps
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.dot
@@ -32,7 +31,7 @@ import Qs._
   *  - Attrition/leakage/drift reduce to single-pass aggregations with
   *    broadcast scalars — nothing wider than the fact-table scan.
   */
-object Pipeline24 {
+object Pipeline24 extends Batch {
 
   private def splitOf(c: org.apache.spark.sql.Column) = {
     val h = substring(md5(c.cast("string")), 1, 1)

@@ -31,7 +31,7 @@ import Qs._
   *    joined-cohort frame plus the exact NTILE arithmetic — no
   *    single-partition windows at any cardinality.
   */
-object Pipeline25 {
+object Pipeline25 extends Batch {
 
   private def ntileExpr(k: Int, rn: String, n: String) = expr(
     s"""CASE WHEN $rn <= ($n % $k) * ($n DIV $k + 1)

@@ -17,7 +17,7 @@ import Qs._
   * Spark side subtracts 1; timestamps are micros in both engines and
   * the session is pinned UTC.
   */
-object Pipeline26 {
+object Pipeline26 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Hour-of-week load heatmap: event count and exact value cents per

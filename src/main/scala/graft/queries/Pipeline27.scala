@@ -39,7 +39,7 @@ import Qs._
   *    (per-user partitioned windows), emit ±1 transitions, one
   *    OrderStats range-partitioned running sum, then a per-day max.
   */
-object Pipeline27 {
+object Pipeline27 extends Batch {
 
   /** Exact cosine top-3 (query_id, neighbor_id) of `pairs`. */
   private def top3(pairs: DataFrame): DataFrame = {

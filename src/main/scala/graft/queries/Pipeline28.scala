@@ -35,7 +35,7 @@ import Qs._
   *    the Spark side and HUGEINT in DuckDB — both exact, both
   *    correctly rounded on the final double cast.
   */
-object Pipeline28 {
+object Pipeline28 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Simpson diversity (1 − Σp²) of the language mix per source — the

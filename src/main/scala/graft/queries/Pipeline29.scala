@@ -27,7 +27,7 @@ import Qs._
   *    (TakeOrderedAndProject: per-partition top-k, one bounded merge —
   *    no global sort), then fits OLS on decimal-rounded logs.
   */
-object Pipeline29 {
+object Pipeline29 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // kNN classifier eval: predict each probe's label by majority vote

@@ -32,7 +32,7 @@ import Qs._
   *    are tiny vs the corpus), so the contamination join is map-side
   *    with no shuffle of the training side's shingles.
   */
-object Pipeline3 {
+object Pipeline3 extends Batch {
 
   /** (doc_id, pos, passage): non-overlapping 10-token windows, in order.
     * `(n+9) DIV 10` passages per doc; the tail passage may be short.

@@ -30,7 +30,7 @@ import Qs._
   *  - q_idle_time_user is sessionize (per-user windows) plus exact long
   *    interval arithmetic per user.
   */
-object Pipeline30 {
+object Pipeline30 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Audience overlap: exact Jaccard of distinct-user sets for every

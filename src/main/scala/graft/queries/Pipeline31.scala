@@ -37,7 +37,7 @@ import Qs._
   *    exact-cosine pair space is #queries × N; ideal DCG comes from a
   *    broadcast 10-row log-discount grid, not a per-query sort.
   */
-object Pipeline31 {
+object Pipeline31 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Population Stability Index between consecutive months' order-value

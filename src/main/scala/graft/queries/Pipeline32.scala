@@ -32,7 +32,7 @@ import Qs._
   *  - q_chao1_richness is one groupBy over shingles + a 3-way conditional
   *    count — the frequency-of-frequencies sketch at full scale.
   */
-object Pipeline32 {
+object Pipeline32 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Mean reciprocal rank @10 per label: how high does the first

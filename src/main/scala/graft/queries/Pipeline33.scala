@@ -32,7 +32,7 @@ import Qs._
   *    the leakage-free encoder shape (priors broadcast, no row-level
   *    state).
   */
-object Pipeline33 {
+object Pipeline33 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Empirical Markov entropy rate of the event-type chain: per-state

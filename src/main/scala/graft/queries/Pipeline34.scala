@@ -30,7 +30,7 @@ import Qs._
   *    bounded by per-order line counts), then broadcasts per-part order
   *    counts back onto the top pairs.
   */
-object Pipeline34 {
+object Pipeline34 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // ABC inventory classification: parts ranked by revenue; A = first

@@ -26,7 +26,7 @@ import Qs._
   *    (per-partition top-k + bounded merge); cf and df come from one
   *    token explode each.
   */
-object Pipeline35 {
+object Pipeline35 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // DAU/MAU stickiness per month: average daily actives over monthly

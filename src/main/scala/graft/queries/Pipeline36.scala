@@ -25,7 +25,7 @@ import Qs._
   *  - q_gini_monthly ranks within month — a partitioned window — and
   *    reduces to |months| rows.
   */
-object Pipeline36 {
+object Pipeline36 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Difference-in-differences: deep-discount lines (treated) vs rest,

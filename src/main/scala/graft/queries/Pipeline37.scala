@@ -22,7 +22,7 @@ import Qs._
   *  - q_srm_check / q_hazard_ratio are single-scan exact-count
   *    aggregations with scalar math.
   */
-object Pipeline37 {
+object Pipeline37 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Dedup yield curve: LSH candidates verified once, then counted at

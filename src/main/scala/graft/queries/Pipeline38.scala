@@ -22,7 +22,7 @@ import Qs._
   *    the calendar-bounded daily frame — two bounded self-joins on the
   *    OrderStats row number.
   */
-object Pipeline38 {
+object Pipeline38 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Exponential time-decay attribution: every non-purchase touch in

@@ -22,7 +22,7 @@ import Qs._
   *  - q_top_customer_share ranks customers within nation (partitioned)
   *    and compares the top-10 mass to the nation total.
   */
-object Pipeline39 {
+object Pipeline39 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Freedman–Diaconis histogram plan for order values: bin width

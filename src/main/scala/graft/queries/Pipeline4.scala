@@ -25,7 +25,7 @@ import Qs._
   *    (partial+final agg) and broadcasts the tiny per-group stats row
   *    back over the fact side — the same shape as [[graft.operators.Regression]].
   */
-object Pipeline4 {
+object Pipeline4 extends Batch {
 
   private val PackBudget = 512
 

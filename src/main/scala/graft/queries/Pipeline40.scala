@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import Qs._
 
@@ -20,7 +19,7 @@ import Qs._
   *  - q_demand_cv reduces lineitem to (brand, month) quantities, then
   *    |brands| exact-moment rows.
   */
-object Pipeline40 {
+object Pipeline40 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Embedding data-quality audit: norm moments plus degenerate-vector

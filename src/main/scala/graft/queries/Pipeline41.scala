@@ -22,7 +22,7 @@ import Qs._
   *  - q_return_rate_z is a |brands|-row aggregate plus one broadcast
   *    pooled rate; the z shape is fixed-form on exact counts.
   */
-object Pipeline41 {
+object Pipeline41 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Supplier HHI per nation: Σ share² of supplier revenue — which

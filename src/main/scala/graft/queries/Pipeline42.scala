@@ -9,7 +9,7 @@ import Qs._
   * discount band. All single-scan keyed aggregates; nothing downstream
   * exceeds the band/segment/size cardinality.
   */
-object Pipeline42 {
+object Pipeline42 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Exact basket-size PMF: the empirical distribution the NBD fit

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.Dedup
 import Qs._
 
@@ -27,7 +25,7 @@ import Qs._
   *    (22 of 25 pairs survive at sf0.01). Both queries keep the banded /
   *    capped equi-join shape — never all-pairs over the corpus.
   */
-object Pipeline43 {
+object Pipeline43 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // DF-capped all-pairs Jaccard: the quadratic hot spot (boilerplate

@@ -18,7 +18,7 @@ import Qs._
   *    (hash, df) pairs before joining back — the same
   *    shape as the decontamination join.
   */
-object Pipeline5 {
+object Pipeline5 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Event-type transition matrix (the Markov view of user streams):

@@ -29,7 +29,7 @@ import Qs._
   *    exact DECIMAL(16,10) sum, making every iteration deterministic
   *    under any partitioning (and bit-replayable by the SQL oracle).
   */
-object Pipeline6 {
+object Pipeline6 extends Batch {
 
   /** Latest high-value purchase state per user within a time slice. */
   private def latestState(ev: DataFrame): DataFrame = {

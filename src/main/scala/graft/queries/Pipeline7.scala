@@ -27,7 +27,7 @@ import Qs._
   *    (Streams.slidingCounts); each event lands in len/slide windows
   *    map-side, then one keyed aggregation.
   */
-object Pipeline7 {
+object Pipeline7 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // Triangle count on the co-purchase part graph. Edges: two parts in

@@ -38,7 +38,7 @@ import Qs._
   *    `variant_get` paths replace per-row string re-parsing — the Spark 4
   *    answer to JSON-heavy event pipelines.
   */
-object Pipeline8 {
+object Pipeline8 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // All whitespace tokens with support ≥ 0.5% of the corpus, EXACTLY,

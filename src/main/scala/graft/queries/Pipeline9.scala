@@ -55,7 +55,7 @@ import Qs._
   *    files; JSON re-read takes the writer's schema explicitly, never
   *    inference, matching how a production pipeline pins contracts).
   */
-object Pipeline9 {
+object Pipeline9 extends Batch {
 
   val queries: Map[String, Q] = Map(
     // 2-D skyline over part: minimize retail price, maximize size

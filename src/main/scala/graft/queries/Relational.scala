@@ -16,7 +16,7 @@ import Qs._
   * partial+final (map-side combine), dimension joins are broadcast, big-big
   * joins shuffle on their keys and rely on AQE for skew.
   */
-object Relational {
+object Relational extends Batch {
 
   val queries: Map[String, Q] = Map(
     // TPC-H Q1 shape: scan → filter (pushed to parquet) → hash agg

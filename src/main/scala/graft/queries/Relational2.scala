@@ -10,7 +10,7 @@ import Qs._
   * union-all, approximate sketches, exists-style correlated filters,
   * calendar gap-fill.
   */
-object Relational2 {
+object Relational2 extends Batch {
 
   /** Per-key calendar spine for 1995: one row per (key-row, day), via a
     * narrow `sequence` explode — NOT a cross join against a calendar

@@ -14,7 +14,7 @@ import Qs._
   * (Qs.dec) so the result is order-independent and oracle-exact. The
   * top-N finishes with TakeOrderedAndProject, never a global sort.
   */
-object Relational3 {
+object Relational3 extends Batch {
 
   private def revenue = sum(
     dec(col("l_extendedprice"), 12, 2) *

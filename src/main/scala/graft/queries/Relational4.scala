@@ -27,7 +27,7 @@ import Qs._
   *  - group-by-then-having (Q18) and two-level aggregations (Q13, Q21)
   *    are partial+final; no driver-side loops anywhere.
   */
-object Relational4 {
+object Relational4 extends Batch {
 
   private def prod = dec(col("l_extendedprice"), 12, 2) *
     (lit(1) - dec(col("l_discount"), 4, 2))

@@ -69,11 +69,11 @@ final class HttpShell(spark: SparkSession, baseDir: String, port: Int = 3000)
       case _: HttpShell.RejectedSegment =>
         respondJson(ex, 404, """{"error":"not found"}""")
       case e: HttpShell.UnprocessableBody =>
-        respondJson(ex, 422, s"""{"error":"${esc(e.getMessage)}"}""")
+        respondJson(ex, 422, s"""{"error":${MiniJson.quote(e.getMessage)}}""")
       case e: BadRequestException =>
-        respondJson(ex, 400, s"""{"error":"${esc(e.getMessage)}"}""")
+        respondJson(ex, 400, s"""{"error":${MiniJson.quote(e.getMessage)}}""")
       case e: DatasetLoadException =>
-        respondJson(ex, 500, s"""{"error":"${esc(e.getMessage)}"}""")
+        respondJson(ex, 500, s"""{"error":${MiniJson.quote(e.getMessage)}}""")
       // Fatal JVM errors (OutOfMemoryError, ...) must propagate, and
       // loudly: com.sun.net.httpserver's dispatcher swallows anything a
       // handler throws at FINER level. But rethrowing without touching
@@ -86,11 +86,11 @@ final class HttpShell(spark: SparkSession, baseDir: String, port: Int = 3000)
       // then rethrow the original.
       case e: Throwable if !scala.util.control.NonFatal(e) =>
         logError(s"[http] FATAL in ${ex.getRequestURI.getRawPath}: $e", e)
-        try respondJson(ex, 500, s"""{"error":"${esc(String.valueOf(e))}"}""")
+        try respondJson(ex, 500, s"""{"error":${MiniJson.quote(String.valueOf(e))}}""")
         catch { case _: Throwable => () }
         throw e
       case e: Throwable =>
-        respondJson(ex, 500, s"""{"error":"${esc(String.valueOf(e.getMessage))}"}""")
+        respondJson(ex, 500, s"""{"error":${MiniJson.quote(String.valueOf(e.getMessage))}}""")
     }
 
   /** Percent-decode a QUERY token (axum decodes both path and query;
@@ -203,7 +203,7 @@ final class HttpShell(spark: SparkSession, baseDir: String, port: Int = 3000)
     val parsed =
       try MiniJson.parse(body)
       catch { case e: MiniJson.ParseException =>
-        respondJson(ex, 400, s"""{"error":"invalid json: ${esc(e.getMessage)}"}"""); return
+        respondJson(ex, 400, s"""{"error":${MiniJson.quote("invalid json: " + e.getMessage)}}"""); return
       }
     def field(name: String): String =
       try parsed match {
@@ -221,9 +221,6 @@ final class HttpShell(spark: SparkSession, baseDir: String, port: Int = 3000)
     respondJson(ex, 200,
       s"""{"slope":${r.slope},"intercept":${r.intercept},"r2":$r2}""")
   }
-
-  private def esc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", "\\n")
 
   private def respondJson(ex: HttpExchange, code: Int, body: String): Unit =
     respond(ex, code, body, "application/json")

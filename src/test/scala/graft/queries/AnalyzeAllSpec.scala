@@ -2,7 +2,7 @@ package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, TestSpark}
+import graft.TestSpark
 
 /** Catalog-wide analysis gate: every declared query must at least pass
   * Catalyst analysis against the real sf0.001 tables. Plan-only — no
@@ -16,8 +16,8 @@ class AnalyzeAllSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("every SparkEntry.queries entry analyzes on sf0.001") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, build) =>
+    val failures = Registry.entries.flatMap {
+      case Registry.Entry(name, _, build, _) =>
         try {
           build(spark, sfDir).queryExecution.analyzed
           None

@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, TestSpark}
+import graft.TestSpark
 
 /** Catalog-wide plan gate: NO query may contain an unpartitioned Window
   * (empty partitionSpec — "Moving all data to a single partition"). At
@@ -32,8 +32,8 @@ class NoGlobalWindowSpec extends AnyFunSuite {
   }
 
   test("no catalog query plans an unpartitioned window") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, build) =>
+    val offenders = Registry.entries.flatMap {
+      case Registry.Entry(name, _, build, _) =>
         val ws = globalWindows(build(spark, sfDir).queryExecution.executedPlan)
         if (ws.isEmpty) None
         else Some(s"$name: ${ws.map(_.windowExpression.mkString(",").take(60)).mkString(" | ")}")

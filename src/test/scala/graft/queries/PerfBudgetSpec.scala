@@ -2,7 +2,7 @@ package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, TestSpark}
+import graft.TestSpark
 
 /** Perf-budget regression gate: runs the ENTIRE catalog in one JVM/session
   * and asserts aggregate timing budgets. The regression class this guards —
@@ -28,7 +28,7 @@ class PerfBudgetSpec extends AnyFunSuite {
     sys.env.getOrElse("SPARK_GRAFT_PERF_MAX_SEC", "60").toDouble
 
   test("full catalog: median and max per-query time stay inside budget") {
-    val times = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val times = Registry.entries.map { case Registry.Entry(name, _, fn, _) =>
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       name -> (System.nanoTime() - t0) / 1e9

@@ -190,6 +190,14 @@ class HttpShellSpec extends AnyFunSuite {
     assert(r.statusCode() === 400)
   }
 
+  test("an error body naming a column with a tab or CR is valid JSON") {
+    val r = post("/data/plz/regression", """{"x_col":"no\tpe\r","y_col":"einwohner"}""")
+    assert(r.statusCode() === 400)
+    // Jackson's default parser, like serde's, rejects raw control characters.
+    val err = new com.fasterxml.jackson.databind.ObjectMapper().readTree(r.body()).get("error")
+    assert(err.asText() === "no such column: 'no\tpe\r'", r.body())
+  }
+
   test("regression body parsing matches axum's Json extractor statuses") {
     // valid JSON failing struct deserialization → 422 (JsonDataError)
     assert(post("/data/plz/regression", """{"bogus":1}""").statusCode() === 422)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.window.WindowExec
 
+import graft.queries.Registry
+
 /** Lists catalog queries whose physical plan contains an unpartitioned
   * Window (all rows to one partition). Plan-only; no execution.
   */
@@ -23,7 +25,7 @@ object WindowScan {
       })
       here ++ kids ++ p.subqueries.flatMap(windows)
     }
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    Registry.entries.foreach { case Registry.Entry(name, _, fn, _) =>
       try {
         val ws = windows(fn(spark, dir).queryExecution.executedPlan)
         if (ws.nonEmpty)
