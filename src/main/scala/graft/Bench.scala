@@ -256,7 +256,7 @@ object Bench {
         cpuOfBest.get(q).filter(v => m(v) > 0)
           .map(v => s""","$k":${m(v)}""").getOrElse("")
       val rows = results.collect { case (q, (Some(v), _)) =>
-        s"""{"label":${server.MiniJson.quote(label)},"loadavg_after":$loadAfter,""" +
+        s"""{"label":${functions.JsonRows.quote(label)},"loadavg_after":$loadAfter,""" +
           s""""loadavg_before":$loadBefore,"query":"$q","sec":$v""" +
           opt(_.cpuS, "cpu_s", q) + opt(_.runS, "run_s", q) +
           optB(_.spillDisk, "spill_disk", q) +
@@ -286,8 +286,8 @@ object Bench {
       val p95 =
         if (times.isEmpty) 0.0 else times(((times.size - 1) * 95) / 100)._2
       val slowest = times.takeRight(12).reverse
-        .map { case (q, v) => s"${server.MiniJson.quote(q)}:$v" }.mkString("{", ",", "}")
-      println(s"""BENCH_JSON {"metric":"total","value":$total,"unit":"sec","sf":${server.MiniJson.quote(sfDir)},"complete":${failed.isEmpty},"n_ok":${times.size},"n_failed":${failed.size},"median_s":$med,"p95_s":$p95,"slowest":$slowest}""")
+        .map { case (q, v) => s"${functions.JsonRows.quote(q)}:$v" }.mkString("{", ",", "}")
+      println(s"""BENCH_JSON {"metric":"total","value":$total,"unit":"sec","sf":${functions.JsonRows.quote(sfDir)},"complete":${failed.isEmpty},"n_ok":${times.size},"n_failed":${failed.size},"median_s":$med,"p95_s":$p95,"slowest":$slowest}""")
     }
     spark.stop()
   }

@@ -5,8 +5,14 @@ package graft
   * actual operators (WindowGroupLimit presence, pushed filters, reused
   * exchanges), in catalog order. Usage: `sbt "runMain graft.PlanDump
   * [--sf <dir>] [q_foo ...]"` (no names: all; default tables sf0.001).
+  *
+  * Call sites print without their line number (`localCheckpoint at
+  * Ckpt.scala`, not `Ckpt.scala:78`), so a dump changes only when the
+  * plan does, not when an edit moves a line above a checkpoint.
   */
 object PlanDump {
+  private val CallSiteLine = """(\bat \w+\.scala):\d+""".r
+
   def main(args: Array[String]): Unit = {
     val (sfDir, names) = args.toList match {
       case "--sf" :: dir :: rest => (dir, rest)
@@ -22,7 +28,9 @@ object PlanDump {
     val planning = SparkEngine.variant(spark, "spark.sql.adaptive.enabled" -> "false")
     selected.foreach { e =>
       println(s"\n===== ${e.name} =====")
-      e.build(planning, sfDir).explain("formatted")
+      val plan = e.build(planning, sfDir).queryExecution
+        .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      println(CallSiteLine.replaceAllIn(plan, "$1"))
     }
     spark.stop()
   }

@@ -31,9 +31,9 @@ object Verify {
       // gigabytes of dead checkpoint storage (GC/safepoint stalls).
       Ckpt.releaseAll(spark)
     }
-    // Escaped in full (MiniJson.quote): a tab or CR in authored SQL would
+    // Escaped in full (JsonRows.quote): a tab or CR in authored SQL would
     // make json.load of the whole file fail and zero the correctness gate.
-    val q = server.MiniJson.quote _
+    val q = functions.JsonRows.quote _
     val json = selected
       .map(e => s"${q(e.name)}: ${q(e.oracleSql)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -52,8 +52,13 @@ object JsonRows {
     df.select(cols.toSeq: _*)
   }
 
-  private def escape(s: String): String = {
-    val b = new StringBuilder(s.length + 8)
+  /** `s` as a JSON string literal, every control character escaped: one
+    * raw tab makes a whole document (oracle_sql.json, an error body)
+    * invalid.
+    */
+  def quote(s: String): String = {
+    val b = new StringBuilder(s.length + 10)
+    b.append('"')
     s.foreach {
       case '"' => b.append("\\\"")
       case '\\' => b.append("\\\\")
@@ -63,7 +68,7 @@ object JsonRows {
       case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
       case c => b.append(c)
     }
-    b.result()
+    b.append('"').result()
   }
 
   private def jsonValue(v: Any): String = v match {
@@ -72,10 +77,10 @@ object JsonRows {
     case n @ (_: Byte | _: Short | _: Int | _: Long) => n.toString
     case f: Float => jsonDouble(f.toDouble) // Float widened to f64 (main.rs:238)
     case d: Double => jsonDouble(d)
-    case s: String => "\"" + escape(s) + "\""
+    case s: String => quote(s)
     case d: Date => "\"" + d.toString + "\""
     case t: Timestamp => "\"" + t.toString + "\""
-    case other => "\"" + escape(other.toString) + "\"" // Display fallback (main.rs:244-245)
+    case other => quote(other.toString) // Display fallback (main.rs:244-245)
   }
 
   private def jsonDouble(d: Double): String =
@@ -83,7 +88,7 @@ object JsonRows {
 
   def rowToJson(row: Row, names: Array[String]): String =
     names.indices
-      .map(i => "\"" + escape(names(i)) + "\":" + jsonValue(row.get(i)))
+      .map(i => quote(names(i)) + ":" + jsonValue(row.get(i)))
       .mkString("{", ",", "}")
 
   /** DataFrame → JSON array-of-objects string. Collects — callers bound
@@ -111,21 +116,23 @@ object JsonRows {
     prepared.toLocalIterator().asScala.map(rowToJson(_, names))
   }
 
-  /** Stream the JSON array to `os` (byte-identical to [[toJson]], golden-
-    * tested) without materializing it: one partition in driver memory at
-    * a time. Callers own closing `os`.
+  /** Stream `rows` (from [[jsonRowIterator]]) to `os` as one JSON array,
+    * byte-identical to [[toJson]] (golden-tested), one partition in
+    * driver memory at a time. Takes the iterator rather than the frame so
+    * a caller can probe `hasNext` first: that runs partition 0's job and
+    * surfaces most failures before it commits a status. Callers own
+    * closing `os`.
     */
-  def writeJson(df: DataFrame, os: java.io.OutputStream): Unit = {
+  def writeJson(rows: Iterator[String], os: java.io.OutputStream): Unit = {
     val w = new java.io.BufferedWriter(
       new java.io.OutputStreamWriter(os, java.nio.charset.StandardCharsets.UTF_8),
       64 * 1024)
     w.write("[")
-    val it = jsonRowIterator(df)
     var first = true
-    while (it.hasNext) {
+    while (rows.hasNext) {
       if (!first) w.write(",")
       first = false
-      w.write(it.next())
+      w.write(rows.next())
     }
     w.write("]")
     w.flush()

@@ -8,12 +8,12 @@ import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing: image/audio/video payloads as opaque
   * `binary` columns with typed metadata, and batch-shaped decode /
-  * feature-extract / resize / frame-sample stages.
+  * feature-extract / frame-sample stages.
   *
   * Two decoders ship behind the pluggable [[ImageDecoder]] trait:
   * [[ImageIoDecoder]] is the REAL one — JDK `javax.imageio` (offline-safe,
-  * no external libs): header-only metadata reads, full pixel decode for
-  * features, and PNG re-encode for [[resizeImage]]. [[StubDecoder]]
+  * no external libs): header-only metadata reads and full pixel decode
+  * for features. [[StubDecoder]]
   * remains for deterministic byte-derived fakes where the DuckDB oracle
   * must replay the arithmetic (a SQL oracle cannot run a PNG codec —
   * but see `q_multimodal_imageio`, whose payloads are PNGs generated
@@ -23,8 +23,7 @@ import org.apache.spark.sql.types._
   * large row groups); decode runs `mapPartitions`-style so a real decoder
   * amortizes codec init per partition, not per row; metadata extraction
   * reads only the image HEADER (no pixel decode) so a 100 TB metadata
-  * pass does not pay decompression; partition count is controlled by
-  * bytes not rows ([[repartitionByPayload]]).
+  * pass does not pay decompression.
   */
 object Multimodal {
 
@@ -85,10 +84,9 @@ object Multimodal {
       * plain ImageInputStreamImpl subclass below — a pure byte-array
       * stream, no Disposer, no temp files, no locks; and PNG ENCODE
       * bypasses javax.imageio entirely ([[PngOut]] — the JDK writer's
-      * native-Deflater-per-image was the third per-image hazard, see
-      * encodePng). Measured at sf1: q_multimodal_imageio 9.45s → 0.9s
-      * wall / 195s → 8s executor CPU, and the 1600s-CPU slow mode is
-      * gone.
+      * native-Deflater-per-image was the third per-image hazard).
+      * Measured at sf1: q_multimodal_imageio 9.45s → 0.9s wall / 195s →
+      * 8s executor CPU, and the 1600s-CPU slow mode is gone.
       */
     private val readerSpis: Array[ImageReaderSpi] = {
       val it = IIORegistry.getDefaultInstance
@@ -171,7 +169,7 @@ object Multimodal {
       out
     }
 
-    private[operators] def decode(bytes: Array[Byte]): java.awt.image.BufferedImage = {
+    private def decode(bytes: Array[Byte]): java.awt.image.BufferedImage = {
       val iis = new ByteArrayImageInputStream(bytes)
       val r = readerFor(iis, bytes.length)
       try {
@@ -179,53 +177,18 @@ object Multimodal {
         r.read(0)
       } finally r.reset()
     }
-
-    /** PNG encode WITHOUT PNGImageWriter: the JDK writer allocates a
-      * fresh native Deflater (≈ a quarter-MB mmap'd zlib window) per
-      * image, and at 40k images × 32 threads the mmap/munmap + first-
-      * touch page-fault traffic serializes on the process memory-map
-      * lock — jstack showed all 32 task threads "running" inside
-      * `Deflater.deflateBytesBytes` while the pass burned up to 30× the
-      * CPU of an identical lucky pass (Cleaner timing decides how much
-      * native churn accumulates). [[PngOut]] reuses ONE Deflater per
-      * executor thread for the engine's whole lifetime.
-      */
-    private[operators] def encodePng(img: java.awt.image.BufferedImage): Array[Byte] = {
-      val (w, h) = (img.getWidth, img.getHeight)
-      if (img.getType == java.awt.image.BufferedImage.TYPE_BYTE_GRAY) {
-        val data = img.getRaster.getDataBuffer
-          .asInstanceOf[java.awt.image.DataBufferByte].getData
-        PngOut.encodeGray(w, h, data)
-      } else {
-        // Filter-0 truecolor scanlines from the ARGB accessor (alpha
-        // dropped — parity with the opaque PNGs the JDK writer emitted).
-        val raw = new Array[Byte]((w * 3 + 1) * h)
-        var y = 0
-        var p = 0
-        while (y < h) {
-          raw(p) = 0; p += 1
-          var x = 0
-          while (x < w) {
-            val rgb = img.getRGB(x, y)
-            raw(p) = ((rgb >> 16) & 0xff).toByte
-            raw(p + 1) = ((rgb >> 8) & 0xff).toByte
-            raw(p + 2) = (rgb & 0xff).toByte
-            p += 3
-            x += 1
-          }
-          y += 1
-        }
-        PngOut.encode(w, h, colorType = 2, raw)
-      }
-    }
   }
 
   /** Minimal PNG container writer (signature + IHDR + one IDAT + IEND,
     * filter 0, bit depth 8, no interlace) over a PER-THREAD reused
-    * java.util.zip.Deflater — see ImageIoDecoder.encodePng for why the
-    * JDK writer's Deflater-per-image is a scale hazard. Readers don't
-    * care that the IDAT is a single chunk; every PNG decoder (including
-    * the JDK's) round-trips these byte-exactly.
+    * java.util.zip.Deflater. The JDK's PNGImageWriter allocates a fresh
+    * native Deflater (≈ a quarter-MB mmap'd zlib window) per image, and
+    * at 40k images × 32 threads the mmap/munmap + first-touch page-fault
+    * traffic serializes on the process memory-map lock — jstack showed
+    * all 32 task threads "running" inside `Deflater.deflateBytesBytes`
+    * while the pass burned up to 30× the CPU of an identical lucky pass.
+    * Readers don't care that the IDAT is a single chunk; every PNG
+    * decoder (including the JDK's) round-trips these byte-exactly.
     */
   private[operators] object PngOut {
     private val deflaters =
@@ -243,11 +206,11 @@ object Multimodal {
         if (n > 0) System.arraycopy(pixels, src, raw, y * (w + 1) + 1, n)
         y += 1
       }
-      encode(w, h, colorType = 0, raw)
+      encode(w, h, raw)
     }
 
-    /** `raw` = filter-prefixed scanlines for the given color type. */
-    def encode(w: Int, h: Int, colorType: Int, raw: Array[Byte]): Array[Byte] = {
+    /** `raw` = filter-prefixed 8-bit gray scanlines. */
+    private def encode(w: Int, h: Int, raw: Array[Byte]): Array[Byte] = {
       val d = deflaters.get()
       d.reset()
       d.setInput(raw)
@@ -263,7 +226,7 @@ object Multimodal {
       out.put(Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a))
       val ihdr = java.nio.ByteBuffer.allocate(13)
       ihdr.putInt(w).putInt(h)
-        .put(8.toByte).put(colorType.toByte)
+        .put(8.toByte).put(0.toByte) // bit depth 8, color type 0 (gray)
         .put(0.toByte).put(0.toByte).put(0.toByte)
       writeChunk(out, "IHDR", ihdr.array())
       writeChunk(out, "IDAT", idat)
@@ -421,39 +384,6 @@ object Multimodal {
     }(encoder)
   }
 
-  /** Real resize: decode, bilinear-scale to `targetW`×`targetH`, re-encode
-    * as PNG into a `resized` binary column. Per-partition batch shape like
-    * [[decodeMeta]]; undecodable payloads → null.
-    */
-  def resizeImage(df: DataFrame, targetW: Int, targetH: Int,
-      payloadCol: String = "payload"): DataFrame = {
-    val schema = df.schema.add("resized", BinaryType)
-    val payloadIdx = df.schema.fieldIndex(payloadCol)
-    val encoder = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    df.mapPartitions { it =>
-      it.map { row =>
-        val bytes = row.getAs[Array[Byte]](payloadIdx)
-        val out: Array[Byte] =
-          if (bytes == null) null
-          else
-            try {
-              val src = ImageIoDecoder.decode(bytes)
-              val dst = new java.awt.image.BufferedImage(
-                targetW, targetH, java.awt.image.BufferedImage.TYPE_INT_RGB)
-              val g = dst.createGraphics()
-              try {
-                g.setRenderingHint(
-                  java.awt.RenderingHints.KEY_INTERPOLATION,
-                  java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-                g.drawImage(src, 0, 0, targetW, targetH, null)
-              } finally g.dispose()
-              ImageIoDecoder.encodePng(dst)
-            } catch { case _: UndecodablePayload => null }
-        Row.fromSeq(row.toSeq :+ out)
-      }
-    }(encoder)
-  }
-
   /** Deterministic frame-sample stub: every k-th byte window as a "frame"
     * payload list — the plumbing for video columns (one row in, array of
     * frame payloads out, exploded downstream).
@@ -471,17 +401,6 @@ object Multimodal {
   private def fanOut(df: DataFrame): DataFrame = {
     val target = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
-  }
-
-  /** Bytes-aware repartitioning: target ~`targetMb` of payload per
-    * partition so a real decoder's memory stays bounded regardless of row
-    * width skew.
-    */
-  def repartitionByPayload(df: DataFrame, targetMb: Int,
-      payloadCol: String = "payload"): DataFrame = {
-    val totalBytes = df.agg(sum(length(col(payloadCol)))).head().getLong(0)
-    val parts = math.max(1, (totalBytes / (targetMb.toLong * 1024 * 1024)).toInt)
-    df.repartition(parts)
   }
 
   // ---- audio modality -----------------------------------------------

@@ -59,20 +59,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * `df.checkpoint()` (HDFS-backed), but that is belt-and-braces, not
   * the default requirement.
   *
-  * Checkpoint LIFECYCLE: the materialized blocks stay pinned in the
-  * block manager until the RDD handle is GC'd (driver-side
-  * ContextCleaner). Every checkpoint this operator creates is tracked in
-  * a per-context registry; a library user chaining many calls in one
-  * session releases them deterministically with
-  * [[releaseCheckpoints]] once results are egressed. Releasing
-  * invalidates the not-yet-collected outputs of earlier `running` calls
-  * (truncated lineage cannot recompute) — it is an after-egress hygiene
-  * call. (Bench/Verify get the same effect from `Ckpt.releaseAll` after
-  * each query, which covers every operator's checkpoints at once; this
-  * API is the targeted
-  * equivalent for library users embedding the operator in a long-lived
-  * session.)
-  *
   * `boundedInput = true` is a caller hint that the frame is provably
   * small BY CONSTRUCTION (e.g. post-aggregation by calendar day: ≤ a few
   * thousand rows at any scale factor). It swaps `repartitionByRange` —
@@ -93,72 +79,6 @@ object OrderStats {
     * the checkpointed-RDD output hides the exchange from its executedPlan.
     */
   private[graft] val invocations = new java.util.concurrent.atomic.AtomicLong
-
-  /** Registry of the localCheckpoint RDDs this operator materialized,
-    * weakly referenced so an abandoned handle still becomes eligible for
-    * the ContextCleaner's GC-driven unpersist. See the scaladoc's
-    * "Checkpoint LIFECYCLE" note.
-    */
-  private val checkpoints = new java.util.concurrent.ConcurrentLinkedQueue[
-    (org.apache.spark.SparkContext,
-      java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]])]
-
-  private def registerCheckpoint(ckpt: DataFrame): Unit =
-    ckpt.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach { rdd =>
-      checkpoints.add((ckpt.sparkSession.sparkContext,
-        new java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]](rdd)))
-    }
-
-  /** How many of this operator's checkpoints still hold blocks for the
-    * session's context.
-    */
-  def pinnedCheckpointCount(
-      spark: org.apache.spark.sql.SparkSession): Int = {
-    // Self-prune GC-cleared entries on every access (not only in
-    // releaseCheckpoints): a long-lived session that never releases
-    // would otherwise accumulate dead queue entries unboundedly and
-    // re-scan them on each call.
-    var n = 0
-    val live = spark.sparkContext.getPersistentRDDs
-    val it = checkpoints.iterator()
-    while (it.hasNext) {
-      val (sc, ref) = it.next()
-      val rdd = ref.get()
-      if (rdd == null) it.remove()
-      else if ((sc eq spark.sparkContext) && live.contains(rdd.id)) n += 1
-    }
-    n
-  }
-
-  /** Unpersist every checkpoint this operator materialized for the
-    * session's context, releasing the pinned blocks. Call AFTER egress:
-    * earlier `running` outputs that were never collected cannot
-    * recompute past their truncated lineage. Returns the number of
-    * checkpoints released. `blocking = true` waits for block removal
-    * (deterministic for tests; the default mirrors Spark's async
-    * unpersist).
-    */
-  def releaseCheckpoints(spark: org.apache.spark.sql.SparkSession,
-      blocking: Boolean = false): Int = {
-    var n = 0
-    val live = spark.sparkContext.getPersistentRDDs
-    val it = checkpoints.iterator()
-    while (it.hasNext) {
-      val (sc, ref) = it.next()
-      val rdd = ref.get()
-      if (rdd == null) it.remove()
-      else if (sc eq spark.sparkContext) {
-        if (live.contains(rdd.id)) {
-          org.apache.spark.graftbridge.CoreBridge.unpersistRDD(sc, rdd.id, blocking)
-          n += 1
-        }
-        it.remove()
-      }
-    }
-    n
-  }
 
   /** Executor-side prefix state for one partition: replays the first-level
     * running statistics row by row. Constructed INSIDE mapPartitions from
@@ -267,7 +187,6 @@ object OrderStats {
     val base =
       if (boundedInput) df.repartition(1) else df.repartitionByRange(sort: _*)
     val sorted = base.sortWithinPartitions(sort: _*).ckpt()
-    registerCheckpoint(sorted)
     val schema = sorted.schema
     def idxOf(cols: Seq[String]) = cols.map { in =>
       require(schema(in).dataType == LongType, s"$in must be LongType")

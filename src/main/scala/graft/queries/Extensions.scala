@@ -197,7 +197,7 @@ object Extensions extends Batch {
 
     // Batch sessionization: 30-min-gap sessions per user via windows
     // (lag → gap flag → running session index), the batch twin of
-    // Streams.sessionize — no state store, two window passes.
+    // Streams.sessionizeTws — no state store, two window passes.
     "q_sessionize" -> { (s, dir) =>
       val byUser = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))

@@ -23,9 +23,8 @@ import Qs._
   *    (order-independent), broadcast the tiny per-group stat table back,
   *    and do per-row arithmetic map-side — one shuffle per query.
   *  - The sliding-window query uses Spark's native `window(ts, len,
-  *    slide)` — identical semantics to the Structured Streaming job
-  *    (Streams.slidingCounts); each event lands in len/slide windows
-  *    map-side, then one keyed aggregation.
+  *    slide)`; each event lands in len/slide windows map-side, then one
+  *    keyed aggregation.
   */
 object Pipeline7 extends Batch {
 
@@ -91,8 +90,7 @@ object Pipeline7 extends Batch {
     },
 
     // Sliding event-time windows in batch — Spark's window(ts, 10m, 5m)
-    // assigns each event to its 2 containing windows map-side; identical
-    // semantics to the streaming job (Streams.slidingCounts).
+    // assigns each event to its 2 containing windows map-side.
     "q_sliding_window" -> { (s, dir) =>
       t(s, dir, "events")
         .groupBy(window(col("ts"), "10 minutes", "5 minutes").as("w"), col("event_type"))

@@ -340,7 +340,7 @@ object Pipeline8 extends Batch {
     // streaming-capable form), no lag/cumsum window chain. End = last
     // event + gap by definition; merge happens while gap < 30 min.
     // Complements q_sessionize (the manual islands formulation) and
-    // Streams.sessionize* (the stateful forms).
+    // Streams.sessionizeTws (the stateful form).
     "q_session_window" -> { (s, dir) =>
       t(s, dir, "events")
         .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))

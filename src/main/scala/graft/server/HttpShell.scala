@@ -69,11 +69,11 @@ final class HttpShell(spark: SparkSession, baseDir: String, port: Int = 3000)
       case _: HttpShell.RejectedSegment =>
         respondJson(ex, 404, """{"error":"not found"}""")
       case e: HttpShell.UnprocessableBody =>
-        respondJson(ex, 422, s"""{"error":${MiniJson.quote(e.getMessage)}}""")
+        respondJson(ex, 422, s"""{"error":${JsonRows.quote(e.getMessage)}}""")
       case e: BadRequestException =>
-        respondJson(ex, 400, s"""{"error":${MiniJson.quote(e.getMessage)}}""")
+        respondJson(ex, 400, s"""{"error":${JsonRows.quote(e.getMessage)}}""")
       case e: DatasetLoadException =>
-        respondJson(ex, 500, s"""{"error":${MiniJson.quote(e.getMessage)}}""")
+        respondJson(ex, 500, s"""{"error":${JsonRows.quote(e.getMessage)}}""")
       // Fatal JVM errors (OutOfMemoryError, ...) must propagate, and
       // loudly: com.sun.net.httpserver's dispatcher swallows anything a
       // handler throws at FINER level. But rethrowing without touching
@@ -86,11 +86,11 @@ final class HttpShell(spark: SparkSession, baseDir: String, port: Int = 3000)
       // then rethrow the original.
       case e: Throwable if !scala.util.control.NonFatal(e) =>
         logError(s"[http] FATAL in ${ex.getRequestURI.getRawPath}: $e", e)
-        try respondJson(ex, 500, s"""{"error":${MiniJson.quote(String.valueOf(e))}}""")
+        try respondJson(ex, 500, s"""{"error":${JsonRows.quote(String.valueOf(e))}}""")
         catch { case _: Throwable => () }
         throw e
       case e: Throwable =>
-        respondJson(ex, 500, s"""{"error":${MiniJson.quote(String.valueOf(e.getMessage))}}""")
+        respondJson(ex, 500, s"""{"error":${JsonRows.quote(String.valueOf(e.getMessage))}}""")
     }
 
   /** Percent-decode a QUERY token (axum decodes both path and query;
@@ -159,23 +159,12 @@ final class HttpShell(spark: SparkSession, baseDir: String, port: Int = 3000)
     // only truncate the chunked body (the standard streaming tradeoff —
     // the client sees a malformed JSON tail, never a silent success).
     val rows = JsonRows.jsonRowIterator(df)
-    val nonEmpty = rows.hasNext // may throw -> route()'s 500 path
+    rows.hasNext // may throw -> route()'s 500 path
     ex.getResponseHeaders.set("Content-Type", "application/json")
     ex.sendResponseHeaders(200, 0) // length 0 = chunked transfer
     val os = ex.getResponseBody
-    try {
-      val w = new java.io.BufferedWriter(
-        new java.io.OutputStreamWriter(os, StandardCharsets.UTF_8), 64 * 1024)
-      w.write("[")
-      var first = true
-      while (rows.hasNext) {
-        if (!first) w.write(",")
-        first = false
-        w.write(rows.next())
-      }
-      w.write("]")
-      w.flush()
-    } catch {
+    try JsonRows.writeJson(rows, os)
+    catch {
       // Runtime failures after the 200 header is gone: log the
       // truncation loudly server-side (documented tradeoff). Fatal JVM
       // errors (OutOfMemoryError, ...) must still propagate — the
@@ -203,7 +192,7 @@ final class HttpShell(spark: SparkSession, baseDir: String, port: Int = 3000)
     val parsed =
       try MiniJson.parse(body)
       catch { case e: MiniJson.ParseException =>
-        respondJson(ex, 400, s"""{"error":${MiniJson.quote("invalid json: " + e.getMessage)}}"""); return
+        respondJson(ex, 400, s"""{"error":${JsonRows.quote("invalid json: " + e.getMessage)}}"""); return
       }
     def field(name: String): String =
       try parsed match {

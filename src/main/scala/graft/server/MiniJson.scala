@@ -34,18 +34,6 @@ object MiniJson {
 
   final class ParseException(msg: String) extends RuntimeException(msg)
 
-  /** `s` as a JSON string literal, every control character escaped: one
-    * raw tab makes a whole document (oracle_sql.json, an error body) invalid. */
-  def quote(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def parse(input: String): Val = {
     val p = new Parser(input)
     val v = p.value()

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface over the `events` stream shape
@@ -85,207 +85,19 @@ object Streams extends org.apache.spark.internal.Logging {
         col("window.start").as("w_start"), col("window.end").as("w_end"),
         col("event_type"), col("n"), col("total_value"))
 
-  /** Streaming dedup on event_id within the watermark horizon —
-    * exactly-once-per-id delivery from an at-least-once source.
-    */
-  def dedupStream(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicates("event_id", "ts")
-
-  /** Watermark-bounded dedup on event_id ALONE (no ts in the key):
-    * duplicates with a *different* timestamp — retries that re-stamp the
-    * event — still collapse, which `dropDuplicates(event_id, ts)` misses.
-    * State for an id is evictable once the watermark passes its first
-    * sighting, so memory stays bounded where a plain
-    * `dropDuplicates("event_id")` would grow state forever.
-    */
-  def dedupWithinWatermark(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** Sliding-window counts/sums: each event belongs to length/slide
-    * overlapping windows (assigned map-side, no duplication shuffle),
-    * then one keyed aggregation. Batch twin: q_sliding_window — same
-    * window() call, same results after watermark close.
-    */
-  def slidingCounts(
-      events: DataFrame,
-      watermark: String = "10 minutes",
-      length: String = "10 minutes",
-      slide: String = "5 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), length, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-      .select(
-        col("window.start").as("w_start"), col("window.end").as("w_end"),
-        col("event_type"), col("n"), col("total_value"))
-
-  /** Stream-static enrichment join: every micro-batch joins against the
-    * (small) static dimension — Spark broadcasts it per batch, so the
-    * stream never shuffles. The streaming face of the broadcast-dim rule
-    * used across the batch catalog.
-    */
-  def enrichStream(events: DataFrame, dim: DataFrame, key: String): DataFrame =
-    events.join(broadcast(dim), key)
-
-  /** Incremental corpus-ingest dedup — the streaming face of
-    * `q_dedup_bloom`: new documents stream in, a bloom filter of the
-    * existing corpus screens each micro-batch map-side (bloom-negative ⇒
-    * definitely new, never touches the join), and bloom-positives verify
-    * exactly with a stream-static anti join against the corpus hash set.
-    * Emits only genuinely-new documents; the bloom keeps results exact
-    * (no false negatives) while bounding per-batch join input.
-    *
-    * `corpusHashes` must have a single `h` column of md5 hex strings
-    * (build once with `Dedup`-style `md5(text)`; refresh on corpus
-    * compaction).
-    */
-  def ingestDedupStream(docs: DataFrame, corpusHashes: DataFrame,
-      bloom: Array[Byte], textCol: String = "text"): DataFrame = {
-    import graft.functions.BloomFunctions
-    import graft.functions.HashFunctions.{md5fast => md5f}
-    val h = md5f(col(textCol))
-    val definiteNew = docs.filter(!BloomFunctions.mightContain(bloom, h))
-    val verified = docs.filter(BloomFunctions.mightContain(bloom, h))
-      .join(corpusHashes, h === corpusHashes("h"), "left_anti")
-    definiteNew.unionByName(verified)
-  }
-
-  /** Stream-stream join: purchases matched to clicks of the same user
-    * within `horizon` BEFORE the purchase. Both sides watermarked, and the
-    * time-range predicate bounds the join state store (Spark drops
-    * buffered rows older than the watermark − horizon).
-    */
-  def purchaseAttribution(events: DataFrame, watermark: String = "10 minutes",
-      horizon: String = "30 minutes"): DataFrame = {
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"), col("value").as("p_value"))
-      .withWatermark("p_ts", watermark)
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("event_id").as("c_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", watermark)
-    purchases.join(clicks,
-      col("p_user") === col("c_user") &&
-        col("c_ts") <= col("p_ts") &&
-        col("c_ts") >= col("p_ts") - expr(s"INTERVAL $horizon"))
-  }
-
-  /** As [[purchaseAttribution]], but LEFT OUTER: purchases with no click
-    * in the horizon still emit — with null click columns — once the
-    * watermark passes `p_ts` (the state store can then prove no late
-    * click can ever match). This is the semantically hard stream-stream
-    * case: the null row is the RESULT of watermark-driven state expiry,
-    * so correctness depends on both watermarks and the time-range bound,
-    * not just the join predicate.
-    */
-  def attributionWithMisses(events: DataFrame, watermark: String = "10 minutes",
-      horizon: String = "30 minutes"): DataFrame = {
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"), col("value").as("p_value"))
-      .withWatermark("p_ts", watermark)
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("event_id").as("c_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", watermark)
-    purchases.join(clicks,
-      col("p_user") === col("c_user") &&
-        col("c_ts") <= col("p_ts") &&
-        col("c_ts") >= col("p_ts") - expr(s"INTERVAL $horizon"),
-      "leftOuter")
-  }
-
-  /** Streaming ingestion into the partitioned lake: each micro-batch
-    * appends to a hive-partitioned parquet layout via [[graft.sources.Sinks]].
-    * `foreachBatch` is the right tool when the sink needs batch-writer
-    * features (partitionBy, dynamic overwrite) the streaming file sink
-    * lacks; Spark guarantees at-least-once per batch id, and parquet
-    * appends of identical batches are idempotent enough for a dedup-on-
-    * read lake (or use the batchId to skip replays).
-    *
-    * Returns the started query; callers own awaitTermination/stop.
-    */
-  def streamToLake(events: DataFrame, path: String,
-      partitionBy: Seq[String] = Seq("event_type"),
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.sources.Sinks.writeParquet(
-          batch.toDF(), path, partitionBy, org.apache.spark.sql.SaveMode.Append)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-
   final case class SessionEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
   final case class SessionState(start: Long, lastSeen: Long, n: Long, total: Double)
   final case class UserSession(
       user_id: Long, session_start: java.sql.Timestamp,
       session_end: java.sql.Timestamp, n_events: Long, total_value: Double)
 
-  /** Sessionization with custom state: a session closes after `gapMs` of
-    * user inactivity (processing-time timeout for local determinism-free
-    * demo; event-time gap logic inside the state update). The canonical
-    * `flatMapGroupsWithState` pattern — state is one small record per
-    * active user, emitted and cleared on timeout/gap.
-    */
-  def sessionize(events: Dataset[SessionEvent], gapMs: Long): Dataset[UserSession] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, UserSession](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, rows: Iterator[SessionEvent], state: GroupState[SessionState]) =>
-          // Sort the micro-batch slice; emit sessions closed by gaps.
-          val sorted = rows.toSeq.sortBy(_.ts.getTime)
-          var st = state.getOption.getOrElse(SessionState(Long.MaxValue, Long.MinValue, 0, 0.0))
-          val closed = Seq.newBuilder[UserSession]
-          sorted.foreach { e =>
-            val t = e.ts.getTime
-            if (st.n > 0 && t - st.lastSeen > gapMs) {
-              closed += UserSession(userId, new java.sql.Timestamp(st.start),
-                new java.sql.Timestamp(st.lastSeen), st.n, st.total)
-              st = SessionState(t, t, 1, e.value)
-            } else {
-              st = SessionState(math.min(st.start, t), math.max(st.lastSeen, t),
-                st.n + 1, st.total + e.value)
-            }
-          }
-          if (st.n > 0) state.update(st) else state.remove()
-          closed.result().iterator
-      }
-  }
-
-  /** Watermarked per-window latency-style quantiles: the streaming SLO
-    * monitor. `percentile_approx` aggregates partial t-digest-style
-    * buffers per (window, event_type) in the state store, so each
-    * micro-batch folds its slice in and the window finalizes when the
-    * watermark passes — no per-event state, O(accuracy) memory per open
-    * window. Quantile VALUES are approximation-dependent (hence no
-    * oracle query); the batch-exact twin is `q_percentile`.
-    */
-  def windowedQuantiles(
-      events: DataFrame, windowLen: String, watermark: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen).as("w"), col("event_type"))
-      .agg(
-        count(lit(1)).as("n"),
-        percentile_approx(col("value"), array(lit(0.5), lit(0.95), lit(0.99)),
-          lit(1000)).as("p50_p95_p99"))
-      .select(col("w.start").as("w_start"), col("event_type"), col("n"),
-        col("p50_p95_p99"))
-
-  /** [[sessionize]] ported to the Spark 4 arbitrary-state v2 API
-    * (`transformWithState` + `StatefulProcessor`): typed named state via
-    * the handle, optional TTL, timers — the modern replacement for
-    * flatMapGroupsWithState, and the API new state-heavy operators
-    * should target. Requires the RocksDB state store provider (set
-    * `spark.sql.streaming.stateStore.providerClass`). Session semantics
-    * are identical to [[sessionize]] — asserted in StreamsSpec.
+  /** Sessionization on the Spark 4 arbitrary-state v2 API
+    * (`transformWithState` + `StatefulProcessor`): state is one small
+    * ValueState record per active user, and a session closes when that
+    * user's next event arrives more than `gapMs` after the last one —
+    * an idle session stays open until a later event reveals the gap.
+    * Requires the RocksDB state store provider (set
+    * `spark.sql.streaming.stateStore.providerClass`).
     */
   def sessionizeTws(events: Dataset[SessionEvent], gapMs: Long): Dataset[UserSession] = {
     import events.sparkSession.implicits._
@@ -327,237 +139,5 @@ object Streams extends org.apache.spark.internal.Logging {
       if (s.n > 0) st.update(s) else st.clear()
       closed.result().iterator
     }
-  }
-
-  /** [[sessionizeTws]] plus EVENT-TIME TIMERS: a session also closes
-    * when the watermark passes `lastSeen + gapMs` — even if that user
-    * never sends another event. Gap detection alone ([[sessionize]],
-    * [[sessionizeTws]]) only closes a session when a LATER event from
-    * the same user arrives to reveal the gap; the timer closes it from
-    * the stream's global progress. `events` must carry a watermark on
-    * `ts` before grouping.
-    */
-  def sessionizeTwsTimers(events: Dataset[SessionEvent], gapMs: Long): Dataset[UserSession] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new TimerSessionProcessor(gapMs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  private class TimerSessionProcessor(gapMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, SessionEvent, UserSession] {
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[SessionState] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[SessionState]("session",
-        org.apache.spark.sql.Encoders.product[SessionState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[SessionEvent],
-        tv: org.apache.spark.sql.streaming.TimerValues): Iterator[UserSession] = {
-      val sorted = rows.toSeq.sortBy(_.ts.getTime)
-      var s = if (st.exists()) st.get()
-        else SessionState(Long.MaxValue, Long.MinValue, 0, 0.0)
-      val closed = Seq.newBuilder[UserSession]
-      sorted.foreach { e =>
-        val t = e.ts.getTime
-        if (s.n > 0 && t - s.lastSeen > gapMs) {
-          closed += UserSession(userId, new java.sql.Timestamp(s.start),
-            new java.sql.Timestamp(s.lastSeen), s.n, s.total)
-          s = SessionState(t, t, 1, e.value)
-        } else {
-          s = SessionState(math.min(s.start, t), math.max(s.lastSeen, t),
-            s.n + 1, s.total + e.value)
-        }
-      }
-      if (s.n > 0) {
-        st.update(s)
-        // One live timer per user at the current idle deadline. Stale
-        // timers (lastSeen moved on) are ignored at expiry.
-        getHandle.registerTimer(s.lastSeen + gapMs)
-      } else st.clear()
-      closed.result().iterator
-    }
-
-    override def handleExpiredTimer(userId: Long,
-        tv: org.apache.spark.sql.streaming.TimerValues,
-        info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[UserSession] =
-      if (st.exists() && info.getExpiryTimeInMs >= st.get().lastSeen + gapMs) {
-        val s = st.get()
-        st.clear()
-        Iterator.single(UserSession(userId, new java.sql.Timestamp(s.start),
-          new java.sql.Timestamp(s.lastSeen), s.n, s.total))
-      } else Iterator.empty
-
-  }
-
-  /** Bounded recent-history state: the last `n` values per user as a
-    * [[org.apache.spark.sql.streaming.ListState]] — the third v2 state
-    * primitive (ValueState: [[sessionizeTws]], MapState:
-    * [[heavyHitterCandidatesTws]]). Emits the rolling mean over the
-    * retained window each batch (Update mode). State is O(n) per user
-    * forever, independent of stream length — the ring-buffer shape
-    * behind per-entity rolling features.
-    */
-  def rollingUserStats(events: Dataset[SessionEvent], n: Int): Dataset[(Long, Int, Double)] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new RollingProcessor(n),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-  }
-
-  private class RollingProcessor(n: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, SessionEvent, (Long, Int, Double)] {
-    @transient private var buf: org.apache.spark.sql.streaming.ListState[Double] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      buf = getHandle.getListState[Double]("recent",
-        org.apache.spark.sql.Encoders.scalaDouble,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[SessionEvent],
-        tv: org.apache.spark.sql.streaming.TimerValues): Iterator[(Long, Int, Double)] = {
-      val incoming = rows.toSeq.sortBy(_.ts.getTime).map(_.value)
-      val window = ((if (buf.exists()) buf.get().toSeq else Seq.empty) ++ incoming)
-        .takeRight(n)
-      buf.put(window.toArray)
-      Iterator.single((userId, window.size, window.sum / window.size))
-    }
-  }
-
-  /** Streaming heavy-hitter candidates on the v2 state API, with the
-    * counters as a [[org.apache.spark.sql.streaming.MapState]]: each MG
-    * increment touches ONE (term → count) entry in the state store,
-    * instead of re-serializing a whole per-shard map per micro-batch —
-    * the state-locality win the v2 API exists for. Shard/guarantee
-    * semantics identical to [[heavyHitterCandidates]]. Requires the
-    * RocksDB state store provider.
-    */
-  def heavyHitterCandidatesTws(terms: Dataset[String], nShards: Int, k: Int)
-      : Dataset[(Int, Seq[String])] = {
-    import terms.sparkSession.implicits._
-    terms.groupByKey(t => math.floorMod(t.hashCode, nShards))
-      .transformWithState(new HeavyHitterProcessor(k),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-  }
-
-  private class HeavyHitterProcessor(k: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Int, String, (Int, Seq[String])] {
-    @transient private var counters: org.apache.spark.sql.streaming.MapState[String, Long] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      counters = getHandle.getMapState[String, Long]("mg",
-        org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(shard: Int, rows: Iterator[String],
-        tv: org.apache.spark.sql.streaming.TimerValues): Iterator[(Int, Seq[String])] = {
-      // MG over MapState. The decrement-all arm touches all ≤ k entries,
-      // but it amortizes O(1) per input; the common arm (counted term or
-      // free slot) is a single-entry update.
-      var size = counters.keys().size
-      rows.foreach { term =>
-        if (counters.containsKey(term)) {
-          counters.updateValue(term, counters.getValue(term) + 1L)
-        } else if (size < k) {
-          counters.updateValue(term, 1L)
-          size += 1
-        } else {
-          // Materialize before mutating: removeKey/updateValue during a
-          // live state-store iteration is provider-dependent (fine on
-          // RocksDB snapshot iterators, CME or skipped entries on the
-          // HDFS-backed map provider).
-          counters.iterator().toList.foreach { case (t, c) =>
-            if (c <= 1L) { counters.removeKey(t); size -= 1 }
-            else counters.updateValue(t, c - 1L)
-          }
-        }
-      }
-      Iterator.single((shard, counters.keys().toSeq.sorted))
-    }
-  }
-
-  /** Streaming heavy-hitter candidates: a Misra–Gries counter map per
-    * TERM SHARD held in `mapGroupsWithState` — the unbounded-stream face
-    * of `graft.functions.MisraGries`. Sharding by term hash bounds state
-    * at k counters × nShards regardless of vocabulary size, and since a
-    * term lives in exactly one shard, the per-shard MG guarantee (any
-    * term above shardN/(k+1) survives) is at least as strong as the
-    * global one. Each micro-batch emits the shard's refreshed candidate
-    * list (Update mode); an exact recount over the candidates — the
-    * batch `q_heavy_hitters` second pass — turns candidates into counts
-    * whenever a consumer needs them.
-    */
-  def heavyHitterCandidates(terms: Dataset[String], nShards: Int, k: Int)
-      : Dataset[(Int, Seq[String])] = {
-    import terms.sparkSession.implicits._
-    terms
-      .groupByKey(t => math.floorMod(t.hashCode, nShards))
-      .mapGroupsWithState[Map[String, Long], (Int, Seq[String])](
-        GroupStateTimeout.NoTimeout) {
-        (shard: Int, rows: Iterator[String], state: GroupState[Map[String, Long]]) =>
-          val buf = scala.collection.mutable.HashMap.empty[String, Long]
-          state.getOption.foreach(m => buf ++= m)
-          rows.foreach(t => graft.functions.MisraGries.addTo(buf, t, 1L, k))
-          state.update(buf.toMap)
-          (shard, buf.keysIterator.toSeq.sorted)
-      }
-  }
-
-  final case class TickEvent(
-      key: Long, ts: java.sql.Timestamp, kind: String, value: Double)
-  final case class AsofMatch(
-      key: Long, trade_ts: java.sql.Timestamp, trade_value: Double,
-      quote_ts: Option[Long], quote_value: Option[Double])
-
-  /** Streaming as-of join (the kdb quote/trade shape) over ONE
-    * union-tagged input: `kind = "quote"` rows buffer per key, `kind =
-    * "trade"` rows emit joined to the latest quote with `quote_ts <=
-    * trade_ts` and `trade_ts − quote_ts <= toleranceMs`. Spark's built-in
-    * stream-stream joins cannot express "latest preceding", so this is
-    * the custom-state tier: per-key state is the quote buffer pruned to
-    * the tolerance horizon behind the newest timestamp seen — bounded by
-    * quote rate × tolerance, independent of stream length. Within a
-    * micro-batch, slices sort by (ts, kind): "quote" < "trade"
-    * lexicographically, so a quote stamped exactly at a trade's
-    * timestamp is visible to it (inclusive as-of, matching the batch
-    * operator's backward default). Out-of-order rows across batches are
-    * honored up to the tolerance — the same lateness contract a
-    * watermark gives the built-in joins.
-    */
-  def asofStream(ticks: Dataset[TickEvent], toleranceMs: Long)
-      : Dataset[AsofMatch] = {
-    import ticks.sparkSession.implicits._
-    ticks
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[List[(Long, Double)], AsofMatch](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[TickEvent],
-            state: GroupState[List[(Long, Double)]]) =>
-          val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.kind))
-          var quotes = state.getOption.getOrElse(Nil) // ascending quote ts
-          var horizon = quotes.lastOption.map(_._1).getOrElse(Long.MinValue)
-          val out = Seq.newBuilder[AsofMatch]
-          sorted.foreach { e =>
-            val t = e.ts.getTime
-            horizon = math.max(horizon, t)
-            if (e.kind == "quote") {
-              // cross-batch late quotes may arrive out of order: insert
-              // in place rather than append
-              val (before, after) = quotes.partition(_._1 <= t)
-              quotes = before ::: ((t, e.value) :: after)
-            } else {
-              val m = quotes.takeWhile(_._1 <= t).lastOption
-                .filter(q => t - q._1 <= toleranceMs)
-              out += AsofMatch(key, e.ts, e.value, m.map(_._1), m.map(_._2))
-            }
-          }
-          quotes = quotes.dropWhile(_._1 < horizon - toleranceMs)
-          if (quotes.isEmpty) state.remove() else state.update(quotes)
-          out.result().iterator
-      }
   }
 }

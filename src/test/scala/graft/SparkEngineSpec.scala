@@ -254,14 +254,7 @@ class SparkEngineSpec extends AnyFunSuite {
     val loadedByName = Set(
       "RangeSource", // format("graft.sources.RangeSource")
       "SparkEntry") // the catalog's outside entry point; perfbench calls it
-    // Comment lines, trailing `//` comments and string literals are not code.
-    val code = mainSources().map { case (_, path, src) =>
-      path -> "(?s)\"\"\".*?\"\"\"".r.replaceAllIn(src, "").linesIterator.map { l =>
-        val t = l.trim
-        if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) ""
-        else """(^|\s)//.*""".r.replaceAllIn(""""(?:[^"\\]|\\.)*"""".r.replaceAllIn(l, ""), "")
-      }.mkString("\n")
-    }
+    val code = mainSources().map { case (_, path, src) => path -> codeOnly(src) }
     val decl = ("""(?m)^(?:(?:final|sealed|abstract|case|implicit|private(?:\[\w+\])?)\s+)*""" +
       """(?:object|class|trait)\s+(\w+)""").r
     // name -> (path, start, end) of each top-level declaration; a
@@ -283,5 +276,103 @@ class SparkEngineSpec extends AnyFunSuite {
         } => name
     }.sorted
     assert(dead.isEmpty, s"named by no src/main code but their own: $dead")
+  }
+
+  test("every public def in src/main has a src/main caller") {
+    // The member-level twin of the case above: a public def that no other
+    // src/main code names ships only for its spec. Names are matched as
+    // words, so a member counts as called when any caller names it.
+    // Overrides, entry points and apply/unapply are called from outside.
+    val allowlist = Set(
+      "datasetExists", // DataLake: the reference's existence probe (main.rs:55-57)
+      "d2xy") // HilbertIndex: the inverse SpaceFillingCurveSpec checks xy2d with
+    val code = mainSources().map { case (_, path, src) => path -> codeOnly(src) }
+    val decl = ("""((?:(?:private|protected)(?:\[\w+\])?\s+|override\s+|final\s+|""" +
+      """implicit\s+|inline\s+|@\w+\s+)*)def\s+(\w+)""").r
+    val decls = code.flatMap { case (path, src) =>
+      decl.findAllMatchIn(src).map(m => (path, m.group(1), m.group(2), m.start(2)))
+    }
+    val declSites = decls.map { case (path, _, _, at) => (path, at) }.toSet
+    val notPublic = """\b(?:private|protected|override)\b""".r
+    val dead = decls.collect {
+      case (path, mods, name, _) if notPublic.findFirstIn(mods).isEmpty &&
+        !Set("main", "apply", "unapply")(name) && !allowlist(name) &&
+        !code.exists { case (p, src) =>
+          ("\\b" + name + "\\b").r.findAllMatchIn(src).exists(m => !declSites((p, m.start)))
+        } =>
+        java.nio.file.Paths.get(path).getFileName.toString.stripSuffix(".scala") + "." + name
+    }.distinct.sorted
+    assert(dead.isEmpty, s"public defs no other src/main code names: $dead")
+  }
+
+  /** `src` with comments and string text blanked to spaces, offsets kept;
+    * the code in an interpolated string's `${…}` and `$name` stays.
+    */
+  private def codeOnly(src: String): String = {
+    val out = new StringBuilder(src.length)
+    val charLit = java.util.regex.Pattern.compile("""'(?:\\u[0-9a-fA-F]{4}|\\.|[^\\'\n])'""")
+    val splicedName = java.util.regex.Pattern.compile("""\$[A-Za-z_]\w*""")
+    def blank(from: Int, to: Int): Int = {
+      var k = from
+      while (k < to) { out.append(if (src(k) == '\n') '\n' else ' '); k += 1 }
+      to
+    }
+    def at(p: java.util.regex.Pattern, i: Int): Option[Int] = {
+      val m = p.matcher(src).region(i, src.length)
+      if (m.lookingAt()) Some(m.end) else None
+    }
+    // Copies code from `start`; inside a `${`, returns after its `}`.
+    def lex(start: Int, inSplice: Boolean): Int = {
+      var i = start
+      var depth = 0
+      while (i < src.length) {
+        val c = src(i)
+        if (src.startsWith("//", i)) {
+          val eol = src.indexOf('\n', i)
+          i = blank(i, if (eol < 0) src.length else eol)
+        } else if (src.startsWith("/*", i)) {
+          var j = i
+          var nest = 0
+          while ({
+            if (src.startsWith("/*", j)) { nest += 1; j += 2 }
+            else if (src.startsWith("*/", j)) { nest -= 1; j += 2 }
+            else j += 1
+            nest > 0 && j < src.length
+          }) ()
+          i = blank(i, j)
+        } else if (c == '\'' && at(charLit, i).nonEmpty) {
+          i = blank(i, at(charLit, i).get)
+        } else if (c == '"') {
+          val interp = i > 0 && (src(i - 1).isLetterOrDigit || src(i - 1) == '_')
+          val triple = src.startsWith("\"\"\"", i)
+          i = blank(i, i + (if (triple) 3 else 1))
+          var open = true
+          while (open && i < src.length) {
+            if (triple && src.startsWith("\"\"\"", i) && !src.startsWith("\"\"\"\"", i)) {
+              i = blank(i, i + 3); open = false
+            } else if (!triple && src(i) == '"') {
+              i = blank(i, i + 1); open = false
+            } else if (!triple && src(i) == '\\') i = blank(i, math.min(i + 2, src.length))
+            else if (interp && src.startsWith("$$", i)) i = blank(i, i + 2)
+            else if (interp && src.startsWith("${", i)) i = lex(blank(i, i + 2), inSplice = true)
+            else if (interp && at(splicedName, i).nonEmpty) {
+              val end = at(splicedName, i).get
+              out.append(' ').append(src.substring(i + 1, end))
+              i = end
+            } else i = blank(i, i + 1)
+          }
+        } else if (inSplice && c == '}' && depth == 0) {
+          return blank(i, i + 1)
+        } else {
+          if (inSplice && c == '{') depth += 1
+          if (inSplice && c == '}') depth -= 1
+          out.append(c)
+          i += 1
+        }
+      }
+      i
+    }
+    lex(0, inSplice = false)
+    out.result()
   }
 }

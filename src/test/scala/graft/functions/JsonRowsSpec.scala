@@ -39,12 +39,12 @@ class JsonRowsSpec extends AnyFunSuite {
         "DATE'2024-01-01' + CAST(id % 30 AS INT) AS d")
       .orderBy($"x", $"id".desc)
     val bos = new java.io.ByteArrayOutputStream()
-    JsonRows.writeJson(df, bos)
+    JsonRows.writeJson(JsonRows.jsonRowIterator(df), bos)
     assert(bos.toString("UTF-8") === JsonRows.toJson(df))
     // Empty frame → empty array, both paths.
     val empty = df.filter($"id" < 0)
     val bos2 = new java.io.ByteArrayOutputStream()
-    JsonRows.writeJson(empty, bos2)
+    JsonRows.writeJson(JsonRows.jsonRowIterator(empty), bos2)
     assert(bos2.toString("UTF-8") === "[]")
     assert(JsonRows.toJson(empty) === "[]")
   }

@@ -90,16 +90,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(feats.where($"features".isNotNull).count() === 0)
   }
 
-  test("resizeImage produces decodable PNGs at the target dimensions") {
-    val df = Seq((1L, fixturePng), (2L, "not an image".getBytes)).toDF("id", "payload")
-    val out = Multimodal.resizeImage(df, targetW = 8, targetH = 6)
-      .select($"id", $"resized").collect().map(r =>
-        r.getLong(0) -> Option(r.getAs[Array[Byte]](1))).toMap
-    val resized = out(1L).get
-    assert(Multimodal.ImageIoDecoder.meta(resized) === ((8, 6, "png")))
-    assert(out(2L) === None) // undecodable → null, row survives
-  }
-
   test("attachImagePayload emits genuine near-square PNGs with closed-form dims") {
     val d = Seq((1L, "hello world"), (2L, "x"), (3L, "a" * 17)).toDF("doc_id", "text")
     val out = Multimodal.decodeMeta(Multimodal.attachImagePayload(d))
@@ -125,14 +115,6 @@ class MultimodalSpec extends AnyFunSuite {
     val frames = out.select("frames").as[Seq[Array[Byte]]].head()
     assert(frames.nonEmpty)
     assert(frames.forall(_.length <= 64))
-  }
-
-  test("payload-aware repartitioning bounds bytes per partition") {
-    val big = Multimodal.attachPayload(
-      (1 to 100).map(i => (i.toLong, "x" * 10000)).toDF("doc_id", "text"))
-    val parts = Multimodal.repartitionByPayload(big, targetMb = 1)
-      .rdd.getNumPartitions
-    assert(parts >= 1) // 1MB total < 1MB target → 1 partition; shape check
   }
 
   test("audio payload synth round-trips: parsed samples match the closed form") {

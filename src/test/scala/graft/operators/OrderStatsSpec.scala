@@ -115,26 +115,26 @@ class OrderStatsSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", before)
   }
 
-  test("releaseCheckpoints drops every block a chained query pinned") {
+  test("Ckpt.releaseAll drops every block a chained OrderStats query pinned") {
+    val sc = spark.sparkContext
     // Baseline: release anything earlier tests in this shared session
-    // left behind, so the counts below are this test's own.
-    OrderStats.releaseCheckpoints(spark, blocking = true)
-    assert(OrderStats.pinnedCheckpointCount(spark) == 0)
+    // left behind, so the counts below are this query's own.
+    graft.Ckpt.releaseAll(spark)
+    assert(sc.getPersistentRDDs.isEmpty)
     // A chained two-call query: second running() consumes the first's
-    // output, so two localCheckpoints materialize.
+    // output, so two checkpoints materialize and stay pinned.
     val first = OrderStats.running(df, Seq(col("k"), col("id")), Some("rn"),
       Seq("v" -> "cum_v"))
     val second = OrderStats.running(
       first.select(col("id"), col("rn"), col("cum_v")),
       Seq(col("cum_v"), col("id")), Some("rn2"))
-    val n = second.count()
-    assert(n == 997)
-    assert(OrderStats.pinnedCheckpointCount(spark) == 2)
-    // After egress: deterministic release, nothing left pinned by us.
-    assert(OrderStats.releaseCheckpoints(spark, blocking = true) == 2)
-    assert(OrderStats.pinnedCheckpointCount(spark) == 0)
-    // And the registry itself drained — a second release is a no-op.
-    assert(OrderStats.releaseCheckpoints(spark, blocking = true) == 0)
+    assert(second.count() == 997)
+    assert(sc.getPersistentRDDs.size == 2)
+    // After egress: the release the gate mains run between queries
+    // leaves nothing persistent.
+    graft.Ckpt.releaseAll(spark)
+    assert(sc.getPersistentRDDs.isEmpty)
+    assert(sc.getRDDStorageInfo.isEmpty)
   }
 
   test("neither path plans an unpartitioned window") {

@@ -69,23 +69,6 @@ class StreamsSpec extends AnyFunSuite {
     }
   }
 
-  test("streaming dedup drops repeated event ids") {
-    val dir = Files.createTempDirectory("events2").toString
-    Seq(
-      (1L, 60_000_000_000L, 10L, "click", 1.0, "{}"),
-      (1L, 60_000_000_000L, 10L, "click", 1.0, "{}"), // duplicate delivery
-      (2L, 61_000_000_000L, 10L, "click", 2.0, "{}")
-    ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(dir)
-
-    val q = Streams.dedupStream(Streams.eventsStream(spark, dir))
-      .writeStream.format("memory").queryName("dd").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      assert(spark.table("dd").count() === 2)
-    } finally q.stop()
-  }
-
   test("checkpointed restart resumes from committed offsets, no duplicates") {
     val src = Files.createTempDirectory("ck_src").toString
     val out = Files.createTempDirectory("ck_out").toString
@@ -200,108 +183,6 @@ class StreamsSpec extends AnyFunSuite {
       s"cross-restart window must merge to n=3 total=4.0: $got")
   }
 
-  test("dedupWithinWatermark collapses retries that re-stamp the timestamp") {
-    val dir = Files.createTempDirectory("events2b").toString
-    Seq(
-      (1L, 60_000_000_000L, 10L, "click", 1.0, "{}"),
-      (1L, 65_000_000_000L, 10L, "click", 1.0, "{}"), // retry, NEW ts
-      (2L, 61_000_000_000L, 10L, "click", 2.0, "{}")
-    ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(dir)
-
-    val q = Streams.dedupWithinWatermark(Streams.eventsStream(spark, dir))
-      .writeStream.format("memory").queryName("ddw").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // keyed-on-(id,ts) dedup would emit 3 rows; id-only within-watermark
-      // dedup collapses the re-stamped retry.
-      assert(spark.table("ddw").count() === 2)
-    } finally q.stop()
-  }
-
-  test("sliding windows assign each event to length/slide overlapping windows") {
-    val dir = Files.createTempDirectory("events2c").toString
-    // one event at t=6min: 10min/5min sliding → windows [0,10) and [5,15)
-    Seq((1L, 360_000_000_000L, 10L, "click", 1.0, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(dir)
-
-    val q = Streams.slidingCounts(Streams.eventsStream(spark, dir))
-      .writeStream.format("memory").queryName("sw").outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      val starts = spark.table("sw").select("w_start")
-        .as[java.sql.Timestamp].collect().map(_.getTime).toSet
-      assert(starts === Set(0L, 300_000L))
-    } finally q.stop()
-  }
-
-  test("ingestDedupStream emits only documents absent from the corpus") {
-    import org.apache.spark.sql.functions.col
-    import graft.functions.{BloomFunctions, HashFunctions}
-    val corpus = Seq((1L, "alpha beta"), (2L, "gamma delta"), (3L, "epsilon zeta"))
-      .toDF("doc_id", "text")
-    val corpusHashes = corpus.select(HashFunctions.md5fast(col("text")).as("h"))
-    val bloom = BloomFunctions.build(corpusHashes, col("h"), 1000L, 8000L)
-
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = MemoryStream[(Long, String)]
-    in.addData(
-      (10L, "alpha beta"),      // exact dup of corpus doc 1 → dropped
-      (11L, "brand new text"),  // new → kept
-      (12L, "gamma delta"),     // dup of corpus doc 2 → dropped
-      (13L, "another new one")) // new → kept
-    val q = Streams.ingestDedupStream(
-        in.toDF.toDF("doc_id", "text"), corpusHashes, bloom)
-      .writeStream.format("memory").queryName("ingest").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val kept = spark.table("ingest").select("doc_id")
-        .as[Long].collect().toSet
-      assert(kept === Set(11L, 13L))
-    } finally q.stop()
-  }
-
-  test("streamToLake ingests a stream into a partitioned parquet lake") {
-    val src = Files.createTempDirectory("events3").toString
-    val lake = s"${Files.createTempDirectory("lake3")}/events"
-    val ckpt = Files.createTempDirectory("ckpt3").toString
-    Seq(
-      (1L, 60_000_000_000L, 10L, "click", 1.0, "{}"),
-      (2L, 61_000_000_000L, 10L, "view", 2.0, "{}"),
-      (3L, 62_000_000_000L, 11L, "click", 3.0, "{}")
-    ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(src)
-
-    val q = Streams.streamToLake(Streams.eventsStream(spark, src), lake,
-      partitionBy = Seq("event_type"), checkpoint = ckpt)
-    try q.awaitTermination() finally q.stop() // AvailableNow: ends at source end
-    assert(java.nio.file.Files.isDirectory(
-      java.nio.file.Paths.get(lake, "event_type=click")))
-    val back = spark.read.parquet(lake)
-    assert(back.count() === 3)
-    assert(back.filter($"event_type" === "click").count() === 2)
-  }
-
-  test("sessionize closes sessions on inactivity gaps (custom state)") {
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[Streams.SessionEvent]
-    ms.addData(
-      Streams.SessionEvent(1L, ts(0), 1.0),
-      Streams.SessionEvent(1L, ts(1000), 2.0),
-      Streams.SessionEvent(1L, ts(100000), 3.0), // > 10s gap → closes first
-      Streams.SessionEvent(2L, ts(0), 9.0))      // still open, no output
-    val q = Streams.sessionize(ms.toDS(), gapMs = 10000)
-      .writeStream.format("memory").queryName("sess").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val sessions = spark.table("sess")
-        .select("user_id", "n_events", "total_value")
-        .as[(Long, Long, Double)].collect().toSet
-      assert(sessions === Set((1L, 2L, 3.0)))
-    } finally q.stop()
-  }
-
   test("transformWithState sessionization matches the fMGWS semantics") {
     implicit val sqlCtx = spark.sqlContext
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
@@ -329,172 +210,6 @@ class StreamsSpec extends AnyFunSuite {
     }
   }
 
-  test("event-time timers close idle sessions without further user events") {
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ms = MemoryStream[Streams.SessionEvent]
-      // All above t=0: rows at or below the INITIAL watermark (0) would
-      // be dropped as late before reaching the processor in EventTime mode.
-      ms.addData(
-        Streams.SessionEvent(1L, ts(3600000), 1.0),
-        Streams.SessionEvent(1L, ts(3601000), 2.0),
-        Streams.SessionEvent(2L, ts(3600000), 9.0))
-      val q = Streams.sessionizeTwsTimers(
-          ms.toDS().withWatermark("ts", "10 seconds"), gapMs = 10000)
-        .writeStream.format("memory").queryName("sess3").outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        // Nothing closes yet: watermark is still below both deadlines.
-        assert(spark.table("sess3").isEmpty)
-        // A third user's event advances the watermark past both idle
-        // deadlines: BOTH sessions must emit although users 1 and 2
-        // never sent another event — gap detection alone cannot do this.
-        ms.addData(Streams.SessionEvent(3L, ts(4200000), 5.0))
-        q.processAllAvailable()
-        val sessions = spark.table("sess3")
-          .select("user_id", "n_events", "total_value")
-          .as[(Long, Long, Double)].collect().toSet
-        assert(sessions === Set((1L, 2L, 3.0), (2L, 1L, 9.0)), sessions.toString)
-      } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("windowed quantiles track the per-window value distribution") {
-    val dir = Files.createTempDirectory("eventsq").toString
-    // One 10-min window holding values 1..100 for clicks: p50≈50, p99≈99.
-    (1 to 100).map(i =>
-        (i.toLong, i * 1_000_000_000L, 10L, "click", i.toDouble, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(dir)
-    val q = Streams.windowedQuantiles(
-        Streams.eventsStream(spark, dir), "10 minutes", "5 minutes")
-      .writeStream.format("memory").queryName("wq").outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      val rows = spark.table("wq")
-        .select($"n", $"p50_p95_p99").as[(Long, Seq[Double])].collect()
-      val inFirst = rows.find(_._1 > 50).get // the full 0-10min window
-      val Seq(p50, p95, p99) = inFirst._2
-      assert(p50 >= 40 && p50 <= 60, s"p50=$p50")
-      assert(p95 >= 90 && p95 <= 100, s"p95=$p95")
-      assert(p99 >= p95 && p99 <= 100, s"p99=$p99")
-    } finally q.stop()
-  }
-
-  test("ListState ring buffer keeps the last n values across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ms = MemoryStream[Streams.SessionEvent]
-      ms.addData((1 to 5).map(i => Streams.SessionEvent(1L, ts(i * 1000), i.toDouble)): _*)
-      val q = Streams.rollingUserStats(ms.toDS(), n = 3)
-        .toDF("user_id", "n_window", "mean")
-        .writeStream.format("memory").queryName("roll").outputMode("update").start()
-      try {
-        q.processAllAvailable()
-        // Batch 2 must see ONLY the retained (3,4,5), then append 6.
-        ms.addData(Streams.SessionEvent(1L, ts(6000), 6.0))
-        q.processAllAvailable()
-        val rows = spark.table("roll")
-          .select($"n_window", $"mean").as[(Int, Double)].collect().toSet
-        assert(rows.contains((3, 4.0)), s"batch 1 mean of (3,4,5): $rows")
-        assert(rows.contains((3, 5.0)), s"batch 2 mean of (4,5,6): $rows")
-      } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("MapState heavy hitters match the mapGroupsWithState formulation") {
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ms = MemoryStream[String]
-      ms.addData(Seq.fill(50)("hot") ++ (1 to 30).map(i => s"n$i"): _*)
-      val q = Streams.heavyHitterCandidatesTws(ms.toDS(), nShards = 3, k = 4)
-        .toDF("shard", "cands")
-        .writeStream.format("memory").queryName("hh2").outputMode("update").start()
-      try {
-        q.processAllAvailable()
-        ms.addData(Seq.fill(40)("warm") ++ (31 to 60).map(i => s"n$i"): _*)
-        q.processAllAvailable()
-        val rows = spark.table("hh2").select($"shard", $"cands")
-          .as[(Int, Seq[String])].collect()
-        val cands = rows.flatMap(_._2).toSet
-        assert(cands.contains("hot") && cands.contains("warm"), s"got $cands")
-        assert(rows.forall(_._2.size <= 4), "per-shard capacity violated")
-      } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("streaming heavy-hitter candidates keep heavy terms across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[String]
-    val k = 4
-    // Batch 1: "hot" dominates, plus singleton noise filling the counters.
-    ms.addData(Seq.fill(50)("hot") ++ (1 to 30).map(i => s"n$i"): _*)
-    val q = Streams.heavyHitterCandidates(ms.toDS(), nShards = 3, k = k)
-      .toDF("shard", "cands")
-      .writeStream.format("memory").queryName("hh").outputMode("update").start()
-    try {
-      q.processAllAvailable()
-      // Batch 2: a second heavy term arrives later; "hot" must survive
-      // the continued noise because its stored count dwarfs decrements.
-      ms.addData(Seq.fill(40)("warm") ++ (31 to 60).map(i => s"n$i"): _*)
-      q.processAllAvailable()
-      // Memory-sink row order across update batches is not contractual:
-      // assert over ALL emitted candidate lists. "warm" only exists in
-      // batch 2, so its presence proves the later update; "hot" appearing
-      // with batch-2 rows present proves survival through the noise.
-      val rows = spark.table("hh").select($"shard", $"cands")
-        .as[(Int, Seq[String])].collect()
-      val cands = rows.flatMap(_._2).toSet
-      assert(cands.contains("hot") && cands.contains("warm"), s"got $cands")
-      assert(rows.forall(_._2.size <= k), "per-shard capacity violated")
-    } finally q.stop()
-  }
-
-  test("outer stream-stream join emits unattributed purchases on state expiry") {
-    val dir = Files.createTempDirectory("events4").toString
-    def write(batch: Seq[(Long, Long, Long, String, Double, String)], part: String): Unit =
-      batch.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .write.mode("append").parquet(s"$dir/$part")
-    // p1 has a click 100s earlier (attributed); p2 has none.
-    write(Seq(
-      (1L, 3_500_000_000_000L, 10L, "click", 0.0, "{}"),
-      (2L, 3_600_000_000_000L, 10L, "purchase", 9.0, "{}"),
-      (3L, 7_200_000_000_000L, 11L, "purchase", 5.0, "{}")), "p1")
-    val q = Streams.attributionWithMisses(Streams.eventsStream(spark, s"$dir/*"))
-      .writeStream.format("memory").queryName("attr").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // Advance BOTH watermarks far past p2_ts + horizon → p2's state
-      // expires and the null-click row must emit.
-      write(Seq(
-        (4L, 20_000_000_000_000L, 99L, "click", 0.0, "{}"),
-        (5L, 20_000_000_000_000L, 99L, "purchase", 1.0, "{}")), "p2")
-      q.processAllAvailable()
-      val rows = spark.table("attr")
-        .select($"p_id", $"c_id").as[(Long, Option[Long])].collect().toSet
-      assert(rows.contains((2L, Some(1L))), s"p1 must attribute to c1: $rows")
-      assert(rows.contains((3L, None)), s"p2 must emit unattributed: $rows")
-    } finally q.stop()
-  }
-
   test("late data beyond the watermark is dropped from windowed aggregation") {
     val dir = Files.createTempDirectory("events3").toString
     def write(batch: Seq[(Long, Long, Long, String, Double, String)], part: String): Unit =
@@ -516,80 +231,6 @@ class StreamsSpec extends AnyFunSuite {
         .filter($"w_start" === ts(0)).select("n", "total_value")
         .as[(Long, Double)].collect().toSeq
       assert(firstWindow === Seq((1L, 1.0))) // late event 3 not counted
-    } finally q.stop()
-  }
-
-  test("stream-static join broadcasts the dimension") {
-    val dir = Files.createTempDirectory("events4").toString
-    Seq((1L, 60_000_000_000L, 10L, "click", 1.0, "{}"),
-      (2L, 61_000_000_000L, 11L, "click", 2.0, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(dir)
-    val users = Seq((10L, "alice"), (11L, "bob")).toDF("user_id", "name")
-    val q = Streams.enrichStream(Streams.eventsStream(spark, dir), users, "user_id")
-      .writeStream.format("memory").queryName("enriched").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val names = spark.table("enriched").select("name").as[String].collect().toSet
-      assert(names === Set("alice", "bob"))
-    } finally q.stop()
-  }
-
-  test("stream-stream join attributes purchases to recent clicks only") {
-    val dir = Files.createTempDirectory("events5").toString
-    Seq(
-      (1L, 60_000_000_000L, 10L, "click", 0.0, "{}"),     // t=60s
-      (2L, 120_000_000_000L, 10L, "purchase", 9.0, "{}"), // t=120s ← click 1 in horizon
-      (3L, 100_000_000_000L, 11L, "purchase", 5.0, "{}"), // no click for user 11
-      (4L, 7_200_000_000_000L, 12L, "click", 0.0, "{}"),  // t=2h
-      (5L, 7_210_000_000_000L, 12L, "purchase", 7.0, "{}")// click 4 in horizon
-    ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(dir)
-    val q = Streams.purchaseAttribution(
-        Streams.eventsStream(spark, dir), "10 minutes", "30 minutes")
-      .writeStream.format("memory").queryName("attr").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val pairs = spark.table("attr").select("p_id", "c_id")
-        .as[(Long, Long)].collect().toSet
-      assert(pairs === Set((2L, 1L), (5L, 4L)))
-    } finally q.stop()
-  }
-
-  test("streaming as-of join matches trades to the latest preceding quote") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def tick(key: Long, ms: Long, kind: String, v: Double) =
-      Streams.TickEvent(key, new java.sql.Timestamp(ms), kind, v)
-    val in = MemoryStream[Streams.TickEvent]
-    val q = Streams.asofStream(in.toDS(), toleranceMs = 100L)
-      .writeStream.format("memory").queryName("asof_stream")
-      .outputMode("append").start()
-    try {
-      // batch 1: quotes before/at/after; a trade before any quote
-      in.addData(
-        tick(1, 10, "quote", 1.0), tick(1, 50, "quote", 2.0),
-        tick(1, 50, "trade", 100.0),  // equal-ts quote IS visible
-        tick(1, 5, "trade", 99.0),    // precedes every quote -> no match
-        tick(2, 40, "quote", 7.0))
-      q.processAllAvailable()
-      // batch 2: cross-batch match, tolerance miss, key isolation
-      in.addData(
-        tick(1, 120, "trade", 101.0),  // matches (50, 2.0), within 100ms
-        tick(1, 170, "trade", 102.0),  // 170-50 > 100 -> no match
-        tick(2, 60, "trade", 200.0))   // key 2 sees only its own quote
-      q.processAllAvailable()
-      val got = spark.table("asof_stream")
-        .select("key", "trade_value", "quote_ts", "quote_value")
-        .collect()
-        .map(r => (r.getLong(0), r.getDouble(1),
-          if (r.isNullAt(2)) None else Some(r.getLong(2)),
-          if (r.isNullAt(3)) None else Some(r.getDouble(3)))).toSet
-      assert(got === Set(
-        (1L, 100.0, Some(50L), Some(2.0)),
-        (1L, 99.0, None, None),
-        (1L, 101.0, Some(50L), Some(2.0)),
-        (1L, 102.0, None, None),
-        (2L, 200.0, Some(40L), Some(7.0))))
     } finally q.stop()
   }
 }
