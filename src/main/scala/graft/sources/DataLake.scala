@@ -26,23 +26,34 @@ import graft.{Ckpt, DatasetLoadException}
   * only marks the key seen: a one-off load keeps the lazy scan, in which
   * a preview reads the first partition and a regression its two columns.
   * The second load of the same key materialises the whole file with the
-  * one checkpoint primitive, `Ckpt.local(df, MEMORY_AND_DISK_SER)`. The
-  * frame is a `LogicalRDD` over the checkpoint's blocks, and no fresh
-  * `spark.read` plan can match it, so Spark's CacheManager never serves a
-  * later read from it. (A `.cache()`d file scan would be matched by plan,
-  * and a same-schema rewrite keeps the plan: stale rows.) Serialized
-  * blocks are the smaller level ([[DataLake.SizeFactor]]).
+  * one checkpoint primitive, `Ckpt.local`, at the level of
+  * [[DataLake.level]]. The frame is a `LogicalRDD` over the checkpoint's
+  * blocks, and no fresh `spark.read` plan can match it, so Spark's
+  * CacheManager never serves a later read from it. (A `.cache()`d file
+  * scan would be matched by plan, and a same-schema rewrite keeps the
+  * plan: stale rows.)
+  *  - Level: deserialized rows (`MEMORY_AND_DISK`) while the file ×
+  *    [[DataLake.DeserializedFactor]] fits the budget, so a request reads
+  *    rows without decoding each one again; else serialized blocks
+  *    (`MEMORY_AND_DISK_SER`, about a quarter of the size) while the file
+  *    × [[DataLake.SizeFactor]] fits.
+  *  - One partition: a file whose scan is one partition (any CSV up to
+  *    about `spark.sql.files.openCostInBytes`, 4 MB) is stored as
+  *    `coalesce(1)` with its layout kept, so the frame reports
+  *    `SinglePartition`. A regression's global aggregate and an unlimited
+  *    sort then plan with no exchange: one job and no shuffle per request.
+  *    A file that scans as several partitions keeps them, so a big file
+  *    is never funnelled into one task.
   *  - Concurrent loads that admit one path run one materialisation; the
   *    others wait for it.
   *  - The file is stat'ed before and after the read, and the frame is
   *    kept only when the two agree. A frame read across a rewrite still
   *    answers its own caller, as an uncached read would.
-  *  - A frame is admitted while its estimate (file bytes ×
-  *    [[DataLake.SizeFactor]]) fits `budgetBytes` by the pure `Ckpt.sized`
-  *    rule; least-recently-used entries are evicted until the resident
-  *    estimate fits again; an evicted file is admitted again on its
-  *    second load. A file that does not fit on its own is read uncached
-  *    on every call. The budget is `Ckpt.budget`, a quarter of the heap;
+  *  - A frame is admitted while its estimate (file bytes × the factor of
+  *    its level) fits `budgetBytes`; least-recently-used entries are
+  *    evicted until the resident estimate fits again; an evicted file
+  *    is admitted again on its second load. A file that does not fit on
+  *    its own is read uncached on every call. The budget is `Ckpt.budget`, a quarter of the heap;
   *    only this package's tests pass another.
   *  - Evicting or invalidating an entry only drops the reference; Spark's
   *    ContextCleaner frees the blocks once the requests still reading the
@@ -134,14 +145,19 @@ final class DataLake private[sources] (spark: SparkSession, baseDir: String,
   private def frame(format: String, path: String, options: Map[String, String]): DataFrame = {
     def stat() = SchemaCache.stat(spark, format, path, options)
     def uncached() = SchemaCache.read(spark, format, path, options)
-    stat() match {
-      case Some((real, key)) if fits(key.size) =>
-        slots.synchronized { resolved.put(path, real); lookup(real, key) } match {
+    stat().map { case (real, key) => (real, key, DataLake.level(key.size, budget)) } match {
+      case Some((real, key, Some((level, factor)))) =>
+        val bytes = (BigDecimal(key.size) * factor).toBigInt
+        slots.synchronized { resolved.put(path, real); lookup(real, key, bytes) } match {
           case None => uncached()
           case Some((slot, fill)) =>
             if (fill)
               try {
-                val df = Ckpt.local(uncached(), StorageLevel.MEMORY_AND_DISK_SER)
+                val scan = uncached()
+                val df =
+                  if (scan.queryExecution.toRdd.getNumPartitions == 1)
+                    Ckpt.local(scan.coalesce(1), level, keepLayout = true)
+                  else Ckpt.local(scan, level)
                 if (!stat().contains((real, key))) forget(real, slot)
                 slot.frame.complete(df)
               } catch {
@@ -152,7 +168,7 @@ final class DataLake private[sources] (spark: SparkSession, baseDir: String,
             try slot.frame.join()
             catch { case e: CompletionException => throw e.getCause }
         }
-      case Some((real, _)) =>
+      case Some((real, _, None)) =>
         // Over the budget on its own; drop the entry it had while it fit.
         slots.synchronized {
           resolved.put(path, real)
@@ -175,17 +191,18 @@ final class DataLake private[sources] (spark: SparkSession, baseDir: String,
   private[sources] def footprint: (BigInt, Int) = slots.synchronized((resident, seen.size))
 
   /** The entry for `key`, and whether this caller fills it; `None` on the
-    * first load of `key`, which only marks it seen. A stale entry for
-    * `real` is dropped either way. Caller holds the lock on `slots`.
+    * first load of `key`, which only marks it seen. A new entry counts
+    * `bytes`. A stale entry for `real` is dropped either way. Caller holds
+    * the lock on `slots`.
     */
-  private def lookup(real: Path, key: SchemaCache.Key): Option[(Slot, Boolean)] =
+  private def lookup(real: Path, key: SchemaCache.Key, bytes: BigInt): Option[(Slot, Boolean)] =
     Option(slots.get(real)) match {
       case Some(hit) if hit.key == key => Some((hit, false))
       case stale =>
         stale.foreach { old => slots.remove(real); dropped(real, old, "invalidate") }
         if (seen.remove(real) != key) { seen.put(real, key); None }
         else {
-          val s = new Slot(key, estimate(key.size))
+          val s = new Slot(key, bytes)
           slots.put(real, s)
           resident += s.bytes
           logInfo(s"[lake] admit $real est=${s.bytes}B resident=${resident}B")
@@ -197,12 +214,6 @@ final class DataLake private[sources] (spark: SparkSession, baseDir: String,
           Some((s, true))
         }
     }
-
-  private def estimate(fileBytes: Long): BigInt =
-    (BigDecimal(fileBytes) * DataLake.SizeFactor).toBigInt
-
-  private def fits(fileBytes: Long): Boolean =
-    Ckpt.sized(fileBytes, DataLake.SizeFactor, budget) == StorageLevel.MEMORY_AND_DISK
 
   /** Drops `slot` if it is still the entry for `real`. */
   private def forget(real: Path, slot: Slot): Unit = slots.synchronized {
@@ -225,12 +236,25 @@ object DataLake {
   val CsvOptions: Map[String, String] =
     Map("header" -> "true", "inferSchema" -> "true", "escape" -> "\"")
 
-  /** Resident bytes of a cached frame per byte of its file, rounded up
-    * from perfbench's trips lake: serialized, compressed blocks took 0.63×
-    * the 2.6 MB CSV and 1.29× its 1.3 MB parquet twin (deserialized blocks
-    * took 2.8× and 5.8×).
+  /** Resident bytes of a cached frame per byte of its file, at each
+    * level, rounded up from perfbench's trips lake (a 2.6 MB CSV and its
+    * 1.3 MB parquet twin). Deserialized blocks took 2.8× (CSV) and 5.8×
+    * (parquet) the file; serialized, compressed blocks took 0.63× and 1.29×.
     */
+  val DeserializedFactor: Double = 6.0
   val SizeFactor: Double = 2.0
+
+  /** The level a file of `fileBytes` is cached at, with the factor of its
+    * resident estimate: deserialized (`MEMORY_AND_DISK`) while the file ×
+    * [[DeserializedFactor]] fits `budget`, else serialized
+    * (`MEMORY_AND_DISK_SER`) while the file × [[SizeFactor]] fits; `None`
+    * reads the file uncached. Each test is the pure `Ckpt.sized` rule.
+    */
+  private[sources] def level(fileBytes: Long, budget: BigInt): Option[(StorageLevel, Double)] =
+    Seq(StorageLevel.MEMORY_AND_DISK -> DeserializedFactor,
+      StorageLevel.MEMORY_AND_DISK_SER -> SizeFactor).find { case (_, factor) =>
+      Ckpt.sized(fileBytes, factor, budget) == StorageLevel.MEMORY_AND_DISK
+    }
 }
 
 /** File-keyed schema cache under [[DataLake.load]] and [[graft.Tables]].
@@ -264,9 +288,10 @@ object DataLake {
   * call site, which per-layer tracing (perfbench) attributes to sources.
   */
 object SchemaCache {
-  private[sources] final case class Key(format: String, options: Seq[(String, String)],
+  /** Maps compare equal whatever their order, so neither map is sorted. */
+  private[sources] final case class Key(format: String, options: Map[String, String],
       fileKey: AnyRef, size: Long, mtime: AnyRef, ctime: AnyRef,
-      sqlConf: Seq[(String, String)])
+      sqlConf: Map[String, String])
 
   private val entries = new ConcurrentHashMap[Path, (Key, StructType)]()
 
@@ -299,8 +324,8 @@ object SchemaCache {
         catch { case _: UnsupportedOperationException =>
           Files.readAttributes(real, "isRegularFile,fileKey,size,lastModifiedTime") }
       if (a.get("isRegularFile") != java.lang.Boolean.TRUE) None
-      else Some(real -> Key(format, options.toSeq.sorted, a.get("fileKey"),
+      else Some(real -> Key(format, options, a.get("fileKey"),
         a.get("size").asInstanceOf[java.lang.Long], a.get("lastModifiedTime"), a.get("ctime"),
-        spark.conf.getAll.filter(_._1.startsWith("spark.sql.")).toSeq.sorted))
+        spark.conf.getAll.filter(_._1.startsWith("spark.sql."))))
     } catch { case _: java.io.IOException | _: InvalidPathException => None }
 }

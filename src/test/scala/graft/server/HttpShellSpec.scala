@@ -120,6 +120,55 @@ class HttpShellSpec extends AnyFunSuite {
     assert(after.body() !== before.body())
   }
 
+  test("a cached one-partition frame serves every route as a plain read does") {
+    import graft.functions.JsonRows
+    import graft.operators.{Preview, Regression, SortedDelays}
+    import graft.sources.DataLake
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.LogicalRDD
+    // Unique (departure_delay, arrival_delay) pairs: each sort has one answer.
+    val n = 3000
+    val rows = (0 until n).map { i =>
+      val dep = if (i % 11 == 0) "" else ((i * 37) % 181 - 20).toString
+      s"t$i,${(i * 7919) % n},$dep,${(i * 13 + 5) % 997}.25"
+    }
+    val p = Paths.get(lakeDir, "onepart.csv")
+    Files.writeString(p, rows.mkString("trip,arrival_delay,departure_delay,km\n", "\n", "\n"))
+    val plain = spark.read.options(DataLake.CsvOptions).csv(p.toString)
+    val sibling = new DataLake(spark, lakeDir)
+    sibling.load("onepart")
+    sibling.load("onepart").queryExecution.analyzed match {
+      case r: LogicalRDD => assert(r.outputPartitioning === SinglePartition)
+      case other => fail(s"the second load is not a cached frame: $other")
+    }
+    val want = Seq(
+      "/data/onepart/preview?limit=7" -> JsonRows.toJson(Preview.run(plain, Some(7))),
+      "/data/onepart/delays?sorting=Desc&limit=25" ->
+        JsonRows.toJson(SortedDelays.run(plain, Some(SortedDelays.Desc), Some(25))),
+      "/data/onepart/delays?sorting=Asc" ->
+        JsonRows.toJson(SortedDelays.run(plain, Some(SortedDelays.Asc), None)),
+      "/data/onepart/delays" -> JsonRows.toJson(SortedDelays.run(plain, None, None)))
+    val ols = Regression.run(plain, "km", "arrival_delay")
+    val num = """"(\w+)":(-?[0-9.Ee-]+|null)""".r
+    def close(a: Double, b: Double) = math.abs(a - b) <= 1e-9 * math.max(1.0, math.abs(b))
+    // Round 1's first request reads the file uncached and its second
+    // admits it; every later request is served from the cached frame.
+    for (round <- 1 to 4) {
+      for ((path, body) <- want) {
+        val r = get(path)
+        assert(r.statusCode() === 200, s"$path, round $round")
+        assert(r.body() === body, s"$path, round $round")
+      }
+      val r = post("/data/onepart/regression", """{"x_col":"km","y_col":"arrival_delay"}""")
+      assert(r.statusCode() === 200, r.body())
+      val got = num.findAllMatchIn(r.body()).map(m => m.group(1) -> m.group(2)).toMap
+      assert(close(got("slope").toDouble, ols.slope), s"${r.body()} vs $ols, round $round")
+      assert(close(got("intercept").toDouble, ols.intercept), s"${r.body()} vs $ols, round $round")
+      assert(got("r2") !== "null")
+      assert(close(got("r2").toDouble, ols.r2.get), s"${r.body()} vs $ols, round $round")
+    }
+  }
+
   test("delays sorts all *delay* columns desc with nulls first") {
     val r = get("/data/trains/delays?sorting=Desc")
     assert(r.statusCode() === 200)

@@ -4,19 +4,24 @@ import java.nio.file.{Files, Path}
 import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.functions.JsonRows
+import graft.operators.Regression
 
 /** The frame cache in `DataLake.load`: the first load of a file version
   * is read uncached, the second materialises it, and later loads reuse
   * that frame while the file is unchanged. Every served body is compared
   * with a plain `spark.read` of the same file. Budgets are passed
-  * explicitly, in estimate bytes (file bytes × `DataLake.SizeFactor`).
+  * explicitly, in estimate bytes (file bytes × the factor of a level).
   */
-class FrameCacheSpec extends AnyFunSuite {
+class FrameCacheSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   private lazy val sc = spark.sparkContext
   import spark.implicits._
@@ -33,8 +38,9 @@ class FrameCacheSpec extends AnyFunSuite {
     Files.writeString(dir.resolve(s"$name.csv"), body.mkString("id,name,v\n", "\n", "\n"))
   }
 
-  private def estimate(p: Path): BigInt =
-    (BigDecimal(Files.size(p)) * DataLake.SizeFactor).toBigInt
+  /** The resident estimate of `p` stored serialized, or at `factor`. */
+  private def estimate(p: Path, factor: Double = DataLake.SizeFactor): BigInt =
+    (BigDecimal(Files.size(p)) * factor).toBigInt
 
   private def plainCsv(p: Path): DataFrame =
     spark.read.options(DataLake.CsvOptions).csv(p.toString)
@@ -43,6 +49,9 @@ class FrameCacheSpec extends AnyFunSuite {
 
   private def cached(df: DataFrame): Boolean =
     df.queryExecution.analyzed.isInstanceOf[LogicalRDD]
+
+  private def stored(df: DataFrame): LogicalRDD =
+    df.queryExecution.analyzed.asInstanceOf[LogicalRDD]
 
   /** The first load marks the file seen; the second admits it. */
   private def admitted(lake: DataLake, id: String): DataFrame = {
@@ -159,7 +168,8 @@ class FrameCacheSpec extends AnyFunSuite {
     val lake = new DataLake(spark, dir.toString, Roomy)
     assert(cached(admitted(lake, "a")))
     lake.load("b")
-    assert(lake.footprint === ((estimate(a), 1)), "a is resident, b is seen")
+    assert(lake.footprint === ((estimate(a, DataLake.DeserializedFactor), 1)),
+      "a is resident, b is seen")
     Files.delete(a)
     intercept[graft.DatasetLoadException](lake.load("a"))
     assert(lake.footprint._1 === 0, "a's frame is dropped")
@@ -190,5 +200,60 @@ class FrameCacheSpec extends AnyFunSuite {
     val b = lake.load("b")
     assert(!cached(b), "b was evicted; its next load is read uncached")
     assert(body(b) === body(plainCsv(dir.resolve("b.csv"))))
+  }
+
+  test("on a cached one-partition frame a regression runs one Spark job and no exchange") {
+    val dir = tmpDir()
+    val p = writeCsv(dir, "t", 2000)
+    val lake = new DataLake(spark, dir.toString, Roomy)
+    val df = admitted(lake, "t")
+    assert(stored(df).outputPartitioning === SinglePartition)
+    val (got, n) = jobCount(Regression.run(df, "id", "v"))
+    assert(n === 1, "the global aggregate needs no shuffle stage")
+    val sums = Regression.sums(df, "id", "v")
+    sums.collect()
+    val exchanges = collect(sums.queryExecution.executedPlan) { case e: Exchange => e }
+    assert(exchanges.isEmpty, sums.queryExecution.executedPlan)
+    val want = Regression.run(plainCsv(p), "id", "v")
+    def close(a: Double, b: Double) = math.abs(a - b) <= 1e-9 * math.max(1.0, math.abs(b))
+    assert(close(got.slope, want.slope) && close(got.intercept, want.intercept), (got, want))
+    assert(got.r2.isDefined === want.r2.isDefined, (got, want))
+    assert(got.r2.zip(want.r2).forall { case (a, b) => close(a, b) }, (got, want))
+  }
+
+  test("a file that scans as several partitions keeps them in its frame") {
+    val dir = tmpDir()
+    // Over `spark.sql.files.openCostInBytes` (4 MB): the scan splits the file.
+    val p = writeCsv(dir, "big", 360000)
+    val plain = plainCsv(p)
+    val parts = plain.rdd.getNumPartitions
+    assert(parts >= 2, s"${Files.size(p)} bytes scan as $parts partition(s)")
+    val df = admitted(new DataLake(spark, dir.toString, Roomy), "big")
+    assert(cached(df))
+    assert(df.rdd.getNumPartitions === parts)
+    assert(stored(df).outputPartitioning !== SinglePartition)
+    assert(df.count() === 360000)
+    assert(df.except(plain).isEmpty)
+  }
+
+  test("the level rule: deserialized at file bytes x6, serialized at x2, uncached above") {
+    import StorageLevel.{MEMORY_AND_DISK, MEMORY_AND_DISK_SER}
+    assert(DataLake.level(100, 600) === Some((MEMORY_AND_DISK, DataLake.DeserializedFactor)))
+    assert(DataLake.level(100, 599) === Some((MEMORY_AND_DISK_SER, DataLake.SizeFactor)))
+    assert(DataLake.level(100, 200) === Some((MEMORY_AND_DISK_SER, DataLake.SizeFactor)))
+    assert(DataLake.level(100, 199) === None)
+    assert(DataLake.level(0, 0) === None)
+    // A lake stores the frame at that level and counts it at its factor.
+    val dir = tmpDir()
+    val p = writeCsv(dir, "t", 300)
+    val deser = estimate(p, DataLake.DeserializedFactor)
+    for ((budget, level, est) <- Seq((deser, MEMORY_AND_DISK, deser),
+        (deser - 1, MEMORY_AND_DISK_SER, estimate(p)))) {
+      val lake = new DataLake(spark, dir.toString, budget)
+      val df = admitted(lake, "t")
+      assert(stored(df).rdd.getStorageLevel === level, budget)
+      assert(lake.footprint === ((est, 0)), budget)
+      assert(body(df) === body(plainCsv(p)))
+    }
   }
 }
